@@ -2,20 +2,18 @@
 (VertexCentricComputation.scala:37-54, runGraphChiComputation
 GraphChiDatabase.scala:2125-2255) as Pregel-style DataFrame loops.
 
-One iteration = messages (edges ⋈ state, groupBy(dst).agg) + state update
-(state ⋈ messages). The reference's BitSetScheduler (Scheduler.scala:31-83,
-only changed vertices rerun) maps to an *active-set* DataFrame that gates the
-message join. Lineage is cut every iteration with localCheckpoint — the
-equivalent of the reference's in-place column updates; without it the plan
-tree grows exponentially (SURVEY.md §7.4).
+Every loop here runs on one superstep core, :func:`_run`, as the reference
+runs every ``update`` plug-in through one engine loop. The edges are
+partitioned by ``src`` and cut once. A round joins them to the state
+(partitioned by ``id``), turns each edge into a message row, unions the rows
+with a base table and folds them in ONE ``groupBy(keys).agg``: one shuffle
+exchange per round, after the map-side partial aggregate.
 
-Scale: each iteration is two shuffles (messages, update-join) over data
-partitioned by vertex id; the same hash partitioning is reused across
-iterations so exchange reuse kicks in. Lineage cuts go through
-``checkpoint.cut_lineage``: set ``spark.sparkContext.setCheckpointDir`` on a
-cluster and every superstep persists to the fault-tolerant FS instead of
-executor-local blocks (which cannot survive executor loss on a 100-iteration
-job at 100 TB).
+Checkpoint cadence is a rule of the core: cut every 5 rounds and after the
+last; cut every round when the loop probes convergence or when its base is
+the state itself (uncut, that union reads the previous round twice and the
+plan doubles per round). Cuts go through ``checkpoint.cut_lineage``, which
+persists to the fault-tolerant FS once ``setCheckpointDir`` is set.
 """
 
 from __future__ import annotations
@@ -26,8 +24,70 @@ from graphchidb_scala_spark.checkpoint import cut_lineage
 from graphchidb_scala_spark.db import GraphDB
 
 
-def _checkpoint(df: DataFrame) -> DataFrame:
-    return cut_lineage(df)
+# ---------------------------------------------------------------- superstep core
+
+def _superstep(edges, state, base, msg, update, keys=("id",), send=None, keep=None):
+    """One round: ``edges ⋈ state`` on ``src = id`` (senders filtered by
+    ``send``) gives a row ``id = dst, *msg`` per edge; the rows union
+    ``base`` by name (missing columns NULL) and fold in one
+    ``groupBy(keys).agg(*update)``, filtered by ``keep``. Lazy."""
+    sent = edges.join(state.withColumnRenamed("id", "src"), "src")
+    sent = sent if send is None else sent.filter(send)
+    rows = sent.select(F.col("dst").alias("id"), *msg).unionByName(base, allowMissingColumns=True)
+    out = rows.groupBy(*keys).agg(*update)
+    return out if keep is None else out.filter(keep)
+
+
+def _run(edges, state, rounds, msg, update, base=None, keys=("id",), send=None,
+         keep=None, probe=None):
+    """Up to ``rounds`` supersteps; ``base=None`` unions the state itself and
+    ``probe(old, new)`` returning True stops the loop. Cadence as in the
+    module docstring."""
+    every = 1 if base is None or probe is not None else 5
+    for i in range(1, rounds + 1):
+        new = _superstep(edges, state, state if base is None else base, msg, update,
+                         keys, send, keep)
+        if i % every == 0 or i == rounds:
+            new = cut_lineage(new)
+        if probe is not None and probe(state, new):
+            return new
+        state = new
+    return state
+
+
+def _edges(df: DataFrame) -> DataFrame:
+    return cut_lineage(df.repartition("src"))
+
+
+def _state(df: DataFrame) -> DataFrame:
+    return cut_lineage(df.repartition("id"))
+
+
+def _on_vertices(db, edges, start, rounds, msg, update, zero_base=True, probe=None):
+    """:func:`_run` from ``start(vertex ids)``, base a zero message ``c`` per
+    vertex (or the state). The zero rows keep vertices without in-edges in
+    the state; they fold in the map-side partial aggregate and add exactly
+    0.0. Edge endpoints outside the vertex table relay values mid-run, but
+    one final semi-join drops them from the output."""
+    vstatic = _state(db.vertices.select("id"))
+    base = vstatic.select("id", F.lit(0.0).alias("c")) if zero_base else None
+    out = _run(edges, start(vstatic), rounds, msg, update, base=base, probe=probe)
+    return out.join(vstatic, "id", "semi")
+
+
+def _state_row_aggs(msg: str, combiner):
+    """``state ⟕ messages`` as aggregates over state rows (``_t = 1``)
+    unioned with message rows (``_t = 0``): the state row's old ``val``, the
+    combined message (NULL when none arrived) and ``_t``, which stays 1 only
+    for ids with a state row (``keep`` drops the rest)."""
+    combined = F.when(F.min("_t") == 0, combiner(F.col(msg)))
+    return F.max_by("val", "_t"), combined, F.max("_t").alias("_t")
+
+
+def _out_weighted(e: DataFrame, norm) -> DataFrame:
+    """Edges with their source's out-weight ``norm`` (count or weight sum) —
+    the reference's degree column (GraphChiDatabase.scala:1777-1833)."""
+    return _edges(e.join(e.groupBy("src").agg(norm.alias("norm")), "src"))
 
 
 # --------------------------------------------------------------------- PageRank
@@ -38,81 +98,36 @@ def pagerank(
     damping: float = 0.85,
     etype: int | None = None,
     tol: float | None = None,
-    checkpoint_every: int | None = 5,
     initial: DataFrame | None = None,
 ) -> DataFrame:
     """PageRank, non-normalized accumulator formulation of the reference
     (Pagerank.scala:34-61): rank = 0.15 + 0.85 * Σ_in rank(u)/outdeg(u),
     rank0 = 1.0 over all vertices. Fixed ``iterations`` (set ``tol`` for
-    convergence-stop instead). Returns DF(id, rank).
+    convergence-stop instead). Returns DF(id, rank) over the vertex table.
 
-    The out-degree table is computed once and re-joined per iteration
-    (map-side combine; one shuffle), exactly the degree column the reference
-    maintains incrementally (GraphChiDatabase.scala:1777-1833).
-
-    Shuffle structure: ONE exchange per iteration — the groupBy(id) message
-    shuffle, which is the floor for a message-passing step. Vertices with no
-    in-edges are kept in the state not by left-joining the static vertex set
-    (that join re-exchanged + sorted V rows every iteration) but by unioning
-    a zero-contribution row per vertex into the groupBy input: the union is
-    exchange-free, the zero rows collapse in the map-side partial aggregate,
-    and ``sum(c) + 0.0`` is bit-exact, so results are unchanged. The
-    edge+degree table is checkpointed once; the per-iteration rank side
-    broadcasts while it fits and degrades to a co-partitioned shuffle join
-    at scale.
-
-    Universe semantics: edge endpoints absent from the vertex table still
-    participate in propagation (their mass accumulates and flows onward —
-    the Pregel universe is edge endpoints ∪ vertices), but the OUTPUT is
-    restricted to the vertex table with one final semi-join, so the result
-    schema/row-set is stable however dirty the edge set is."""
-    e = db._typed(etype).select("src", "dst")
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    edges_deg = _checkpoint(e.join(deg, "src").repartition("src"))
-    vstatic = _checkpoint(db.vertices.select("id").repartition("id"))
-    if initial is not None:
-        # warm start — the reference's continuous-computation story
-        # (SURVEY §2.12: recompute after online appends without starting
-        # over): seed from the previous converged ranks; vertices new to
-        # the graph (appended edges) enter at the cold-start 1.0. The
-        # fixpoint is the same (the iteration is a contraction for
-        # damping < 1); a warm start just arrives in a few iterations.
-        ranks = _checkpoint(
-            vstatic.join(initial.select("id", "rank"), "id", "left").select(
-                "id", F.coalesce(F.col("rank"), F.lit(1.0)).alias("rank")
-            )
+    ``initial`` DF(id, rank) warm-starts from previous ranks (SURVEY §2.12:
+    recompute after online appends without starting over); new vertices
+    enter at 1.0. Same fixpoint, reached in fewer iterations."""
+    def start(vstatic: DataFrame) -> DataFrame:
+        if initial is None:
+            return vstatic.withColumn("rank", F.lit(1.0))
+        return cut_lineage(
+            vstatic.join(initial.select("id", "rank"), "id", "left")
+            .select("id", F.coalesce("rank", F.lit(1.0)).alias("rank"))
         )
-    else:
-        ranks = vstatic.withColumn("rank", F.lit(1.0))
-    zeros = vstatic.select("id", F.lit(0.0).alias("c"))
 
-    for i in range(1, iterations + 1):
-        msgs = (
-            edges_deg.join(ranks.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"), (F.col("rank") / F.col("outdeg")).alias("c"))
-            .unionAll(zeros)
-        )
-        new_ranks = msgs.groupBy("id").agg(
-            (F.lit(1.0 - damping) + F.lit(damping) * F.sum("c")).alias("rank")
-        )
-        if tol is not None:
-            new_ranks = _checkpoint(new_ranks)
-            delta = (
-                new_ranks.join(ranks.select("id", F.col("rank").alias("old_rank")), "id")
-                .agg(F.max(F.abs(F.col("rank") - F.col("old_rank"))))
-                .collect()[0][0]
-            )
-            ranks = new_ranks
-            if delta is not None and delta < tol:
-                break
-        else:
-            ranks = new_ranks
-            # checkpoint_every=None keeps the plan un-collapsed (plan audits)
-            if checkpoint_every and (i % checkpoint_every == 0 or i == iterations):
-                ranks = _checkpoint(ranks)
-    # one final (not per-iteration) semi-join: drop rank rows the message
-    # union grew for edge endpoints outside the vertex table
-    return ranks.join(vstatic, "id", "semi")
+    def converged(old: DataFrame, new: DataFrame) -> bool:
+        both = new.join(old.withColumnRenamed("rank", "old"), "id")
+        delta = both.agg(F.max(F.abs(both["rank"] - both["old"]))).first()[0]
+        return delta is not None and delta < tol
+
+    return _on_vertices(
+        db, _out_weighted(db._typed(etype).select("src", "dst"), F.count(F.lit(1))),
+        start, iterations,
+        msg=[(F.col("rank") / F.col("norm")).alias("c")],
+        update=[(F.lit(1.0 - damping) + F.lit(damping) * F.sum("c")).alias("rank")],
+        probe=None if tol is None else converged,
+    )
 
 
 def personalized_pagerank(
@@ -121,40 +136,111 @@ def personalized_pagerank(
     iterations: int = 10,
     damping: float = 0.85,
     etype: int | None = None,
-    checkpoint_every: int | None = 5,
 ) -> DataFrame:
     """Personalized PageRank: the reset mass returns to ``source`` instead
     of spreading uniformly — rank = (1−d)·[id = source] + d·Σ_in rank/outdeg,
-    rank0 = [id = source]. The relevance-to-a-seed score behind
-    recommend-from-here queries (same role as the reference's FoF
-    recommendation ranking, but walk-based). Returns DF(id, rank); mass not
-    absorbed by the seed's reachable set decays to ~0, so scores order the
-    seed's neighborhood.
-
-    Identical shuffle structure to :func:`pagerank` (ONE exchange per
-    iteration; zero-contribution union instead of a per-iteration V-join;
-    edges+degrees checkpointed once); only the reset term differs — a
-    projection, not a join."""
-    e = db._typed(etype).select("src", "dst")
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    edges_deg = _checkpoint(e.join(deg, "src").repartition("src"))
-    vstatic = _checkpoint(db.vertices.select("id").repartition("id"))
+    rank0 = [id = source]: the walk-based relevance-to-a-seed score behind
+    recommend-from-here queries. Returns DF(id, rank); vertices outside the
+    seed's reachable set decay to ~0."""
     is_src = F.when(F.col("id") == int(source), F.lit(1.0)).otherwise(F.lit(0.0))
-    ranks = vstatic.withColumn("rank", is_src)
-    zeros = vstatic.select("id", F.lit(0.0).alias("c"))
+    return _on_vertices(
+        db, _out_weighted(db._typed(etype).select("src", "dst"), F.count(F.lit(1))),
+        lambda v: v.withColumn("rank", is_src), iterations,
+        msg=[(F.col("rank") / F.col("norm")).alias("c")],
+        update=[(F.lit(1.0 - damping) * is_src + F.lit(damping) * F.sum("c")).alias("rank")],
+    )
 
-    for i in range(1, iterations + 1):
-        msgs = (
-            edges_deg.join(ranks.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"), (F.col("rank") / F.col("outdeg")).alias("c"))
-            .unionAll(zeros)
-        )
-        ranks = msgs.groupBy("id").agg(
-            (F.lit(1.0 - damping) * is_src + F.lit(damping) * F.sum("c")).alias("rank")
-        )
-        if checkpoint_every and (i % checkpoint_every == 0 or i == iterations):
-            ranks = _checkpoint(ranks)
-    return ranks.join(vstatic, "id", "semi")
+
+def personalized_pagerank_multi(
+    db: GraphDB,
+    sources,
+    iterations: int = 3,
+    damping: float = 0.85,
+    etype: int | None = None,
+) -> DataFrame:
+    """Personalized PageRank for MANY seeds at once: DF(seed, id, rank), the
+    PPR analogue of multi-BFS (MultiBFS.scala:51). All seeds advance in ONE
+    edge join per iteration. Sparse state: a (seed, vertex) row exists only
+    if it carries mass, so state is Σ|reachable≤k|, not |seeds|·|V|; the
+    values equal :func:`personalized_pagerank` over the reachable set."""
+    seeds = _state(
+        db.spark.createDataFrame([(int(s),) for s in sources], "seed bigint")
+        .select("seed", F.col("seed").alias("id"))
+    )
+    return _run(
+        _out_weighted(db._typed(etype).select("src", "dst"), F.count(F.lit(1))),
+        seeds.withColumn("rank", F.lit(1.0)), iterations,
+        msg=["seed", (F.lit(damping) * F.col("rank") / F.col("norm")).alias("c")],
+        update=[F.sum("c").alias("rank")],
+        base=seeds.withColumn("c", F.lit(1.0 - damping)),
+        keys=("seed", "id"),
+    )
+
+
+def pagerank_weighted(
+    db: GraphDB,
+    iterations: int = 10,
+    damping: float = 0.85,
+    etype: int | None = None,
+    weight_col: str = "weight",
+) -> DataFrame:
+    """Edge-value-weighted PageRank: rank = 0.15 + 0.85 · Σ_in rank(u) ·
+    w(u→v)/W_out(u) — the GraphChi-idiomatic variant where the propagated
+    mass follows the edge VALUE column, not the uniform 1/outdeg
+    (Pagerank.scala:34-61 reads edge values through the same update).
+    DF(id, rank).
+
+    NULL/zero-weight edges are dropped up front (they carry no mass;
+    keeping them would divide by their W_out share of 0)."""
+    e = db._typed(etype).select(
+        "src", "dst", F.col(weight_col).cast("double").alias("w")
+    ).filter(F.col("w").isNotNull() & (F.col("w") != 0.0))
+    return _on_vertices(
+        db, _out_weighted(e, F.sum("w")),
+        lambda v: v.withColumn("rank", F.lit(1.0)), iterations,
+        msg=[(F.col("rank") * F.col("w") / F.col("norm")).alias("c")],
+        update=[(F.lit(1.0 - damping) + F.lit(damping) * F.sum("c")).alias("rank")],
+    )
+
+
+def katz_centrality(
+    db: GraphDB,
+    iterations: int = 5,
+    alpha: float = 0.1,
+    etype: int | None = None,
+) -> DataFrame:
+    """Katz centrality, truncated series: after T iterations
+    x(v) = Σ_{k=1..T} α^k · (#paths of length k ending at v) — attenuated
+    path-count influence, the centrality that sees beyond direct in-degree
+    without PageRank's degree normalization. Iteration:
+    x ← α · Σ_{u→v} (x(u) + 1), x₀ = 0. DF(id, katz). Any α works for a
+    truncated run; the untruncated series needs α < 1/λ_max."""
+    return _on_vertices(
+        db, _edges(db._typed(etype).select("src", "dst")),
+        lambda v: v.withColumn("katz", F.lit(0.0)), iterations,
+        msg=[(F.col("katz") + F.lit(1.0)).alias("c")],
+        update=[(F.lit(alpha) * F.sum("c")).alias("katz")],
+    )
+
+
+def dag_layers(
+    db: GraphDB,
+    iterations: int,
+    etype: int | None = None,
+) -> DataFrame:
+    """Topological layering of a DAG: layer(v) = length of the longest path
+    ending at v (sources at 0) — the dependency-depth / scheduling-level
+    query (Kahn's algorithm's level sets, computed by fixpoint instead of
+    queue). DF(id, layer). Converges in longest-path-length rounds (3 on
+    the layered c→o→p→s graph); on a graph WITH cycles it returns the
+    capped partial layering, where vertices on or below a cycle keep rising."""
+    return _on_vertices(
+        db, _edges(db._typed(etype).select("src", "dst")),
+        lambda v: v.withColumn("layer", F.lit(0).cast("bigint")), iterations,
+        msg=[(F.col("layer") + F.lit(1)).alias("layer")],
+        update=[F.max("layer").alias("layer")],
+        zero_base=False,
+    )
 
 
 # ---------------------------------------------------------- connected components
@@ -182,7 +268,7 @@ def connected_components_star(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    L = _checkpoint(canon.unionAll(canon.select(F.col("b").alias("a"), F.col("a").alias("b"))))
+    L = cut_lineage(canon.unionAll(canon.select(F.col("b").alias("a"), F.col("a").alias("b"))))
     prev = None
     for _ in range(max_iterations):
         # large-star: attach strictly-larger neighbors of u to m(u) = min(N(u) ∪ {u})
@@ -211,7 +297,7 @@ def connected_components_star(
             .select(F.col("v").alias("a"), F.col("m").alias("b"))
         )
         # re-symmetrize for the next large-star
-        L = _checkpoint(
+        L = cut_lineage(
             small.select("a", "b").unionAll(small.select(F.col("b"), F.col("a")))
         )
         # collision-resistant fingerprint of the edge multiset: count plus a
@@ -240,7 +326,6 @@ def connected_components(
     etype: int | None = None,
     max_iterations: int = 50,
     fixed_iterations: int | None = None,
-    check_every: int = 3,
 ) -> DataFrame:
     """Min-label propagation over the undirected graph — reference
     ConnectedComponentsLabelProp.scala:38-85 (label init = own id; iterate
@@ -250,29 +335,17 @@ def connected_components(
     (the Scheduler's "no new tasks" break, GraphChiDatabase.scala:2247-2252).
     Returns DF(id, cc).
 
-    Scale note: plain label-prop needs O(diameter) rounds, so the fixpoint
-    mode delegates to :func:`connected_components_star` (O(log n) rounds,
-    same converged result). The label-prop loop below is the
-    ``fixed_iterations`` parity form — exactly what the reference computes
-    after k rounds."""
+    Label-prop needs O(diameter) rounds, so the fixpoint mode delegates to
+    :func:`connected_components_star` (O(log n) rounds, same result)."""
     if fixed_iterations is None:
         return connected_components_star(db, etype, max_iterations)
-    und = _checkpoint(db.undirected_edges(etype))
-    labels = _checkpoint(db.vertices.select("id").withColumn("lbl", F.col("id")))
-    for i in range(fixed_iterations):
-        # lbl(v) ← min(lbl(v), min neighbor lbl) folded into ONE aggregation:
-        # own label unions into the message set, so the round is a single
-        # groupBy shuffle — no per-round state join (exchange+sort of V rows)
-        nbr = und.join(
-            labels.withColumnRenamed("id", "b").withColumnRenamed("lbl", "nlbl"), "b"
-        ).select(F.col("a").alias("id"), F.col("nlbl").alias("lbl"))
-        labels = nbr.unionAll(labels).groupBy("id").agg(F.min("lbl").alias("lbl"))
-        if (i + 1) % check_every == 0:
-            labels = _checkpoint(labels)
-    # edge endpoints outside the vertex table act as label conduits during
-    # the rounds (Pregel universe = endpoints ∪ vertices) but are dropped
-    # from the output — one final semi-join, not a per-round state join
-    labels = labels.join(db.vertices.select("id"), "id", "semi")
+    und = db.undirected_edges(etype).select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    labels = _on_vertices(
+        db, _edges(und), lambda v: v.withColumn("lbl", F.col("id")), fixed_iterations,
+        msg=["lbl"],
+        update=[F.min("lbl").alias("lbl")],
+        zero_base=False,
+    )
     return labels.select("id", F.col("lbl").alias("cc"))
 
 
@@ -307,38 +380,30 @@ def run_vertex_program(
 
     - ``initial``: DF(id, val) starting state (val may be NULL = unset)
     - ``msg_fn(src_val) -> Column``: message each out-edge carries
-    - ``agg_fn``: message combiner (F.min / F.max / F.sum / ...)
-    - ``combine_fn(old_val, msg) -> Column``: vertex update rule
+    - ``agg_fn``: message combiner (F.min / F.max / F.sum / ...; it must
+      skip NULLs, as every Spark aggregate but ``first``/``last`` does)
+    - ``combine_fn(old_val, msg) -> Column``: vertex update rule (``msg`` is
+      NULL for a vertex that received no message)
     - ``initial_active``: DF(id) of initially-scheduled vertices (default all)
 
-    The active-set semi-join gates message generation exactly like the
-    bitset gate in the reference's interval loop
-    (GraphChiDatabase.scala:2131-2252). Each superstep is two shuffles
-    (messages, update); state is checkpointed every round; one count job on
-    the checkpointed state drives termination. Returns DF(id, val)."""
-    e = _checkpoint(db._typed(etype).select("src", "dst"))
-    state = _checkpoint(initial.select("id", "val"))
-    active = (initial_active if initial_active is not None else state).select("id")
-    for _ in range(max_iterations):
-        src_state = state.select(F.col("id").alias("src"), F.col("val").alias("src_val"))
-        msgs = (
-            e.join(active.select(F.col("id").alias("src")), "src", "semi")
-            .join(src_state, "src")
-            .select(F.col("dst").alias("id"), msg_fn(F.col("src_val")).alias("m"))
-            .groupBy("id")
-            .agg(agg_fn(F.col("m")).alias("m"))
-        )
-        new_state = _checkpoint(
-            state.join(msgs, "id", "left")
-            .select("id", "val", combine_fn(F.col("val"), F.col("m")).alias("new_val"))
-        )
-        # one changed-set over the checkpointed state drives both the next
-        # frontier and the termination probe (single extra job per superstep)
-        active = new_state.filter(~F.col("new_val").eqNullSafe(F.col("val"))).select("id")
-        state = new_state.select("id", F.col("new_val").alias("val"))
-        if active.limit(1).count() == 0:
-            break
-    return state
+    An active-flag state column gates the senders like the reference's
+    bitset (GraphChiDatabase.scala:2131-2252); recipients absent from
+    ``initial`` are dropped. Returns DF(id, val)."""
+    active = (initial if initial_active is None else initial_active).select("id").distinct()
+    state = initial.select("id", "val").join(active.withColumn("act", F.lit(True)), "id", "left")
+    old, m, tag = _state_row_aggs("m", agg_fn)
+    new = combine_fn(old, m)
+    state = _run(
+        _edges(db._typed(etype).select("src", "dst")),
+        _state(state.fillna(False, ["act"]).withColumn("_t", F.lit(1))),
+        max_iterations,
+        msg=[msg_fn(F.col("val")).alias("m"), F.lit(0).alias("_t")],
+        update=[new.alias("val"), (~new.eqNullSafe(old)).alias("act"), tag],
+        send=F.col("act"),
+        keep=F.col("_t") == 1,
+        probe=lambda _, s: s.filter("act").limit(1).count() == 0,
+    )
+    return state.select("id", "val")
 
 
 def gather_apply(
@@ -352,36 +417,28 @@ def gather_apply(
 ) -> DataFrame:
     """Gather-Sum-Apply — the reference's second compute abstraction
     (compute/GatherApplyComputation.scala: ``gather`` over in-edges, a
-    commutative ``sum``, ``apply`` at the vertex), beside
-    :func:`run_vertex_program`'s update/scheduler surface.
+    commutative ``sum``, ``apply`` at the vertex).
 
     - ``initial``: DF(id, val)
     - ``gather_fn(src_val) -> Column``: per-in-edge gathered value; the
       expression may also reference edge property columns (e.g.
       ``F.col("weight")``) — they are in scope at the gather join.
-    - ``sum_fn``: the gather combiner (F.sum / F.min / ...)
+    - ``sum_fn``: the gather combiner (F.sum / F.min / ...; it must skip
+      NULLs, as every Spark aggregate but ``first``/``last`` does)
     - ``apply_fn(old_val, acc) -> Column``: vertex update (``acc`` is NULL
       for vertices that gathered nothing).
 
-    Each iteration is the canonical two-shuffle GAS step (gather groupBy +
-    apply join) over pre-partitioned, checkpointed edges — same scale shape
-    as :func:`pagerank` (which is this pattern specialized). Returns
-    DF(id, val)."""
-    e = _checkpoint(db._typed(etype).repartition("src"))
-    state = _checkpoint(initial.select("id", "val"))
-    for i in range(iterations):
-        gathered = (
-            e.join(state.select(F.col("id").alias("src"), F.col("val").alias("src_val")), "src")
-            .select(F.col("dst").alias("id"), gather_fn(F.col("src_val")).alias("g"))
-            .groupBy("id")
-            .agg(sum_fn(F.col("g")).alias("acc"))
-        )
-        state = state.join(gathered, "id", "left").select(
-            "id", apply_fn(F.col("val"), F.col("acc")).alias("val")
-        )
-        if (i + 1) % 3 == 0 or (i + 1) == iterations:
-            state = _checkpoint(state)
-    return state
+    Vertices absent from ``initial`` never gain rows. Returns DF(id, val)."""
+    old, acc, tag = _state_row_aggs("g", sum_fn)
+    state = _run(
+        _edges(db._typed(etype)),
+        _state(initial.select("id", "val").withColumn("_t", F.lit(1))),
+        iterations,
+        msg=[gather_fn(F.col("val")).alias("g"), F.lit(0).alias("_t")],
+        update=[apply_fn(old, acc).alias("val"), tag],
+        keep=F.col("_t") == 1,
+    )
+    return state.select("id", "val")
 
 
 def bfs_via_vertex_program(
@@ -421,198 +478,19 @@ def propagate_labels(
     """Generic directed label propagation (building block mirroring the
     reference's update-function plug-in point,
     VertexCentricComputation.scala:37-54): state DF(id, lbl) evolves by
-    lbl(v) ← agg(lbl(v), agg_{u→v} lbl(u)).
+    lbl(v) ← agg(lbl(v), agg_{u→v} lbl(u)); the own label is one more message.
 
-    For all three aggs the vertex's own label is just one more message
-    (min/max absorb it; sum adds it), so each round is ONE groupBy shuffle
-    over messages ∪ state — no per-round state join.
-
-    Universe semantics: the state GROWS to message recipients — a vertex
-    absent from ``initial`` that receives a label holds it and forwards it
-    in later rounds (Pregel-style: the graph defines the universe). That is
-    usually what seeded propagation wants (labels reach the rest of the
-    graph). The OUTPUT is always restricted to the graph's vertex universe
-    (one final semi-join against ``db.vertices`` ids, the same pattern as
-    pagerank's universe restore above): edge endpoints outside an explicit
-    vertices table act as conduits mid-run but never gain output rows.
-    ``restrict_to_initial=True`` additionally semi-joins the output back to
-    the initial id set."""
+    The state GROWS to message recipients: a vertex absent from ``initial``
+    that receives a label holds and forwards it (the graph defines the
+    universe). The OUTPUT keeps only ``db.vertices`` ids, so endpoints
+    outside an explicit vertices table relay labels but gain no rows;
+    ``restrict_to_initial=True`` also keeps only the initial ids."""
     agg_fn = {"min": F.min, "max": F.max, "sum": F.sum}[agg]
-    e = _checkpoint(db._typed(etype).select("src", "dst"))
-    init = _checkpoint(initial.select("id", "lbl"))
-    labels = init
-    for i in range(iterations):
-        msgs = e.join(labels.withColumnRenamed("id", "src"), "src").select(
-            F.col("dst").alias("id"), "lbl"
-        )
-        labels = msgs.unionAll(labels).groupBy("id").agg(agg_fn("lbl").alias("lbl"))
-        if (i + 1) % 3 == 0:
-            labels = _checkpoint(labels)
-    # final (not per-iteration) universe restore, as in pagerank: with no
-    # explicit vertices table db.vertices derives from edge endpoints and
-    # this is a no-op; with one, phantom endpoints are dropped
-    labels = labels.join(db.vertices.select("id"), "id", "semi")
-    if restrict_to_initial:
-        labels = labels.join(init.select("id"), "id", "semi")
-    return labels
-
-
-def pagerank_weighted(
-    db: GraphDB,
-    iterations: int = 10,
-    damping: float = 0.85,
-    etype: int | None = None,
-    weight_col: str = "weight",
-    checkpoint_every: int | None = 5,
-) -> DataFrame:
-    """Edge-value-weighted PageRank: rank = 0.15 + 0.85 · Σ_in rank(u) ·
-    w(u→v)/W_out(u) — the GraphChi-idiomatic variant where the propagated
-    mass follows the edge VALUE column, not the uniform 1/outdeg
-    (Pagerank.scala:34-61 reads edge values through the same update; the
-    reference's whole point is computation over property edges,
-    GraphChiDatabase.scala columns). DF(id, rank).
-
-    Identical shuffle structure to :func:`pagerank` — the weight-sum table
-    replaces the out-degree table, computed once (one map-side-combined
-    agg) and checkpointed with the edges; ONE exchange per iteration via
-    the zero-union formulation; final semi-join restricts the universe to
-    the vertex table. NULL/zero-weight edges are dropped up front (they
-    carry no mass; keeping them would divide by their W_out share of 0)."""
-    e = db._typed(etype).select(
-        "src", "dst", F.col(weight_col).cast("double").alias("w")
-    ).filter(F.col("w").isNotNull() & (F.col("w") != 0.0))
-    wout = e.groupBy("src").agg(F.sum("w").alias("wout"))
-    edges_w = _checkpoint(e.join(wout, "src").repartition("src"))
-    vstatic = _checkpoint(db.vertices.select("id").repartition("id"))
-    ranks = vstatic.withColumn("rank", F.lit(1.0))
-    zeros = vstatic.select("id", F.lit(0.0).alias("c"))
-    for i in range(1, iterations + 1):
-        msgs = (
-            edges_w.join(ranks.withColumnRenamed("id", "src"), "src")
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("rank") * F.col("w") / F.col("wout")).alias("c"),
-            )
-            .unionAll(zeros)
-        )
-        ranks = msgs.groupBy("id").agg(
-            (F.lit(1.0 - damping) + F.lit(damping) * F.sum("c")).alias("rank")
-        )
-        if checkpoint_every and (i % checkpoint_every == 0 or i == iterations):
-            ranks = _checkpoint(ranks)
-    return ranks.join(vstatic, "id", "semi")
-
-
-def katz_centrality(
-    db: GraphDB,
-    iterations: int = 5,
-    alpha: float = 0.1,
-    etype: int | None = None,
-    checkpoint_every: int | None = 5,
-) -> DataFrame:
-    """Katz centrality, truncated series: after T iterations
-    x(v) = Σ_{k=1..T} α^k · (#paths of length k ending at v) — attenuated
-    path-count influence, the centrality that sees beyond direct in-degree
-    without PageRank's degree normalization. Iteration:
-    x ← α · Σ_{u→v} (x(u) + 1), x₀ = 0. DF(id, katz).
-
-    Same one-exchange-per-iteration zero-union shape as :func:`pagerank`;
-    α must be below 1/λ_max for the untruncated series to converge — with
-    a truncated run any α works, the bound is only a quality note."""
-    e = _checkpoint(db._typed(etype).select("src", "dst").repartition("src"))
-    vstatic = _checkpoint(db.vertices.select("id").repartition("id"))
-    x = vstatic.withColumn("katz", F.lit(0.0))
-    zeros = vstatic.select("id", F.lit(0.0).alias("c"))
-    for i in range(1, iterations + 1):
-        msgs = (
-            e.join(x.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"), (F.col("katz") + F.lit(1.0)).alias("c"))
-            .unionAll(zeros)
-        )
-        x = msgs.groupBy("id").agg(
-            (F.lit(alpha) * F.sum("c")).alias("katz")
-        )
-        if checkpoint_every and (i % checkpoint_every == 0 or i == iterations):
-            x = _checkpoint(x)
-    return x.join(vstatic, "id", "semi")
-
-
-def dag_layers(
-    db: GraphDB,
-    iterations: int,
-    etype: int | None = None,
-    checkpoint: bool = True,
-) -> DataFrame:
-    """Topological layering of a DAG: layer(v) = length of the longest path
-    ending at v (sources at 0) — the dependency-depth / scheduling-level
-    query (Kahn's algorithm's level sets, computed by fixpoint instead of
-    queue). DF(id, layer). Converges in longest-path-length rounds; run
-    with ``iterations`` ≥ that bound (on the layered c→o→p→s graph, 3).
-    On a graph WITH cycles the bounded run returns the capped partial
-    layering (a diagnostic: any vertex still rising at the bound sits on
-    or downstream of a cycle).
-
-    Iteration shape: the pagerank zero-union pattern with max instead of
-    sum — one map-side-combined exchange per round, no per-round state
-    join."""
-    e = _checkpoint(db._typed(etype).select("src", "dst").repartition("src"))
-    vstatic = _checkpoint(db.vertices.select("id").repartition("id"))
-    layers = vstatic.withColumn("layer", F.lit(0).cast("bigint"))
-    for i in range(1, iterations + 1):
-        msgs = (
-            e.join(layers.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"), (F.col("layer") + F.lit(1)).alias("layer"))
-            .unionAll(layers)
-        )
-        layers = msgs.groupBy("id").agg(F.max("layer").alias("layer"))
-        # checkpoint=False keeps the plan un-collapsed (plan audits)
-        if checkpoint and (i % 5 == 0 or i == iterations):
-            layers = _checkpoint(layers)
-    return layers.join(vstatic, "id", "semi")
-
-
-def personalized_pagerank_multi(
-    db: GraphDB,
-    sources,
-    iterations: int = 3,
-    damping: float = 0.85,
-    etype: int | None = None,
-    checkpoint_every: int | None = 5,
-) -> DataFrame:
-    """Personalized PageRank for MANY seeds at once: DF(seed, id, rank) —
-    the batch-recommendation shape (score every user's neighborhood in one
-    job instead of a per-user loop), the PPR analogue of multi-BFS
-    (MultiBFS.scala:51). All seeds advance in ONE edge join per iteration;
-    rows are (seed, vertex) pairs, parallel in both.
-
-    Sparse state: a vertex holds a row for a seed only if it carries mass
-    (reset row ∪ message recipients) — vertices outside the seed's
-    reachable set never materialize, so state is Σ|reachable≤k|, not
-    |seeds|·|V|. rank = (1−d)·[v=seed] + d·Σ_in rank/outdeg, rank₀ =
-    [v=seed] — identical per-seed values to :func:`personalized_pagerank`
-    over the reachable set."""
-    e = db._typed(etype).select("src", "dst")
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    edges_deg = _checkpoint(e.join(deg, "src").repartition("src"))
-    spark = db.spark
-    seed_df = _checkpoint(
-        spark.createDataFrame([(int(s),) for s in sources], "seed bigint")
+    init = _state(initial.select("id", "lbl"))
+    labels = _on_vertices(
+        db, _edges(db._typed(etype).select("src", "dst")), lambda _: init, iterations,
+        msg=["lbl"],
+        update=[agg_fn("lbl").alias("lbl")],
+        zero_base=False,
     )
-    reset = seed_df.select(
-        "seed", F.col("seed").alias("id"), F.lit(1.0 - damping).alias("c")
-    )
-    ranks = seed_df.select("seed", F.col("seed").alias("id"), F.lit(1.0).alias("rank"))
-    for i in range(1, iterations + 1):
-        msgs = (
-            edges_deg.join(ranks.withColumnRenamed("id", "src"), "src")
-            .select(
-                "seed",
-                F.col("dst").alias("id"),
-                (F.lit(damping) * F.col("rank") / F.col("outdeg")).alias("c"),
-            )
-            .unionAll(reset)
-        )
-        ranks = msgs.groupBy("seed", "id").agg(F.sum("c").alias("rank"))
-        if checkpoint_every and (i % checkpoint_every == 0 or i == iterations):
-            ranks = _checkpoint(ranks)
-    return ranks
+    return labels.join(init, "id", "semi") if restrict_to_initial else labels

@@ -186,3 +186,48 @@ def test_propagate_labels_no_vertex_table_keeps_growing_universe(spark):
     got = {r["id"]: r["lbl"] for r in
            pregel.propagate_labels(g, init, iterations=1, agg="min").collect()}
     assert got == {1: 5, 2: 5}
+
+
+def test_vertex_program_keeps_value_without_messages(spark):
+    """A vertex that receives no message keeps its old value: combine_fn
+    sees ``msg = NULL`` for it, as the old state ⟕ messages join gave."""
+    from graphchidb_scala_spark.db import GraphDB
+
+    g = GraphDB(spark.createDataFrame([(0, 1, 2)], "etype int, src bigint, dst bigint"))
+    init = spark.createDataFrame([(1, 10), (2, 0), (3, 5)], "id bigint, val bigint")
+    out = pregel.run_vertex_program(
+        g, init, msg_fn=lambda sv: sv, agg_fn=F.sum,
+        combine_fn=lambda old, m: F.coalesce(m, old),
+    )
+    assert {r["id"]: r["val"] for r in out.collect()} == {1: 10, 2: 10, 3: 5}
+
+
+def test_vertex_program_drops_recipients_absent_from_initial(spark):
+    """Messages to ids without a row in ``initial`` create no state row."""
+    from graphchidb_scala_spark.db import GraphDB
+
+    g = GraphDB(spark.createDataFrame(
+        [(0, 1, 2), (0, 1, 4), (0, 4, 2)], "etype int, src bigint, dst bigint"
+    ))
+    init = spark.createDataFrame([(1, 0), (2, None)], "id bigint, val bigint")
+    out = pregel.run_vertex_program(
+        g, init, msg_fn=lambda sv: sv + F.lit(1), agg_fn=F.min,
+        combine_fn=lambda old, m: F.least(old, m),
+    )
+    assert {r["id"]: r["val"] for r in out.collect()} == {1: 0, 2: 1}
+
+
+def test_gather_apply_count_passes_null_for_empty_gather(spark):
+    """``sum_fn=F.count`` gives ``acc = NULL``, not 0, to apply_fn for a
+    vertex that gathered nothing (no in-edges)."""
+    from graphchidb_scala_spark.db import GraphDB
+
+    g = GraphDB(spark.createDataFrame(
+        [(0, 1, 2), (0, 1, 3), (0, 2, 3)], "etype int, src bigint, dst bigint"
+    ))
+    out = pregel.gather_apply(
+        g, g.vertices.select("id", F.lit(0).cast("bigint").alias("val")),
+        gather_fn=lambda sv: sv, sum_fn=F.count,
+        apply_fn=lambda old, acc: F.when(acc.isNull(), F.lit(-1)).otherwise(acc),
+    )
+    assert {r["id"]: r["val"] for r in out.collect()} == {1: -1, 2: 1, 3: 2}

@@ -244,3 +244,77 @@ def test_hard_negatives_pinned_join_no_cartesian(spark):
     assert "REPARTITION_BY_NUM" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+@pytest.fixture
+def static_plans(spark):
+    """AQE and auto-broadcast off for one test: the executed plan is then
+    the static one, and every shuffle shows as an ``Exchange``."""
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set(keys[0], "false")
+    spark.conf.set(keys[1], "-1")
+    yield
+    for k, v in saved.items():
+        spark.conf.set(k, v)
+
+
+def _pregel_loops(spark):
+    """Every loop of operators/pregel.py that runs on the superstep core,
+    each set up for three rounds on a 31-vertex weighted path."""
+    from graphchidb_scala_spark.operators import pregel
+
+    rows = [(0, i, i + 1, 1.0 + i % 3) for i in range(30)]
+    g = GraphDB(spark.createDataFrame(rows, "etype int, src bigint, dst bigint, weight double"))
+    warm = spark.createDataFrame([(0, 0.5)], "id bigint, rank double")
+    seeds = spark.createDataFrame([(0, 0), (10, 10)], "id bigint, lbl bigint")
+    val = g.vertices.select("id", F.lit(1.0).alias("val"))
+    bfs = g.vertices.select("id", F.when(F.col("id") == 0, F.lit(0)).cast("bigint").alias("val"))
+    return {
+        "pagerank": lambda: pregel.pagerank(g, iterations=3),
+        "pagerank_tol": lambda: pregel.pagerank(g, iterations=3, tol=1e-12),
+        "pagerank_initial": lambda: pregel.pagerank(g, iterations=3, initial=warm),
+        "personalized_pagerank": lambda: pregel.personalized_pagerank(g, 0, iterations=3),
+        "personalized_pagerank_multi": lambda: pregel.personalized_pagerank_multi(
+            g, [0, 5], iterations=3
+        ),
+        "pagerank_weighted": lambda: pregel.pagerank_weighted(g, iterations=3),
+        "katz_centrality": lambda: pregel.katz_centrality(g, iterations=3),
+        "dag_layers": lambda: pregel.dag_layers(g, iterations=3),
+        "propagate_labels": lambda: pregel.propagate_labels(g, seeds, iterations=3),
+        "connected_components": lambda: pregel.connected_components(g, fixed_iterations=3),
+        "gather_apply": lambda: pregel.gather_apply(
+            g, val, gather_fn=lambda sv: sv * F.col("weight"), sum_fn=F.sum,
+            apply_fn=lambda old, acc: F.coalesce(acc, old), iterations=3,
+        ),
+        "run_vertex_program": lambda: pregel.run_vertex_program(
+            g, bfs, msg_fn=lambda sv: sv + F.lit(1), agg_fn=F.min,
+            combine_fn=lambda old, m: F.least(old, m), max_iterations=3,
+        ),
+    }
+
+
+def test_pregel_superstep_is_one_exchange(spark, static_plans, monkeypatch):
+    """Every pregel loop runs on the one superstep core, and a round of it is
+    one ``Exchange hashpartitioning`` (the message groupBy): edges and state
+    arrive partitioned by the join key, so the join shuffles nothing. Round
+    1 runs on cut inputs and must show exactly that one exchange. Over three
+    rounds the plan must grow by the same count per round: a round that
+    read the previous state twice (the uncut state-union loops did) doubles
+    the plan instead — dag_layers showed 1, 3, 7 exchanges."""
+    from graphchidb_scala_spark.operators import pregel
+
+    real, rounds = pregel._superstep, []
+
+    def spy(*args, **kwargs):
+        rounds.append(real(*args, **kwargs))
+        return rounds[-1]
+
+    monkeypatch.setattr(pregel, "_superstep", spy)
+    for name, run in _pregel_loops(spark).items():
+        rounds.clear()
+        run().collect()
+        ex = [plans.explain_str(r, "simple").count("Exchange hashpartitioning") for r in rounds]
+        assert len(ex) == 3, (name, ex)
+        assert ex[0] == 1, (name, ex)
+        assert ex[2] - ex[1] == ex[1] - ex[0], (name, ex)

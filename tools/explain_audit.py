@@ -21,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from graphchidb_scala_spark.operators import graph_queries as gq
+from graphchidb_scala_spark.operators import graph_queries as gq, pregel
 from graphchidb_scala_spark.session import get_spark
 from graphchidb_scala_spark.sources.tpch import load_tables, tpch_graph
 from graphchidb_scala_spark.functions import dedup, pipeline, similarity, text
@@ -226,13 +226,11 @@ CHECKS = {
         lambda g, docs, emb: text.repeated_substring_spans(docs, k=8),
         ["!CartesianProduct", "!BroadcastNestedLoopJoin", "partial_count"],
     ),
-    # one PageRank iteration = the message groupBy shuffle only: the rank
+    # one PageRank superstep = the message groupBy shuffle only: the rank
     # side broadcasts at this scale and the zero-contribution union replaced
     # the old per-iteration vertex-set SortMergeJoin
     "pagerank_iteration_single_shuffle": (
-        lambda g, docs, emb: __import__(
-            "graphchidb_scala_spark.operators.pregel", fromlist=["pregel"]
-        ).pagerank(g, iterations=1, checkpoint_every=None),
+        lambda g, docs, emb: _first_superstep(lambda: pregel.pagerank(g, iterations=1)),
         ["!SortMergeJoin", "partial_sum"],
     ),
     # per-batch existing-key probe: the batch's src id set must reach the
@@ -561,9 +559,7 @@ CHECKS = {
     # DAG layering round: the pagerank zero-union shape with max — one
     # map-side-combined exchange per round
     "dag_layers_partial_max": (
-        lambda g, docs, emb: __import__(
-            "graphchidb_scala_spark.operators.pregel", fromlist=["pregel"]
-        ).dag_layers(g, iterations=1, checkpoint=False),
+        lambda g, docs, emb: _first_superstep(lambda: pregel.dag_layers(g, iterations=1)),
         ["partial_max", "!BroadcastNestedLoop", "!CartesianProduct"],
     ),
     # cross-corpus near-dup: band join is equi (A-banded x B-banded, never
@@ -900,6 +896,23 @@ def _node2vec_hop(g):
         [(1, 2, 1), (2, 3, 2)], "walk_id bigint, id bigint, prev bigint"
     )
     return gq.node2vec_step(e, und, cur, step=2, p=2.0, q=0.5)
+
+
+def _first_superstep(run):
+    """The uncut first round a pregel loop builds through its superstep
+    core: ``run()`` runs the loop while the core records its rounds."""
+    real, rounds = pregel._superstep, []
+
+    def spy(*args, **kwargs):
+        rounds.append(real(*args, **kwargs))
+        return rounds[-1]
+
+    pregel._superstep = spy
+    try:
+        run()
+    finally:
+        pregel._superstep = real
+    return rounds[0]
 
 
 def _edgestore_view(g):
