@@ -391,13 +391,13 @@ def main() -> None:
                     flush=True,
                 )
                 tail_per_rep[rep][name] = None
-                continue
-            tail_per_rep[rep][name] = round(time.time() - t, 3)
-            print(
-                f"  tail {name} rep{rep}: {tail_per_rep[rep][name]:.1f}s",
-                file=sys.stderr,
-                flush=True,
-            )
+            else:
+                tail_per_rep[rep][name] = round(time.time() - t, 3)
+                print(
+                    f"  tail {name} rep{rep}: {tail_per_rep[rep][name]:.1f}s",
+                    file=sys.stderr,
+                    flush=True,
+                )
             if time.time() - bench_t0 > 2 * bench_budget and not budget_hit:
                 budget_hit = True
                 print(

@@ -16,6 +16,14 @@ executor probes its local edge partitions with the frontier in memory), and a
 shuffle join of a huge frontier IS the bottom-up sweep (every edge is
 scanned once and tested against the frontier).
 
+Every multi-hop traversal runs on ONE level-synchronous hop loop,
+:func:`hop_levels` — the reference's ``traverseOutUntil``, ``shortestPath``
+and MultiBFS all sit on one frontier step, and so do
+:meth:`Frontier.traverse_out_until`, ``graph_queries.bfs_levels``,
+``multi_bfs_levels`` and ``shortest_path_length``. Dense fixpoints (weighted
+SSSP, SCC colouring) are not frontier traversals; they run on
+``pregel._run``.
+
 At 100 TB: traversal hops are self-joins of the edge table; co-partitioning
 (bucketed by src) keeps hop joins shuffle-free on one side; the frontier
 re-uses the same hash partitioning across hops so only the *new* side moves.
@@ -24,6 +32,7 @@ re-uses the same hash partitioning across hops so only the *new* side moves.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -33,6 +42,46 @@ from graphchidb_scala_spark.db import GraphDB
 
 #: Same spirit as the reference's sparse→dense switch (FrontierQueries.scala:59).
 BROADCAST_THRESHOLD = 100_000
+
+
+def hop_levels(
+    edges: DataFrame,
+    level0: DataFrame,
+    size: int,
+    max_hops: int,
+    keys: Sequence[str] = ("id",),
+    hit: Column | DataFrame | None = None,
+) -> tuple[list[DataFrame], bool]:
+    """The hop loop of the BFS family. ``level0`` is a cut, distinct
+    DF(*keys) of ``size`` rows; ``keys`` ends in ``id`` and any key before
+    it (a BFS's ``seed``) rides along. Each hop broadcast-hints the frontier
+    below :data:`BROADCAST_THRESHOLD`, joins it to ``edges`` on
+    ``src = id``, keeps the distinct ``(keys…, id = dst)`` rows not yet
+    visited, cuts them once and runs one stats job for the level's size and
+    ``hit``: a predicate on the level's rows, or a DF(id) the level meets.
+
+    Returns ``[level0, level1, …]`` up to the last non-empty level and
+    whether that level hit; the loop stops on an empty level, a hit or
+    ``max_hops``."""
+    keys, levels = list(keys), [level0]
+    for _ in range(max_hops):
+        fr = F.broadcast(levels[-1]) if size < BROADCAST_THRESHOLD else levels[-1]
+        nxt = cut_lineage(
+            edges.join(fr.withColumnRenamed("id", "src"), "src")
+            .select(*keys[:-1], F.col("dst").alias("id"))
+            .distinct()
+            .join(reduce(DataFrame.unionAll, levels), keys, "left_anti")
+        )
+        probe, flag = nxt, hit
+        if isinstance(hit, DataFrame):
+            probe, flag = nxt.join(hit.withColumn("_hit", F.lit(True)), "id", "left"), F.col("_hit")
+        size, *met = probe.agg(F.count(F.lit(1)), *([] if flag is None else [F.max(flag)])).first()
+        if size == 0:
+            break
+        levels.append(nxt)
+        if any(met):
+            return levels, True
+    return levels, False
 
 
 class Frontier:
@@ -127,21 +176,16 @@ class Frontier:
         max_hops: int = 5,
     ) -> int | None:
         """Early-terminating traversal — reference ``traverseOutUntil``
-        (FrontierQueries.scala:191-244). Spark can't abort a stage mid-scan
-        (FinishQueryException semantics); parity is the per-hop found-check."""
+        (FrontierQueries.scala:191-244): the hop at which ``target`` is first
+        reached, or None. Spark can't abort a stage mid-scan
+        (FinishQueryException semantics); parity is the per-hop found-check
+        of :func:`hop_levels`. A target already in this frontier is never
+        newly reached, so it gives None."""
         fr = self.materialize()
-        seen = fr.ids
-        for hop in range(1, max_hops + 1):
-            fr = fr.traverse_out(etype)
-            nxt = cut_lineage(fr.ids.join(seen, "id", "left_anti"))
-            n = nxt.count()
-            if n == 0:
-                return None
-            if nxt.filter(F.col("id") == int(target)).limit(1).count() > 0:
-                return hop
-            seen = cut_lineage(seen.unionAll(nxt))
-            fr = Frontier(self.db, nxt, size=n, assume_distinct=True)
-        return None
+        levels, hit = hop_levels(
+            self.db._typed(etype), fr.ids, fr.size, max_hops, hit=F.col("id") == int(target)
+        )
+        return len(levels) - 1 if hit else None
 
     # -------------------------------------------------------------- set algebra
 

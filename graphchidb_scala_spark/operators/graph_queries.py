@@ -3,18 +3,27 @@ SubgraphFrequencies.scala, expressed as DataFrame plans.
 
 All functions return DataFrames (lazy). Seeds/limits are explicit for
 determinism (FIXTURES.md). Scale notes are per-function.
+
+Iteration runs on two shared loops. The BFS family — :func:`bfs_levels`,
+:func:`multi_bfs_levels` and :func:`shortest_path_length` — expands through
+the frontier hop loop, ``frontier.hop_levels``. The dense fixpoints —
+:func:`weighted_sssp`, :func:`weighted_sssp_parents` and the colour and
+backward-mark fixpoints of :func:`strongly_connected_components` — run on
+pregel's superstep core, ``pregel._run``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
 from graphchidb_scala_spark.checkpoint import cut_lineage
 
 from graphchidb_scala_spark.db import GraphDB
-from graphchidb_scala_spark.operators.frontier import Frontier
+from graphchidb_scala_spark.operators import pregel
+from graphchidb_scala_spark.operators.frontier import Frontier, hop_levels
 
 
 def friends_of_friends(db: GraphDB, vertex: int, etype: int | None = None) -> DataFrame:
@@ -114,31 +123,11 @@ def shortest_path_length(
     if tin.filter(F.col("id") == source).limit(1).count() > 0:
         return _dist(1)
     seed = cut_lineage(spark.createDataFrame([(source,)], "id bigint"))
-    visited, frontier, fsize = seed, seed, 1
-    for depth in range(1, max_depth):
-        fr = F.broadcast(frontier) if fsize < 100_000 else frontier
-        nxt = (
-            cut_lineage(e.join(fr.withColumnRenamed("id", "src"), "src", "inner")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(visited, "id", "left_anti"))
-        )
-        # one job: frontier size + meet-check against the in-neighbor set
-        stats = (
-            nxt.join(tin.withColumn("hit", F.lit(1)), "id", "left")
-            .agg(F.count(F.lit(1)).alias("n"), F.max("hit").alias("hit"))
-            .collect()[0]
-        )
-        if stats["hit"] is not None:
-            # every ≤max_depth path ends with an edge from this set, so the
-            # first meet is the minimum distance
-            return _dist(depth + 1)
-        fsize = stats["n"]
-        if fsize == 0:
-            return _dist(None)
-        visited = visited.unionAll(nxt)
-        frontier = nxt
-    return _dist(None)
+    # a level meeting the in-neighbor set proves dist = its depth + 1: every
+    # ≤max_depth path ends with an edge from that set, so the first meet is
+    # the minimum distance
+    levels, met = hop_levels(e, seed, 1, max_depth - 1, hit=tin)
+    return _dist(len(levels) if met else None)
 
 
 def bfs_levels(
@@ -149,48 +138,18 @@ def bfs_levels(
     stop_at: int | None = None,
 ) -> DataFrame:
     """BFS level per reachable vertex (≤ max_depth) — reference
-    ``singleSourceShortestPath`` tree (Queries.scala:198-213). Iterative
-    frontier expansion; each hop localCheckpoints (cuts lineage, the Spark
-    analogue of the reference's in-place parent array). ``stop_at`` stops
-    expanding once that vertex is reached (the ``FinishQueryException``
-    early-exit, emulated per-hop per SURVEY §7.4); the partial tree still
-    holds every vertex at levels ≤ level(stop_at). Returns DF(id, level)."""
-    spark = db.spark
-    seed = spark.createDataFrame([(int(source), 0)], "id bigint, level bigint")
-    seed = cut_lineage(seed)
+    ``singleSourceShortestPath`` tree (Queries.scala:198-213), one
+    ``hop_levels`` loop; each hop cuts lineage (the Spark analogue of the
+    reference's in-place parent array). ``stop_at`` stops expanding once
+    that vertex is reached (the ``FinishQueryException`` early-exit,
+    emulated per-hop per SURVEY §7.4); the partial tree still holds every
+    vertex at levels ≤ level(stop_at). Returns DF(id, level)."""
+    seed = cut_lineage(db.spark.createDataFrame([(int(source),)], "id bigint"))
     if stop_at is not None and int(stop_at) == int(source):
-        return seed
-    # visited stays a lazy union of already-checkpointed per-hop deltas —
-    # re-reading it costs nothing, and skipping its re-checkpoint saves one
-    # eager job per hop
-    visited = seed
-    frontier = seed.select("id")
-    fsize = 1
-    for depth in range(1, max_depth + 1):
-        e = db._typed(etype)
-        fr = F.broadcast(frontier) if fsize < 100_000 else frontier
-        nxt = (
-            cut_lineage(e.join(fr.withColumnRenamed("id", "src"), "src", "inner")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(visited.select("id"), "id", "left_anti")
-            .withColumn("level", F.lit(depth).cast("bigint")))
-        )
-        # one job: frontier size + optional target-reached probe
-        stats = nxt.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(
-                F.when(F.col("id") == int(stop_at), 1) if stop_at is not None else F.lit(None)
-            ).alias("hit"),
-        ).collect()[0]
-        fsize = stats["n"]
-        if fsize == 0:
-            break
-        visited = visited.unionAll(nxt)
-        frontier = nxt.select("id")
-        if stats["hit"] is not None:
-            break
-    return visited
+        return _numbered([seed])
+    hit = None if stop_at is None else F.col("id") == int(stop_at)
+    levels, _ = hop_levels(db._typed(etype), seed, 1, max_depth, hit=hit)
+    return _numbered(levels)
 
 
 def multi_bfs_levels(
@@ -198,32 +157,22 @@ def multi_bfs_levels(
 ) -> DataFrame:
     """K simultaneous BFS — reference MultiBFS (MultiBFS.scala:37-157 runs
     1200 at once with 3-bit level counters). Here all frontiers advance in the
-    SAME join per hop: state is DF(seed, id, level) and one edge join expands
-    every seed's frontier at once — the work-sharing that motivated MultiBFS
-    falls out of relational batching. Returns DF(seed, id, level)."""
-    spark = db.spark
-    rows = [(int(s), int(s), 0) for s in seeds]
-    seed_df = spark.createDataFrame(rows, "seed bigint, id bigint, level bigint")
-    seed_df = cut_lineage(seed_df)
-    visited = seed_df  # lazy union of checkpointed deltas (see bfs_levels)
-    frontier = seed_df.select("seed", "id")
-    fsize = len(rows)
-    for depth in range(1, max_depth + 1):
-        e = db._typed(etype)
-        fr = F.broadcast(frontier) if fsize < 100_000 else frontier
-        nxt = (
-            cut_lineage(e.join(fr.withColumnRenamed("id", "src"), "src", "inner")
-            .select("seed", F.col("dst").alias("id"))
-            .distinct()
-            .join(visited.select("seed", "id"), ["seed", "id"], "left_anti")
-            .withColumn("level", F.lit(depth).cast("bigint")))
-        )
-        fsize = nxt.count()
-        if fsize == 0:
-            break
-        visited = visited.unionAll(nxt)
-        frontier = nxt.select("seed", "id")
-    return visited
+    SAME join per hop: the ``hop_levels`` keys are (seed, id), so one edge
+    join expands every seed's frontier at once — the work-sharing that
+    motivated MultiBFS falls out of relational batching. Returns
+    DF(seed, id, level)."""
+    rows = [(int(s), int(s)) for s in seeds]
+    seed_df = cut_lineage(db.spark.createDataFrame(rows, "seed bigint, id bigint"))
+    levels, _ = hop_levels(db._typed(etype), seed_df, len(rows), max_depth, keys=("seed", "id"))
+    return _numbered(levels)
+
+
+def _numbered(levels: list[DataFrame]) -> DataFrame:
+    """BFS levels as one table with a ``level`` column: a lazy union of the
+    already-cut per-hop levels."""
+    return reduce(DataFrame.unionAll, [
+        lv.withColumn("level", F.lit(d).cast("bigint")) for d, lv in enumerate(levels)
+    ])
 
 
 def sssp_parents(
@@ -557,7 +506,6 @@ def weighted_sssp(
     etype: int | None = None,
     weight_col: str = "weight",
     round_dp: int = 4,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Weighted single-source shortest distances, Bellman-Ford style: after
     ``iterations`` rounds every vertex holds the cheapest ≤-k-hop path cost
@@ -566,30 +514,25 @@ def weighted_sssp(
     non-negative weights this is exact Dijkstra-equivalent). DF(id, dist),
     dist rounded for cross-engine comparison.
 
-    Scale shape: one relax per round — an equi join of the current frontier
-    distances against the edge table plus a min-aggregate; the same
-    single-shuffle-per-iteration plan as PageRank, lineage-checkpointed.
-    No priority queue to serialize through the driver."""
-    e = db._typed(etype).select(
-        "src", "dst", F.col(weight_col).cast("double").alias("_w")
+    Scale shape: one relax per round on pregel's superstep core — the
+    distances joined to the edge table (materialized ONCE: db.edges embeds
+    the lineitem aggregations) plus a min-aggregate over the state and the
+    relaxed rows, one shuffle per round. No priority queue to serialize
+    through the driver."""
+    dist = pregel._run(
+        _weighted_edges(db, etype, weight_col),
+        pregel._state(db.spark.createDataFrame([(int(source), 0.0)], "id bigint, d double")),
+        int(iterations),
+        msg=[(F.col("d") + F.col("_w")).alias("d")],
+        update=[F.min("d").alias("d")],
     )
-    if checkpoint:
-        # Materialize the edge projection ONCE: db.edges embeds the
-        # lineitem aggregations, and without this every round's relax
-        # re-runs that whole build pipeline (2 shuffles/round at any SF).
-        e = cut_lineage(e)
-    spark = db.spark
-    dist = spark.createDataFrame([(int(source), 0.0)], "id bigint, d double")
-    for _ in range(int(iterations)):
-        relax = (
-            dist.join(e, dist["id"] == e["src"])
-            .select(F.col("dst").alias("id"), (F.col("d") + F.col("_w")).alias("d"))
-        )
-        dist = dist.unionAll(relax).groupBy("id").agg(F.min("d").alias("d"))
-        if checkpoint:
-            # checkpoint=False keeps the plan un-collapsed (plan audits)
-            dist = cut_lineage(dist)
     return dist.select("id", F.round("d", round_dp).alias("dist"))
+
+
+def _weighted_edges(db: GraphDB, etype: int | None, weight_col: str) -> DataFrame:
+    return pregel._edges(
+        db._typed(etype).select("src", "dst", F.col(weight_col).cast("double").alias("_w"))
+    )
 
 
 def maximal_independent_set(
@@ -1162,9 +1105,11 @@ def strongly_connected_components(
     set — how callers inject cycles / overlay graphs without a new store.
 
     Scale shape: every step is an equi join or aggregation on the live
-    edge set, which only shrinks; label propagation is the CC contraction
-    discipline (one shuffle per hop, lineage cut per fixpoint step). No
-    driver-side graph state — the driver sees only counts."""
+    edge set, which only shrinks; the COLOR and BW fixpoints are runs of
+    pregel's superstep core (one shuffle per round, lineage cut per round,
+    at most ``max_inner`` rounds), BW over the reversed live edges inside
+    one color, filtered once per outer round. No driver-side graph state —
+    the driver sees only counts."""
     e = db._typed(etype).select("src", "dst")
     if extra_edges is not None:
         e = e.unionAll(extra_edges.select("src", "dst"))
@@ -1203,44 +1148,26 @@ def strongly_connected_components(
         if live_v.isEmpty():
             break
         # ---- color: forward min-label fixpoint
-        color = cut_lineage(live_v.select("id", F.col("id").alias("c")))
-        for _ in range(int(max_inner)):
-            msgs = (
-                live_e.join(
-                    color.select(F.col("id").alias("src"), F.col("c")), "src"
-                ).select(F.col("dst").alias("id"), "c")
-            )
-            new_color = cut_lineage(
-                color.unionAll(msgs).groupBy("id").agg(F.min("c").alias("c"))
-            )
-            changed = (
-                new_color.join(color.withColumnRenamed("c", "c0"), "id")
-                .filter(F.col("c") != F.col("c0"))
-            )
-            color = new_color
-            if changed.isEmpty():
-                break
-        # ---- backward: from each color root, restricted to its color
-        mark = cut_lineage(
-            color.filter(F.col("id") == F.col("c")).select("id", F.col("c").alias("scc"))
+        color = pregel._run(
+            live_e, cut_lineage(live_v.select("id", F.col("id").alias("c"))), int(max_inner),
+            msg=["c"], update=[F.min("c").alias("c")],
+            probe=lambda old, new: new.join(old.withColumnRenamed("c", "c0"), "id")
+            .filter(F.col("c") != F.col("c0")).isEmpty(),
         )
-        for _ in range(int(max_inner)):
-            msgs = (
-                live_e.join(
-                    mark.select(F.col("id").alias("dst"), "scc"), "dst"
-                ).select(F.col("src").alias("id"), "scc")
-            )
-            # only adopt the mark if this vertex carries the same color
-            msgs = msgs.join(
-                color.withColumnRenamed("c", "scc"), ["id", "scc"], "semi"
-            )
-            new_mark = cut_lineage(
-                mark.unionAll(msgs).groupBy("id").agg(F.min("scc").alias("scc"))
-            )
-            if new_mark.count() == mark.count():
-                mark = new_mark
-                break
-            mark = new_mark
+        # ---- backward: from each color root over reversed edges inside one
+        # color; every marked vertex has color = scc, so the mark stays put
+        same = (
+            live_e.join(color.select(F.col("id").alias("src"), F.col("c").alias("cs")), "src")
+            .join(color.select(F.col("id").alias("dst"), "c"), "dst")
+            .filter(F.col("cs") == F.col("c"))
+        )
+        mark = pregel._run(
+            cut_lineage(same.select(F.col("dst").alias("src"), F.col("src").alias("dst"))),
+            cut_lineage(color.filter(F.col("id") == F.col("c")).select("id", F.col("c").alias("scc"))),
+            int(max_inner),
+            msg=["scc"], update=[F.min("scc").alias("scc")],
+            probe=lambda old, new: new.count() == old.count(),
+        )
         done.append(mark)
         live_v = cut_lineage(live_v.join(mark, "id", "anti"))
         live_e = cut_lineage(
@@ -1248,10 +1175,7 @@ def strongly_connected_components(
                 live_v.withColumnRenamed("id", "dst"), "dst", "semi"
             )
         )
-    out = done[0]
-    for d in done[1:]:
-        out = out.unionAll(d)
-    return out.select("id", "scc")
+    return reduce(DataFrame.unionAll, done).select("id", "scc")
 
 
 def _canonical_undirected(e: DataFrame) -> DataFrame:
@@ -2010,7 +1934,6 @@ def weighted_sssp_parents(
     etype: int | None = None,
     weight_col: str = "weight",
     round_dp: int = 4,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Weighted SSSP with predecessor tracking: DF(id, dist, parent) where
     parent = the minimum-id predecessor on a cheapest ≤-k-hop path (the
@@ -2018,40 +1941,21 @@ def weighted_sssp_parents(
     parent NULL at the source. The weighted companion of
     :func:`sssp_parents`, feeding :func:`weighted_route`.
 
-    Same one-relax-equi-join-per-round shape as :func:`weighted_sssp`; the
-    parent is recovered per round by re-matching the winning distance
-    (dist_u + w = dist_v) and taking min(u) — one extra join per round
-    against the SAME rounded comparand both engines compute identically."""
-    e = cut_lineage(
-        db._typed(etype).select(
-            "src", "dst", F.col(weight_col).cast("double").alias("_w")
-        )
+    Same one-relax-per-round superstep as :func:`weighted_sssp`; the update
+    is ONE min over ``struct(d, parent)``: the cheapest distance, then the
+    least parent among its ties. Spark orders NULL first, so the source
+    keeps its NULL parent against a zero-cost cycle back to it."""
+    best = F.min(F.struct("d", "parent"))
+    dist = pregel._run(
+        _weighted_edges(db, etype, weight_col),
+        pregel._state(db.spark.createDataFrame(
+            [(int(source), 0.0, None)], "id bigint, d double, parent bigint"
+        )),
+        int(iterations),
+        msg=[(F.col("d") + F.col("_w")).alias("d"), F.col("src").alias("parent")],
+        update=[best["d"].alias("d"), best["parent"].alias("parent")],
     )
-    spark = db.spark
-    dist = spark.createDataFrame(
-        [(int(source), 0.0, None)], "id bigint, d double, parent bigint"
-    )
-    for _ in range(int(iterations)):
-        relax = dist.join(e, dist["id"] == e["src"]).select(
-            F.col("dst").alias("id"),
-            (F.col("d") + F.col("_w")).alias("d"),
-            F.col("src").alias("parent"),
-        )
-        allc = dist.unionAll(relax)
-        best = allc.groupBy("id").agg(F.min("d").alias("d"))
-        # min-id predecessor among rows achieving the winning distance
-        dist = (
-            best.join(allc.withColumnRenamed("d", "d2"), "id")
-            .filter(F.col("d2") == F.col("d"))
-            .groupBy("id", "d")
-            .agg(F.min("parent").alias("parent"))
-        )
-        # checkpoint=False keeps the plan un-collapsed (plan audits)
-        if checkpoint:
-            dist = cut_lineage(dist)
-    return dist.select(
-        "id", F.round("d", round_dp).alias("dist"), "parent"
-    )
+    return dist.select("id", F.round("d", round_dp).alias("dist"), "parent")
 
 
 def weighted_route(

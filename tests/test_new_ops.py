@@ -630,6 +630,22 @@ def test_weighted_sssp_parents_matches_python(spark):
     assert got[4][0] == 2.5 and got[4][1] == 1  # direct 2.5 beats 1→2→4 (2.5 ties? 1+1.5=2.5 tie → min parent 1)
 
 
+def test_weighted_sssp_parents_source_has_no_parent(spark):
+    # a zero-cost cycle back to the source ties its own row at dist 0: the
+    # source must keep its NULL parent, and the route 0→1→2 must survive
+    pw = [(0, 1, 0.0), (1, 0, 0.0), (1, 2, 2.0)]
+    db = GraphDB(
+        spark.createDataFrame(
+            [(0, a, b, w) for a, b, w in pw],
+            "etype int, src bigint, dst bigint, weight double",
+        )
+    )
+    got = sorted(tuple(r) for r in gq.weighted_sssp_parents(db, 0, iterations=2).collect())
+    assert got == [(0, 0.0, None), (1, 0.0, 0), (2, 2.0, 1)]
+    route = [(r["step"], r["id"], r["dist"]) for r in gq.weighted_route(db, 0, 2, iterations=2).collect()]
+    assert route == [(0, 0, 0.0), (1, 1, 0.0), (2, 2, 2.0)]
+
+
 def test_weighted_route_walkback(spark):
     pw = [(1, 2, 1.0), (2, 3, 1.0), (3, 4, 1.0), (1, 4, 10.0)]
     db = GraphDB(

@@ -260,9 +260,9 @@ def static_plans(spark):
 
 
 def _pregel_loops(spark):
-    """Every loop of operators/pregel.py that runs on the superstep core,
-    each set up for three rounds on a 31-vertex weighted path."""
-    from graphchidb_scala_spark.operators import pregel
+    """Every fixed-round loop that runs on pregel's superstep core, each set
+    up for three rounds on a 31-vertex weighted path."""
+    from graphchidb_scala_spark.operators import graph_queries as gq, pregel
 
     rows = [(0, i, i + 1, 1.0 + i % 3) for i in range(30)]
     g = GraphDB(spark.createDataFrame(rows, "etype int, src bigint, dst bigint, weight double"))
@@ -291,6 +291,8 @@ def _pregel_loops(spark):
             g, bfs, msg_fn=lambda sv: sv + F.lit(1), agg_fn=F.min,
             combine_fn=lambda old, m: F.least(old, m), max_iterations=3,
         ),
+        "weighted_sssp": lambda: gq.weighted_sssp(g, 0, iterations=3),
+        "weighted_sssp_parents": lambda: gq.weighted_sssp_parents(g, 0, iterations=3),
     }
 
 
@@ -318,3 +320,34 @@ def test_pregel_superstep_is_one_exchange(spark, static_plans, monkeypatch):
         assert len(ex) == 3, (name, ex)
         assert ex[0] == 1, (name, ex)
         assert ex[2] - ex[1] == ex[1] - ex[0], (name, ex)
+
+
+def test_bfs_family_hop_jobs(spark):
+    """The BFS family shares one hop loop, so one more hop costs every member
+    the same number of Spark jobs: the per-hop job count (depth 4 minus
+    depth 3 on a 31-vertex path, target never reached) of
+    ``traverse_out_until`` and ``multi_bfs_levels`` equals that of
+    ``bfs_levels(stop_at=…)``. A per-hop probe or re-cut shows as extra jobs."""
+    from graphchidb_scala_spark.operators import graph_queries as gq
+
+    rows = [(0, i, i + 1) for i in range(30)]
+    g = GraphDB(spark.createDataFrame(rows, "etype int, src bigint, dst bigint"))
+    sc = spark.sparkContext
+    runs = {
+        "bfs_levels": lambda d: gq.bfs_levels(g, 0, d, stop_at=30).collect(),
+        "multi_bfs_levels": lambda d: gq.multi_bfs_levels(g, [0], d).collect(),
+        "traverse_out_until": lambda d: Frontier.of(g, [0]).traverse_out_until(30, max_hops=d),
+    }
+
+    def jobs(name, depth):
+        group = f"hop-jobs-{name}-{depth}"
+        sc.setJobGroup(group, group)
+        try:
+            runs[name](depth)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    per_hop = {name: jobs(name, 4) - jobs(name, 3) for name in runs}
+    assert per_hop["traverse_out_until"] == per_hop["bfs_levels"], per_hop
+    assert per_hop["multi_bfs_levels"] == per_hop["bfs_levels"], per_hop

@@ -9,6 +9,7 @@ from collections import defaultdict
 import pytest
 from pyspark.sql import functions as F
 
+from graphchidb_scala_spark.db import GraphDB
 from graphchidb_scala_spark.operators import graph_queries as gq
 from graphchidb_scala_spark.operators.frontier import Frontier
 
@@ -51,12 +52,38 @@ def test_multi_bfs_matches_python(social_db, adj):
         assert got[s] == bfs_py(adj, s, 3)
 
 
-def test_shortest_path_length(social_db, adj):
+def _first_at(levels, depth):
+    return min(v for v, l in levels.items() if l == depth)
+
+
+def test_shortest_path_length(spark, social_db, adj):
     levels = bfs_py(adj, 1, 5)
-    # pick a vertex at level 2 and one unreachable-within-1
-    v2 = min(v for v, l in levels.items() if l == 2)
-    got = gq.shortest_path_length(social_db, 1, v2, max_depth=5).collect()[0]["dist"]
-    assert got == 2
+    v1, v2, v3 = (_first_at(levels, d) for d in (1, 2, 3))
+    # a sink: a new vertex whose one in-edge comes from a level-1 vertex
+    sink_db = GraphDB(social_db.edges.unionByName(
+        spark.createDataFrame([(0, v1, 1000, 0, 0.0)], social_db.edges.schema)
+    ))
+    sink_adj = defaultdict(set, {v: set(ns) for v, ns in adj.items()})
+    sink_adj[v1].add(1000)
+    cases = [
+        (social_db, adj, v1, 5),  # dist 1: the in-neighbor early exit
+        (social_db, adj, v2, 2),  # dist == max_depth
+        (social_db, adj, v3, 2),  # one hop past max_depth: NULL
+        (social_db, adj, 1, 5),  # source == target: 0
+        (social_db, adj, v1, 0),  # max_depth=0: NULL
+        (sink_db, sink_adj, 1000, 5),
+    ]
+    for db, a, target, depth in cases:
+        got = gq.shortest_path_length(db, 1, target, max_depth=depth).collect()[0]["dist"]
+        assert got == bfs_py(a, 1, depth).get(target), (target, depth)
+
+
+def test_bfs_levels_stop_at(social_db, adj):
+    # every level up to level(v) is complete, nothing lies beyond it
+    levels = bfs_py(adj, 1, 5)
+    v = _first_at(levels, 2)
+    got = {r["id"]: r["level"] for r in gq.bfs_levels(social_db, 1, 5, stop_at=v).collect()}
+    assert got == {u: l for u, l in levels.items() if l <= 2}
 
 
 def test_sssp_parents_and_route(social_db, adj):
@@ -178,6 +205,17 @@ def test_traverse_out_until_early_exit(social_db, adj):
     if v3 is not None:
         hop = Frontier.of(social_db, [1]).traverse_out_until(v3, etype=0, max_hops=5)
         assert hop == 3
+
+
+def test_traverse_out_until_cases(social_db, adj):
+    a, b = 1, 2
+    la, lb = bfs_py(adj, a, 5), bfs_py(adj, b, 5)
+    # from a two-vertex frontier: a target one hop from b, farther from a
+    t = min(v for v, l in lb.items() if l == 1 and la.get(v, 99) > 1)
+    assert Frontier.of(social_db, [a, b]).traverse_out_until(t, max_hops=3) == 1
+    # unreachable target, and a target already in the start frontier
+    assert Frontier.of(social_db, [a]).traverse_out_until(10_000, max_hops=1) is None
+    assert Frontier.of(social_db, [a, b]).traverse_out_until(b, max_hops=1) is None
 
 
 def test_ego_net_and_triangles(social_db):

@@ -426,7 +426,7 @@ CHECKS = {
     # one weighted-SSSP relax round: frontier-edge equi join + min agg —
     # the PageRank iteration shape, never a nested loop
     "weighted_sssp_relax_round": (
-        lambda g, docs, emb: gq.weighted_sssp(g, 1, iterations=1, checkpoint=False),
+        lambda g, docs, emb: _first_superstep(lambda: gq.weighted_sssp(g, 1, iterations=1)),
         ["partial_min", "!BroadcastNestedLoop", "!CartesianProduct"],
     ),
     "pca_project_pure_projection": (
@@ -551,9 +551,9 @@ CHECKS = {
         lambda g, docs, emb: gq.reciprocity(g),
         ["partial_count", "!BroadcastNestedLoop", "!CartesianProduct"],
     ),
-    # weighted-parents relax round: equi joins + min aggregates, no nested loop
+    # weighted-parents relax round: one equi join + one struct min, no nested loop
     "weighted_parents_relax_round": (
-        lambda g, docs, emb: gq.weighted_sssp_parents(g, 1, iterations=1, checkpoint=False),
+        lambda g, docs, emb: _first_superstep(lambda: gq.weighted_sssp_parents(g, 1, iterations=1)),
         ["partial_min", "!BroadcastNestedLoop", "!CartesianProduct"],
     ),
     # DAG layering round: the pagerank zero-union shape with max — one
