@@ -1,18 +1,32 @@
 """Online edge ingest — the reference's LSM write path (SURVEY.md §3.1:
 in-memory EdgeBuffers → sorted merge → shard tree) re-expressed as
-base-Parquet + appends-union + compaction:
+base-Parquet + appends + compaction over one declared schema:
 
-- ``add_batch``: append a micro-batch parquet file; immediately visible at
-  read (parity with addEdge's immediate queryability, README.md:226-229).
-  The appends directory is the EdgeBuffer analogue.
-- ``compact``: rewrite base+appends into ``num_buckets`` files hash-bucketed
-  by src and sorted within partition by (src, dst) — the LSM merge analogue
-  (GraphChiDatabase.scala:622-795). Sorted-by-src row groups give parquet
-  min/max pruning for point src lookups, exactly the role of the reference's
-  shard pointer/skip indexes.
-- upsert discipline: within the union, the newest version of an
-  (etype,src,dst) key wins — the LSM newest-first read path
-  (GraphChiDatabase.scala:1385-1399 probes buffers first, newest shard first).
+- ``init_base`` declares the store's schema: the edge frame's columns (src
+  pinned to bigint) plus ``_v bigint`` and ``_del boolean``, written once as
+  ``_schema.json`` at the store root — the typed columns the reference
+  creates before start-up (GraphChiDatabase.scala:1005-1049). Every read of
+  ``base/`` and ``appends/`` passes it, so no read infers a schema (each
+  inference is a Spark job), and every write casts its columns to it by
+  name. A batch column the store does not declare, or a non-integral key
+  column, raises ``ValueError``; a declared column a batch lacks reads as
+  NULL (tombstones carry only the key).
+- ``add_batch`` / ``delete_batch``: append a micro-batch of edges or of
+  key-only tombstones, immediately visible at read (parity with addEdge's
+  immediate queryability, README.md:226-229). The appends directory is the
+  EdgeBuffer analogue.
+- ``_resolve``: the one newest-wins resolver, the LSM newest-first read
+  path (``queryOut`` probes the buffers first, then the shards,
+  GraphChiDatabase.scala:1478-1556). A window over the appends picks each
+  (etype, src, dst) key's newest row, the base is masked by a left-anti
+  join on those keys, and the live winners are unioned in. ``edges``, the
+  existing-key probe and ``compact`` all read through it.
+- ``compact``: one path — rewrite exactly the src buckets the appends dirty
+  (all of them when every bucket is dirty), hash-bucketed by src into
+  ``_b=<k>`` directories and sorted by (src, dst), then swap each bucket
+  directory — the LSM merge analogue (GraphChiDatabase.scala:622-795).
+  Sorted-by-src row groups give parquet min/max pruning for point src
+  lookups, the role of the reference's shard pointer/skip indexes.
 
 Also provides Structured Streaming ingestion from an event-stream DataFrame
 (``readStream`` → foreachBatch → add_batch), the micro-batch trigger analogue
@@ -21,14 +35,17 @@ of the reference's buffer flusher daemon (GraphChiDatabase.scala:912-938).
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from graphchidb_scala_spark.checkpoint import cut_lineage
+from pyspark.sql.types import BooleanType, IntegerType, IntegralType, LongType
+from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
+from graphchidb_scala_spark.checkpoint import cut_lineage
 from graphchidb_scala_spark.db import EDGE_KEY, GraphDB
 
 
@@ -39,9 +56,15 @@ _PROBE_IN_CHUNK = 50_000
 _PROBE_MAX_CHUNKS = 64
 _PROBE_MAX_IDS = 1_000_000
 
+_SCHEMA_FILE = "_schema.json"
+_DEG_SCHEMA = "id bigint, in_deg bigint, out_deg bigint"
+
 
 class EdgeStore:
-    """Parquet-backed edge store with micro-batch appends and compaction."""
+    """Parquet-backed edge store over one declared schema (the
+    ``_schema.json`` sidecar ``init_base`` writes): micro-batch appends and
+    tombstones, one newest-wins resolver for every read, and one
+    bucket-local compaction path."""
 
     def __init__(
         self,
@@ -59,6 +82,48 @@ class EdgeStore:
         self.num_buckets = num_buckets
         self.maintain_degrees = maintain_degrees
         self._batch_seq = 0
+        self._schema: StructType | None = None
+
+    # ------------------------------------------------------------------ schema
+
+    def _declared(self) -> StructType:
+        """The declared store schema: the edge columns plus ``_v`` and
+        ``_del``. A store without its sidecar has no schema to read or write
+        with, whatever files it holds."""
+        if self._schema is None:
+            sidecar = os.path.join(self.path, _SCHEMA_FILE)
+            if not os.path.isfile(sidecar):
+                raise ValueError(
+                    f"EdgeStore at {self.path} has no {_SCHEMA_FILE}; "
+                    "init_base declares the schema before any read or write"
+                )
+            with open(sidecar) as f:
+                self._schema = StructType.fromJson(json.load(f))
+        return self._schema
+
+    def _conform(self, df: DataFrame) -> DataFrame:
+        """Cast each batch column by name to its declared type. Parquet files
+        of one store must agree on every column's type, and Spark's murmur3
+        hash is dtype-sensitive (hash(1::int) != hash(1::bigint)), so an int
+        src would land in the wrong ``_b`` bucket. A column the store does
+        not declare, or a key column that is not integral (a cast would
+        truncate or null the key newest-wins resolves on), raises
+        ``ValueError`` before anything is written."""
+        types = {f.name: f.dataType for f in self._declared() if f.name not in ("_v", "_del")}
+        undeclared = [c for c in df.columns if c not in types]
+        if undeclared:
+            raise ValueError(
+                f"EdgeStore at {self.path} does not declare {undeclared}; "
+                f"its columns are {list(types)}"
+            )
+        bad_keys = [
+            f"{f.name} {f.dataType.simpleString()}"
+            for f in df.schema
+            if f.name in EDGE_KEY and not isinstance(f.dataType, IntegralType)
+        ]
+        if bad_keys:
+            raise ValueError(f"EdgeStore key columns must be integral, got {bad_keys}")
+        return df.select(*(F.col(c).cast(types[c]).alias(c) for c in df.columns))
 
     # ------------------------------------------------------------------ writes
 
@@ -69,22 +134,17 @@ class EdgeStore:
         each write task emits one file into its own bucket directory."""
         return F.pmod(F.hash(F.col(col)), F.lit(self.num_buckets))
 
-    @staticmethod
-    def _src_bigint(df: DataFrame) -> DataFrame:
-        """Pin ``src`` to BIGINT on every write path. Spark's murmur3 hash
-        is dtype-sensitive (hash(1::int) != hash(1::bigint)), and the probe
-        bucket set in :meth:`_union_raw` is computed from a hard-coded
-        bigint frame — a store initialized with an IntegerType src would
-        get wrong ``_b IN (...)`` partition filters, so the existing-key
-        probe would silently miss keys and the degree deltas would drift.
-        Normalizing at the write boundary makes stored dtype == probe dtype
-        by construction for any caller-supplied frame."""
-        return df.withColumn("src", F.col("src").cast("bigint"))
+    def _buckets(self, df: DataFrame) -> list[int]:
+        """The sorted set of buckets ``df``'s src values fall in."""
+        return sorted(r[0] for r in df.select(self._bucket_of()).distinct().collect())
 
     def init_base(self, edges: DataFrame) -> None:
+        """Write the base and declare the store's schema: ``edges``' columns
+        with src cast to bigint, plus ``_v bigint`` and ``_del boolean``,
+        written to ``_schema.json`` at the store root."""
+        edges = edges.withColumn("src", F.col("src").cast("bigint"))
         (
-            self._src_bigint(edges)
-            .withColumn("_v", F.lit(0).cast("long"))
+            edges.withColumn("_v", F.lit(0).cast("long"))
             .withColumn("_b", self._bucket_of())
             .repartition(self.num_buckets, "src")
             .sortWithinPartitions("src", "dst")
@@ -92,6 +152,12 @@ class EdgeStore:
             .partitionBy("_b")
             .parquet(self.base_dir)
         )
+        self._schema = StructType(
+            [StructField(f.name, f.dataType) for f in edges.schema]
+            + [StructField("_v", LongType()), StructField("_del", BooleanType())]
+        )
+        with open(os.path.join(self.path, _SCHEMA_FILE), "w") as f:
+            f.write(self._schema.json())
         if self.maintain_degrees:
             (
                 GraphDB(self._read_base())
@@ -116,7 +182,7 @@ class EdgeStore:
         not the whole of it. The base is never shuffled."""
         self._batch_seq += 1
         version = int(time.time() * 1000) * 1000 + self._batch_seq
-        batch = self._src_bigint(edges).withColumn(
+        batch = self._conform(edges).withColumn(
             "_v", F.lit(version).cast("long")
         ).withColumn("_del", F.lit(False))
         if self.maintain_degrees:
@@ -134,13 +200,13 @@ class EdgeStore:
     def delete_batch(self, keys: DataFrame) -> None:
         """Delete edges by (etype, src, dst) key — tombstone append, the LSM
         delete of the reference (GraphChiDatabase.scala deleteEdge path:
-        mark in the buffer, purge at merge). The tombstone is just an
-        append row with ``_del = true``: newest-version-wins makes it shadow
-        every older version of the key on read (base rows are masked by the
-        same anti-join that handles upserts, appended rows lose the window
-        to the newer tombstone), and :meth:`compact` writes the post-delete
-        edge set, purging tombstones physically. Deleting then re-adding a
-        key behaves correctly — the re-add's higher version wins back.
+        mark in the buffer, purge at merge). The tombstone is a key-only
+        append row with ``_del = true``; its property columns read as NULL.
+        Newest-version-wins makes it shadow every older version of the key
+        on read (:meth:`_resolve`), and :meth:`compact` writes the
+        post-delete edge set, purging tombstones physically. Deleting then
+        re-adding a key behaves correctly — the re-add's higher version wins
+        back.
 
         Immediately visible, never shuffles the base — identical write
         shape to :meth:`add_batch`. With ``maintain_degrees``, keys that
@@ -149,7 +215,7 @@ class EdgeStore:
         self._batch_seq += 1
         version = int(time.time() * 1000) * 1000 + self._batch_seq
         tomb = (
-            self._src_bigint(keys.select(*EDGE_KEY))
+            self._conform(keys.select(*EDGE_KEY))
             .distinct()
             .withColumn("_v", F.lit(version).cast("long"))
             .withColumn("_del", F.lit(True))
@@ -197,105 +263,76 @@ class EdgeStore:
 
     def _existing_key_probe(self, bkeys: DataFrame, version: int) -> DataFrame | None:
         """Which of the batch's (etype, src, dst) keys already exist in the
-        pre-batch store (rows with ``_v < version``)? The base read is pruned
-        to the batch's src slice — every probed key has src in the batch, and
-        the base layout is src-sorted, so the gap-cut chunked IN predicate
-        (``_src_probe_predicate``) reaches the parquet row-group stats and
-        the probe reads a bounded slice of a 100 TB base, never the whole of
-        it (plan-asserted by tools/explain_audit.py, both arms). Batches past
-        ``_PROBE_MAX_IDS`` distinct srcs skip the driver-side predicate and
-        probe with a distributed src semi-join instead — bounded driver
-        memory at any batch size. Returns None for an empty batch."""
+        pre-batch store, i.e. :meth:`_resolve` over the batch's src slice of
+        the base and the appends with ``_v < version``? Every probed key has
+        src in the batch and the base is src-sorted, so the gap-cut chunked
+        IN predicate (``_src_probe_predicate``) reaches the parquet
+        row-group stats, and a batch of at most ``_PROBE_IN_CHUNK`` srcs
+        also reads only its ``_b`` bucket directories: the probe reads a
+        bounded slice of a 100 TB base, never the whole of it
+        (plan-asserted by ``test_probe_base_read_is_bucket_pruned`` in
+        tests/test_streaming.py, both arms). Batches past ``_PROBE_MAX_IDS``
+        distinct srcs skip the driver-side predicate and probe with a
+        distributed src semi-join instead — bounded driver memory at any
+        batch size. Returns None for an empty batch."""
         src_rows = (
             bkeys.select("src").distinct().limit(_PROBE_MAX_IDS + 1).collect()
         )
         if not src_rows:
             return None
         srcs = [r["src"] for r in src_rows]
-        bounded = len(src_rows) <= _PROBE_MAX_IDS
-        pre = self._union_raw(probe_srcs=srcs if bounded else None).filter(
-            F.col("_v") < version
-        )
-        if bounded:
-            pre = pre.filter(_src_probe_predicate(srcs))
+        if len(srcs) <= _PROBE_MAX_IDS:
+            buckets = self._buckets(bkeys) if len(srcs) <= _PROBE_IN_CHUNK else None
+            base = self._read_base(buckets).filter(_src_probe_predicate(srcs))
         else:
             # Huge batch: no driver-side id list. The src semi-join lets the
             # planner/AQE pick the join shape (runtime bloom filter / shuffle)
             # — the only probe that scales to an unbounded batch.
-            pre = pre.join(bkeys.select("src").distinct(), "src", "semi")
-        # a key "exists" iff its NEWEST pre-version row is not a tombstone —
-        # without the newest-wins resolve, a delete→re-add (or double
-        # delete) miscounts the degree deltas. The window runs over the
-        # pruned slice only (batch srcs), never the whole base.
-        if "_del" in pre.columns:
-            w = Window.partitionBy(*EDGE_KEY).orderBy(F.desc("_v"))
-            pre = (
-                pre.withColumn("_rn", F.row_number().over(w))
-                .filter((F.col("_rn") == 1) & ~F.coalesce(F.col("_del"), F.lit(False)))
-            )
+            base = self._read_base().join(bkeys.select("src").distinct(), "src", "semi")
+        pre = self._resolve(base, self._read_appends().filter(F.col("_v") < version))
         return pre.select(*EDGE_KEY).join(F.broadcast(bkeys), list(EDGE_KEY), "semi")
 
     # ------------------------------------------------------------------- reads
 
-    def _read_base(self) -> DataFrame:
-        """Raw base scan with the ``_b`` bucket partition column (present on
-        bucket-partitioned layouts, absent on legacy flat ones) dropped —
-        every read path sees one uniform edge schema either way."""
-        df = self.spark.read.parquet(self.base_dir)
-        return df.drop("_b") if "_b" in df.columns else df
+    def _read_base(self, buckets: list[int] | None = None) -> DataFrame:
+        """The base in the declared schema (``_del`` reads NULL). With
+        ``buckets``, a ``_b IN (...)`` partition filter: the other bucket
+        directories are never opened."""
+        base = self.spark.read.schema(
+            StructType(self._declared().fields + [StructField("_b", IntegerType())])
+        ).parquet(self.base_dir)
+        if buckets is not None:
+            base = base.filter(F.col("_b").isin(buckets))
+        return base.drop("_b")
 
-    def _base_is_bucketed(self) -> bool:
-        return os.path.isdir(self.base_dir) and any(
-            f.startswith("_b=") for f in os.listdir(self.base_dir)
+    def _read_appends(self) -> DataFrame:
+        """The appends in the declared schema. With no appends, an empty
+        frame: its always-false filter plans as an empty local relation,
+        which the optimizer propagates through :meth:`_resolve`, so a read
+        over a merged base plans as the bare base scan."""
+        if not self._exists(self.appends_dir):
+            return self.spark.createDataFrame([], self._declared()).where(F.lit(False))
+        return self.spark.read.schema(self._declared()).parquet(self.appends_dir)
+
+    @staticmethod
+    def _resolve(base: DataFrame, appends: DataFrame) -> DataFrame:
+        """Newest-version-wins per (etype, src, dst) over ``base`` and
+        ``appends``, both in the declared schema. Every append is newer than
+        every base row, so the window runs over the appends only (the
+        EdgeBuffer analogue, small by the compaction discipline); the base
+        is masked with a LEFT ANTI join on the winning keys and never
+        shuffled. A winning tombstone masks its base row and is itself
+        dropped. The anti-join carries no forced broadcast hint — appends
+        may legally grow to ~25% of base before compaction, so AQE picks
+        broadcast at runtime iff the key set actually fits."""
+        w = Window.partitionBy(*EDGE_KEY).orderBy(F.desc("_v"))
+        newest = (
+            appends.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
         )
-
-    def _union_raw(self, probe_srcs: list[int] | None = None) -> DataFrame:
-        """base ∪ appends with the ``_v`` version column intact (no dedupe).
-
-        ``probe_srcs``: when the caller knows the exact src set it will
-        filter on (the existing-key probe) and the base is bucket-
-        partitioned, the srcs' bucket set — computed with a tiny LOCAL
-        job, so the bucket assignment is engine-exact by construction —
-        becomes a ``_b IN (...)`` partition filter on the base scan. At
-        num_buckets in the tens this saves footer reads; at the 100 TB
-        layout (thousands of bucket directories) it is the difference
-        between listing the whole base and opening the one directory a
-        point batch touches. Bounded: only computed for src sets at or
-        under ``_PROBE_IN_CHUNK`` (beyond that the bucket set approaches
-        all-buckets anyway and the row-group stats already prune)."""
-        dfs = []
-        if self._exists(self.base_dir):
-            # the base is schema-uniform — no mergeSchema, or every probe
-            # would pay a footer-merge pass over the whole (100 TB) base
-            base = self.spark.read.parquet(self.base_dir)
-            if "_b" in base.columns:
-                if probe_srcs is not None and 0 < len(probe_srcs) <= _PROBE_IN_CHUNK:
-                    bks = sorted(
-                        r["b"]
-                        for r in self.spark.createDataFrame(
-                            [(int(s),) for s in set(probe_srcs)], "src bigint"
-                        )
-                        .select(self._bucket_of().alias("b"))
-                        .distinct()
-                        .collect()
-                    )
-                    base = base.filter(F.col("_b").isin(bks))
-                base = base.drop("_b")
-            dfs.append(base)
-        if self._exists(self.appends_dir):
-            # mergeSchema ONLY here: tombstone files carry just the key
-            # columns, edge files the full property set — the merged schema
-            # null-fills both ways, and appends stay small by the
-            # compaction discipline, so the extra footer reads are bounded
-            dfs.append(
-                self.spark.read.option("mergeSchema", "true").parquet(self.appends_dir)
-            )
-        if not dfs:
-            raise ValueError(f"empty EdgeStore at {self.path}")
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
+        masked = base.join(newest.select(*EDGE_KEY), list(EDGE_KEY), "left_anti")
+        return masked.unionByName(newest.filter(~F.col("_del")))
 
     def degrees_view(self) -> DataFrame:
         """Maintained per-vertex degrees: base table + per-batch deltas.
@@ -310,11 +347,12 @@ class EdgeStore:
         to broadcast at runtime exactly when the measured delta fits."""
         if not self.maintain_degrees:
             raise ValueError("EdgeStore was not created with maintain_degrees=True")
-        base = self.spark.read.parquet(self.deg_base_dir)
+        base = self.spark.read.schema(_DEG_SCHEMA).parquet(self.deg_base_dir)
         if not self._exists(self.deg_appends_dir):
             return base
         delta = (
-            self.spark.read.parquet(self.deg_appends_dir)
+            self.spark.read.schema(_DEG_SCHEMA)
+            .parquet(self.deg_appends_dir)
             .groupBy("id")
             .agg(F.sum("in_deg").alias("d_in"), F.sum("out_deg").alias("d_out"))
         )
@@ -342,63 +380,25 @@ class EdgeStore:
         pass back to ``edges(as_of=...)`` for a repeatable snapshot read."""
         if not self._exists(self.appends_dir):
             return 0
-        row = (
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(self.appends_dir)
-            .agg(F.max("_v"))
-            .collect()[0][0]
-        )
-        return int(row or 0)
+        return int(self._read_appends().agg(F.max("_v")).collect()[0][0] or 0)
 
     def edges(self, as_of: int | None = None) -> DataFrame:
-        """Current edge set: base ∪ appends with newest-version-wins per
-        (etype, src, dst). ``as_of`` reads the store AS OF a batch version
-        (from :meth:`current_version`): appends newer than it are invisible
-        — the durable-log replay point (the reference recovers a consistent
-        state by replaying the transaction log to an offset;
+        """Current edge set: :meth:`_resolve` over base and appends, in the
+        declared edge columns. ``as_of`` reads the store AS OF a batch
+        version (from :meth:`current_version`): appends newer than it are
+        invisible — the durable-log replay point (the reference recovers a
+        consistent state by replaying the transaction log to an offset;
         GraphChiDatabase.scala durable-buffer flush), here a pushed ``_v``
-        predicate, so a snapshot read costs the same as a current read.
-        Note base rows predate every append version, so ``as_of`` only
-        filters the appends side.
+        predicate on the appends (base rows predate every append version),
+        so a snapshot read costs the same as a current read. A store whose
+        every edge was deleted and compacted reads as an empty edge set.
 
-        Scale contract: the base (the 100 TB side) is NEVER shuffled on read.
-        Newest-wins is resolved with a window over the *appends only* (the
-        EdgeBuffer analogue — a few micro-batches, tiny by construction), then
-        overwritten base keys are masked with a LEFT ANTI join of the appends'
-        key set against the base scan. The anti-join carries no forced
-        broadcast hint — appends may legally grow to ~25% of base before
-        compaction, so AQE picks broadcast at runtime iff the key set
-        actually fits. Compaction folds both steps away."""
-        has_base = self._exists(self.base_dir)
-        has_appends = self._exists(self.appends_dir)
-        if not has_base and not has_appends:
-            raise ValueError(f"empty EdgeStore at {self.path}")
-        base = self._read_base().drop("_v") if has_base else None
-        if not has_appends:
-            return base
-        w = Window.partitionBy(*EDGE_KEY).orderBy(F.desc("_v"))
-        raw = self.spark.read.option("mergeSchema", "true").parquet(self.appends_dir)
+        Scale contract: the base (the 100 TB side) is NEVER shuffled on
+        read — see :meth:`_resolve`. Compaction folds the appends away."""
+        appends = self._read_appends()
         if as_of is not None:
-            # plan-time predicate only — an empty filtered appends set flows
-            # through the window/anti-join and yields base unchanged, so a
-            # snapshot read really costs the same as a current read (no
-            # eager job at plan construction)
-            raw = raw.filter(F.col("_v") <= int(as_of))
-        appends = raw.withColumn("_rn", F.row_number().over(w)).filter(
-            F.col("_rn") == 1
-        )
-        if "_del" in appends.columns:
-            # a winning tombstone removes the key: it is excluded here AND
-            # still masks the base row below (its key is in the anti-join set)
-            mask_keys = appends.select(*EDGE_KEY)
-            appends = appends.filter(~F.coalesce(F.col("_del"), F.lit(False)))
-        else:
-            mask_keys = appends.select(*EDGE_KEY)
-        appends = appends.drop("_rn", "_v", "_del")
-        if base is None:
-            return appends
-        masked = base.join(mask_keys, on=list(EDGE_KEY), how="left_anti")
-        return masked.unionByName(appends, allowMissingColumns=True)
+            appends = appends.filter(F.col("_v") <= int(as_of))
+        return self._resolve(self._read_base(), appends).drop("_v", "_del")
 
     def graph(self, vertices: DataFrame | None = None) -> GraphDB:
         return GraphDB(self.edges(), vertices)
@@ -432,83 +432,29 @@ class EdgeStore:
         self.compact()
         return True
 
-    def compact(self, bucket_local: bool = True) -> None:
-        """Merge appends into the base — the LSM merge cascade of the
-        reference in one job. Run when appends exceed ~25% of base (the
-        reference's reconstruct threshold, GraphChiDatabase.scala:842-845).
+    def compact(self) -> None:
+        """Merge the appends into the base — the LSM merge cascade of the
+        reference. Run when appends exceed ~25% of base (the reference's
+        reconstruct threshold, GraphChiDatabase.scala:842-845); without
+        appends it rewrites nothing.
 
-        ``bucket_local`` (default, judge r8 "What's missing #3"): rewrite
-        ONLY the src buckets the appends actually touch. The base is laid
-        out as ``_b=<bucket>`` partition directories (bucket =
-        pmod(hash(src), num_buckets) — the same value HashPartitioning
-        assigns, see :meth:`_bucket_of`), so the dirty-bucket read is
-        directory-pruned (PartitionFilters), clean buckets are never opened
-        let alone rewritten, and compact cost is ∝ the dirtied fraction —
-        a skew-concentrated append stream (one hot producer) stops paying a
-        full 100 TB base rewrite per compaction. Every append row lands in
-        a dirty bucket by construction (its bucket is derived from its own
-        src), so merging (dirty base slice ∪ appends) with newest-wins and
-        swapping those directories is EXACTLY the full compact restricted
-        to dirty buckets — results are byte-identical per surviving row
-        (pytest-asserted). A tombstone that empties a bucket deletes the
-        directory. Legacy flat-layout bases (no ``_b=`` dirs) take the full
-        path once, which migrates the layout."""
-        if (
-            bucket_local
-            and self._base_is_bucketed()
-            and self._exists(self.appends_dir)
-        ):
-            raw = self.spark.read.option("mergeSchema", "true").parquet(
-                self.appends_dir
-            )
-            dirty = sorted(
-                r[0]
-                for r in raw.select(self._bucket_of().alias("_b"))
-                .distinct()
-                .collect()
-            )
-            if dirty and len(dirty) < self.num_buckets:
-                self._compact_buckets(dirty)
-                return
-        merged = (
-            self.edges()
-            .withColumn("_v", F.lit(0).cast("long"))
-            .withColumn("_b", self._bucket_of())
-            .repartition(self.num_buckets, "src")
-            .sortWithinPartitions("src", "dst")
-        )
-        tmp = self.base_dir + ".tmp"
-        merged.write.mode("overwrite").partitionBy("_b").parquet(tmp)
-        self._compact_degrees()
-        self._replace(self.base_dir, tmp)
-        self._rm(self.appends_dir)
-
-    def _compact_buckets(self, dirty: list[int]) -> None:
-        """Bucket-local merge: newest-wins over (dirty base slice ∪ appends),
-        then per-directory swap. The dirty slice read filters on the ``_b``
-        partition column BEFORE the drop, so it is directory-pruned."""
-        import shutil
-
-        base_dirty = (
-            self.spark.read.parquet(self.base_dir)
-            .filter(F.col("_b").isin([int(b) for b in dirty]))
-            .drop("_b", "_v")
-        )
-        raw = self.spark.read.option("mergeSchema", "true").parquet(
-            self.appends_dir
-        )
-        w = Window.partitionBy(*EDGE_KEY).orderBy(F.desc("_v"))
-        appends = raw.withColumn("_rn", F.row_number().over(w)).filter(
-            F.col("_rn") == 1
-        )
-        mask_keys = appends.select(*EDGE_KEY)
-        if "_del" in appends.columns:
-            appends = appends.filter(~F.coalesce(F.col("_del"), F.lit(False)))
+        Rewrites exactly the src buckets the appends dirty: every append
+        row's bucket is derived from its own src, so :meth:`_resolve` over
+        the dirty base slice (a ``_b`` partition filter — clean bucket
+        directories are never opened) and the appends is the whole store's
+        merge restricted to those buckets. Each rewritten bucket directory
+        is then swapped in, and a bucket whose every row was tombstoned
+        away is deleted. Compact cost is ∝ the dirtied fraction, so a
+        skew-concentrated append stream (one hot producer) does not pay a
+        full 100 TB base rewrite; when every bucket is dirty, the same path
+        rewrites them all."""
+        if not self._exists(self.appends_dir):
+            return
+        appends = self._read_appends()
+        dirty = self._buckets(appends)
         live = (
-            base_dirty.join(mask_keys, on=list(EDGE_KEY), how="left_anti")
-            .unionByName(
-                appends.drop("_rn", "_v", "_del"), allowMissingColumns=True
-            )
+            self._resolve(self._read_base(dirty), appends)
+            .drop("_del")
             .withColumn("_v", F.lit(0).cast("long"))
             .withColumn("_b", self._bucket_of())
             .repartition(self.num_buckets, "src")
@@ -518,14 +464,13 @@ class EdgeStore:
         live.write.mode("overwrite").partitionBy("_b").parquet(tmp)
         self._compact_degrees()
         for b in dirty:
-            src = os.path.join(tmp, f"_b={int(b)}")
-            dst = os.path.join(self.base_dir, f"_b={int(b)}")
+            src = os.path.join(tmp, f"_b={b}")
+            dst = os.path.join(self.base_dir, f"_b={b}")
             if os.path.isdir(src):
                 self._replace(dst, src)
-            elif os.path.isdir(dst):
-                # every row of the bucket was tombstoned away
-                shutil.rmtree(dst)
-        shutil.rmtree(tmp, ignore_errors=True)
+            else:
+                self._rm(dst)
+        self._rm(tmp)
         self._rm(self.appends_dir)
 
     def _compact_degrees(self) -> None:
@@ -560,8 +505,6 @@ class EdgeStore:
         leaves either the old or the new complete directory on disk, never
         neither — the local-FS stand-in for the manifest/pointer swap a
         production deployment does on an object store."""
-        import shutil
-
         bak = dst + ".bak"
         if os.path.isdir(bak):
             shutil.rmtree(bak)
@@ -572,8 +515,6 @@ class EdgeStore:
 
     @staticmethod
     def _rm(d: str) -> None:
-        import shutil
-
         if os.path.isdir(d):
             shutil.rmtree(d)
 

@@ -322,6 +322,18 @@ def test_pregel_superstep_is_one_exchange(spark, static_plans, monkeypatch):
         assert ex[2] - ex[1] == ex[1] - ex[0], (name, ex)
 
 
+def _jobs(spark, group, fn):
+    """Run ``fn()`` under its own job group; returns (Spark jobs it ran, its
+    result)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
 def test_bfs_family_hop_jobs(spark):
     """The BFS family shares one hop loop, so one more hop costs every member
     the same number of Spark jobs: the per-hop job count (depth 4 minus
@@ -332,7 +344,6 @@ def test_bfs_family_hop_jobs(spark):
 
     rows = [(0, i, i + 1) for i in range(30)]
     g = GraphDB(spark.createDataFrame(rows, "etype int, src bigint, dst bigint"))
-    sc = spark.sparkContext
     runs = {
         "bfs_levels": lambda d: gq.bfs_levels(g, 0, d, stop_at=30).collect(),
         "multi_bfs_levels": lambda d: gq.multi_bfs_levels(g, [0], d).collect(),
@@ -340,14 +351,44 @@ def test_bfs_family_hop_jobs(spark):
     }
 
     def jobs(name, depth):
-        group = f"hop-jobs-{name}-{depth}"
-        sc.setJobGroup(group, group)
-        try:
-            runs[name](depth)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return _jobs(spark, f"hop-jobs-{name}-{depth}", lambda: runs[name](depth))[0]
 
     per_hop = {name: jobs(name, 4) - jobs(name, 3) for name in runs}
     assert per_hop["traverse_out_until"] == per_hop["bfs_levels"], per_hop
     assert per_hop["multi_bfs_levels"] == per_hop["bfs_levels"], per_hop
+
+
+def test_store_point_read_jobs(spark, tmp_path):
+    """An EdgeStore point read costs no schema-inference job (the store's
+    schema is declared): ``query_out`` is 1 job over a merged base, and 4
+    over the base plus one add batch and one tombstone batch (the appends'
+    newest-wins window and the anti-join mask), with the rows a model of the
+    writes predicts."""
+    from graphchidb_scala_spark.streaming.ingest import EdgeStore
+
+    st = EdgeStore(spark, str(tmp_path / "store"), num_buckets=8)
+    st.init_base(
+        spark.range(20_000).select(
+            F.lit(0).alias("etype"),
+            (F.col("id") % 2_000).alias("src"),
+            F.col("id").alias("dst"),
+            F.col("id").cast("double").alias("weight"),
+        )
+    )
+    model = {(0, 7, d): float(d) for d in range(7, 20_000, 2_000)}
+
+    def read(tag):
+        n, rows = _jobs(spark, f"point-read-{tag}", lambda: st.graph().query_out(7).collect())
+        assert sorted(tuple(r) for r in rows) == sorted(k + (w,) for k, w in model.items())
+        return n
+
+    assert read("merged") == 1
+    st.add_batch(
+        spark.createDataFrame(
+            [(0, 7, 99_999, 1.0), (0, 7, 7, 5.0)], "etype int, src bigint, dst bigint, weight double"
+        )
+    )
+    st.delete_batch(spark.createDataFrame([(0, 7, 2_007)], "etype int, src bigint, dst bigint"))
+    model.update({(0, 7, 99_999): 1.0, (0, 7, 7): 5.0})
+    del model[(0, 7, 2_007)]
+    assert read("appends") == 4

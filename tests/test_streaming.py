@@ -26,6 +26,72 @@ def test_insert_immediately_visible(store, spark):
     g = store.graph()
     assert g.edge_exists(0, 5, 6)
     assert g.num_edges() == 4
+    # a column the store does not declare is refused before anything is
+    # written, and the store stays readable with its declared columns
+    with pytest.raises(ValueError, match="does not declare"):
+        store.add_batch(
+            spark.createDataFrame(
+                [(0, 8, 9, 1.0, "red")], "etype int, src bigint, dst bigint, weight double, color string"
+            )
+        )
+    # a non-integral key column would be truncated or nulled by the cast,
+    # silently changing the key: refused, for adds and tombstones alike
+    with pytest.raises(ValueError, match="must be integral"):
+        store.add_batch(
+            spark.createDataFrame([(0, 8, 9.5, 1.0)], "etype int, src bigint, dst double, weight double")
+        )
+    with pytest.raises(ValueError, match="must be integral"):
+        store.delete_batch(spark.createDataFrame([("0", 1, 2)], "etype string, src bigint, dst bigint"))
+    assert store.edges().columns == ["etype", "src", "dst", "weight"]
+    assert store.graph().num_edges() == 4
+
+
+def test_store_needs_declared_schema(spark, tmp_path):
+    """A store reads and writes only through the ``_schema.json`` sidecar
+    ``init_base`` writes: a write before ``init_base`` raises, and so does a
+    read of a path that holds data but no sidecar."""
+    import os
+
+    edges = spark.createDataFrame([(0, 1, 2, 1.0)], "etype int, src bigint, dst bigint, weight double")
+    with pytest.raises(ValueError, match="_schema.json"):
+        EdgeStore(spark, str(tmp_path / "fresh")).add_batch(edges)
+    st = EdgeStore(spark, str(tmp_path / "st"), num_buckets=2)
+    st.init_base(edges)
+    os.remove(os.path.join(st.path, "_schema.json"))
+    with pytest.raises(ValueError, match="_schema.json"):
+        EdgeStore(spark, st.path, num_buckets=2).edges()
+
+
+@pytest.mark.parametrize(
+    "op, ddl",
+    [
+        ("delete", "etype int, src bigint, dst int"),
+        ("add", "etype int, src bigint, dst int, weight double"),
+        ("add", "etype int, src bigint, dst bigint, weight float"),
+        ("add", "etype bigint, src bigint, dst bigint, weight double"),
+    ],
+)
+def test_batch_dtypes_conform_to_declared_schema(store, spark, op, ddl):
+    """A batch whose key or property columns come in other widths than the
+    store declares is cast to the declared types on write: the appends'
+    parquet files agree on every type, so later reads and the compaction
+    neither fail on merging file schemas nor change the result."""
+    store.add_batch(
+        spark.createDataFrame([(0, 5, 6, 2.0)], "etype int, src bigint, dst bigint, weight double")
+    )
+    if op == "delete":
+        store.delete_batch(spark.createDataFrame([(0, 1, 3)], ddl))
+        want = [(0, 1, 2, 1.0), (0, 2, 3, 1.0), (0, 5, 6, 2.0)]
+    else:
+        store.add_batch(spark.createDataFrame([(0, 1, 3, 7.0)], ddl))
+        want = [(0, 1, 2, 1.0), (0, 1, 3, 7.0), (0, 2, 3, 1.0), (0, 5, 6, 2.0)]
+    assert sorted(tuple(r) for r in store.edges().collect()) == want
+    assert store.graph().num_edges() == len(want)
+    store.compact()
+    assert dict(store.edges().dtypes) == {
+        "etype": "int", "src": "bigint", "dst": "bigint", "weight": "double"
+    }
+    assert sorted(tuple(r) for r in store.edges().collect()) == want
 
 
 def test_newest_version_wins(store, spark):
@@ -45,9 +111,13 @@ def test_compaction_preserves_edges(store, spark):
     )
     store.add_batch(b1)
     before = sorted(tuple(r) for r in store.edges().collect())
+    # a second store object opened on the same path reads the same edges
+    twin = EdgeStore(spark, store.path, num_buckets=4)
+    assert sorted(tuple(r) for r in twin.edges().collect()) == before
     store.compact()
     after = sorted(tuple(r) for r in store.edges().collect())
     assert before == after
+    assert sorted(tuple(r) for r in twin.edges().collect()) == before
     # appends dir folded away
     assert not EdgeStore._exists(store.appends_dir)
 
@@ -85,6 +155,9 @@ def test_stream_from_events(store, spark, tmp_path):
     g = store.graph()
     assert g.edge_exists(1, 100, 200)
     assert g.edge_exists(1, 101, 201)
+    # the key-only batch lacks the declared weight column: it reads as NULL
+    got = {(r["src"], r["dst"], r["weight"]) for r in store.edges().filter("etype = 1").collect()}
+    assert got == {(100, 200, None), (101, 201, None)}
 
 
 def test_stream_neardup_ingest_invariant(spark, tmp_path):
@@ -727,30 +800,26 @@ def test_delete_maintains_degrees(spark, tmp_path):
 def test_bucket_local_compact_rewrites_only_dirty_buckets(spark, tmp_path):
     """Bucket-local compaction (judge r8 'What's missing #3'): only the
     ``_b=<k>`` directories whose buckets the appends touch are rewritten;
-    clean bucket files keep their inode mtime, and the resulting edge set
-    is identical to a full compact of a twin store."""
+    clean bucket files keep their inode mtime, and the edge set after the
+    compact is the one read before it."""
     import os
 
-    def mk(path):
-        st = EdgeStore(spark, path, num_buckets=8)
-        base = spark.createDataFrame(
+    st = EdgeStore(spark, str(tmp_path / "local"), num_buckets=8)
+    st.init_base(
+        spark.createDataFrame(
             [(0, s, s + 100, float(s)) for s in range(1, 33)],
             "etype int, src bigint, dst bigint, weight double",
         )
-        st.init_base(base)
-        return st
-
-    st = mk(str(tmp_path / "local"))
-    twin = mk(str(tmp_path / "full"))
-    # appends touch ONE src (one bucket): an upsert, a new edge, a tombstone
-    batch = spark.createDataFrame(
-        [(0, 5, 105, 99.0), (0, 5, 500, 1.0)],
-        "etype int, src bigint, dst bigint, weight double",
     )
-    tomb = spark.createDataFrame([(0, 5, 105)], "etype int, src bigint, dst bigint")
-    for s in (st, twin):
-        s.add_batch(batch)
-        s.delete_batch(tomb)
+    # appends touch ONE src (one bucket): an upsert, a new edge, a tombstone
+    st.add_batch(
+        spark.createDataFrame(
+            [(0, 5, 105, 99.0), (0, 5, 500, 1.0)],
+            "etype int, src bigint, dst bigint, weight double",
+        )
+    )
+    st.delete_batch(spark.createDataFrame([(0, 5, 105)], "etype int, src bigint, dst bigint"))
+    want = sorted(tuple(r) for r in st.edges().collect())
 
     def bucket_files(base_dir):
         out = {}
@@ -765,8 +834,7 @@ def test_bucket_local_compact_rewrites_only_dirty_buckets(spark, tmp_path):
         return out
 
     before = bucket_files(st.base_dir)
-    st.compact()                      # default: bucket-local
-    twin.compact(bucket_local=False)  # full rewrite
+    st.compact()
     after = bucket_files(st.base_dir)
     dirty = {
         d for d in set(before) | set(after) if before.get(d) != after.get(d)
@@ -776,7 +844,6 @@ def test_bucket_local_compact_rewrites_only_dirty_buckets(spark, tmp_path):
     assert clean and all(before[d] == after[d] for d in clean)
     assert not EdgeStore._exists(st.appends_dir)
     got = sorted(tuple(r) for r in st.edges().collect())
-    want = sorted(tuple(r) for r in twin.edges().collect())
     assert got == want
     # post-compact store stays fully usable: another batch + local compact
     st.add_batch(
@@ -826,10 +893,18 @@ def test_bucket_local_compact_removes_emptied_bucket_dir(spark, tmp_path):
     assert st.edges().filter(FF.col("src") == solo["src"]).count() == 0
 
 
-def test_probe_base_read_is_bucket_pruned(spark, tmp_path):
-    """The existing-key probe's base scan must carry a PartitionFilters
-    _b IN-set derived from the batch's srcs — at a 100 TB bucket count the
-    probe opens the touched directories, not every footer."""
+def test_probe_base_read_is_bucket_pruned(spark, tmp_path, monkeypatch):
+    """The existing-key probe reads a bounded slice of the base and never
+    sort-merge joins against it. A batch of at most ``_PROBE_IN_CHUNK``
+    srcs reaches the parquet scan as a pushed ``In(src`` filter plus a
+    ``_b`` PartitionFilters IN-set, so at a 100 TB bucket count the probe
+    opens the touched directories, not every footer. Past the chunk size
+    (a scattered batch) the pushed filter is an OR of gap-cut IN-lists,
+    never one global min/max range that the batch's spread defeats."""
+    import re as _re
+
+    from graphchidb_scala_spark.streaming import ingest
+
     st = EdgeStore(spark, str(tmp_path / "probe_prune"), num_buckets=8)
     st.init_base(
         spark.createDataFrame(
@@ -837,29 +912,35 @@ def test_probe_base_read_is_bucket_pruned(spark, tmp_path):
             "etype int, src bigint, dst bigint, weight double",
         )
     )
-    pre = st._union_raw(probe_srcs=[5])
-    plan = pre._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "_b" in plan
-    # the single-src bucket set is a single directory: exactly bucket(5)
-    b5 = (
-        spark.createDataFrame([(5,)], "src bigint")
-        .select(st._bucket_of().alias("b"))
-        .collect()[0]["b"]
-    )
-    import re as _re
 
-    pf = _re.search(r"PartitionFilters: \[[^\]]*\]", plan)
-    assert pf and "_b" in pf.group(0) and str(b5) in pf.group(0), plan[:800]
-    # pruned read still returns exactly bucket(5)'s rows
-    rows = pre.select("src").distinct().collect()
-    got_buckets = {
-        r["b"]
-        for r in spark.createDataFrame(rows)
-        .select(st._bucket_of().alias("b"))
-        .distinct()
+    def probe_plan(srcs):
+        bkeys = spark.createDataFrame(
+            [(0, s, s + 100) for s in srcs], "etype int, src bigint, dst bigint"
+        )
+        pre = st._existing_key_probe(bkeys, version=1 << 62)
+        assert sorted(r["src"] for r in pre.collect()) == sorted(srcs)
+        return pre._jdf.queryExecution().executedPlan().toString()
+
+    bucket = {
+        r["src"]: r["b"]
+        for r in spark.createDataFrame([(s,) for s in range(1, 33)], "src bigint")
+        .select("src", st._bucket_of().alias("b"))
         .collect()
     }
-    assert got_buckets == {b5}
+    plan = probe_plan([5, 6])
+    assert "In(src" in plan and "SortMergeJoin" not in plan, plan[:2000]
+    # the probe prunes to exactly the batch's buckets, no more
+    pf = _re.search(r"PartitionFilters: \[_b#\d+ IN \(([^)]*)\)\]", plan)
+    assert pf, plan[:2000]
+    assert {int(b) for b in pf.group(1).split(",")} == {bucket[5], bucket[6]}, pf.group(0)
+    assert bucket[5] != bucket[6]
+    # the pruned base read returns exactly the listed bucket's rows
+    got = sorted(r["src"] for r in st._read_base([bucket[5]]).collect())
+    assert got == [s for s in range(1, 33) if bucket[s] == bucket[5]]
+    # scattered arm: three id clusters, forced past the IN-chunk size
+    monkeypatch.setattr(ingest, "_PROBE_IN_CHUNK", 8)
+    plan = probe_plan([1, 2, 3, 4, 5, 12, 13, 14, 15, 25, 26, 27, 28, 29, 30])
+    assert "Or(In(src" in plan and "SortMergeJoin" not in plan, plan[:2000]
     # end-to-end: degree-maintained add_batch goes through the pruned probe
     st2 = EdgeStore(
         spark, str(tmp_path / "probe_prune_deg"), num_buckets=8, maintain_degrees=True
@@ -895,10 +976,12 @@ def test_maybe_compact_threshold(store, spark):
         "etype int, src bigint, dst bigint, weight double",
     )
     store.add_batch(big)
-    before = sorted((r["etype"], r["src"], r["dst"]) for r in store.edges().collect())
+    # 500 srcs dirty every bucket: the one compaction path rewrites them all
+    assert store._buckets(store._read_appends()) == list(range(store.num_buckets))
+    before = sorted(tuple(r) for r in store.edges().collect())
     assert store.maybe_compact(threshold=0.01) is True
     assert not EdgeStore._exists(store.appends_dir)
-    after = sorted((r["etype"], r["src"], r["dst"]) for r in store.edges().collect())
+    after = sorted(tuple(r) for r in store.edges().collect())
     assert before == after
 
 
@@ -1001,13 +1084,19 @@ def test_delete_vertex_idempotent_on_absent_vertex(spark, tmp_path):
     )
     st.delete_vertex(99)  # no incident edges: no-op, no error
     assert st.graph().num_edges() == 1
+    # deleting the last edge and compacting empties the store: it reads as
+    # an empty edge set in the declared columns
+    st.delete_vertex(1)
+    st.compact()
+    assert st.edges().columns == ["etype", "src", "dst", "weight"]
+    assert st.graph().num_edges() == 0
 
 
 def test_int_src_store_probe_and_degrees_exact(spark, tmp_path):
     """An IntegerType src is normalized to bigint at the write boundary, so
     the bucket layout matches the probe's hard-coded bigint hash frame
     (Spark murmur3 is dtype-sensitive: hash(int) != hash(bigint)). Before
-    the normalization, _union_raw's `_b IN (...)` partition filter pruned
+    the normalization, the probe's `_b IN (...)` partition filter pruned
     the WRONG directories for an int-src store, the existing-key probe
     missed every existing key, and the degree deltas double-counted
     (ADVICE r9, medium)."""

@@ -196,13 +196,6 @@ CHECKS = {
         ),
         ["Project", "!Exchange", "!Join"],
     ),
-    # online view: appends are deduped in a tiny window and masked into base
-    # via broadcast anti-join — the (at scale 100 TB) base side must never be
-    # the build/shuffle side of a sort-merge join
-    "edgestore_read_no_base_shuffle": (
-        lambda g, docs, emb: _edgestore_view(g),
-        ["BroadcastHashJoin", "!SortMergeJoin"],
-    ),
     # scale-safe near-dup blocking: hyperplane-LSH bucket as the block key,
     # never an all-pairs cartesian
     "embed_neardup_lsh_blocked": (
@@ -232,21 +225,6 @@ CHECKS = {
     "pagerank_iteration_single_shuffle": (
         lambda g, docs, emb: _first_superstep(lambda: pregel.pagerank(g, iterations=1)),
         ["!SortMergeJoin", "partial_sum"],
-    ),
-    # per-batch existing-key probe: the batch's src id set must reach the
-    # base parquet scan as a pushed IN filter (row-group pruning on the
-    # src-sorted layout) — the probe reads a bounded slice, not the full base
-    "edgestore_batch_probe_pruned": (
-        lambda g, docs, emb: _edgestore_batch_probe(g),
-        ["In(src", "!SortMergeJoin"],
-    ),
-    # the large-batch fallback arm: past the IN-chunk size the probe must
-    # still push gap-cut chunked IN-lists (OR of per-cluster ranges at the
-    # scan), not one global min/max that a scattered batch defeats — r4's
-    # full-base-rescan cliff
-    "edgestore_scattered_batch_probe_pruned": (
-        lambda g, docs, emb: _edgestore_scattered_batch_probe(g),
-        ["Or(In(src", "!SortMergeJoin"],
     ),
     # kNN graph: assignment + probe selection are projections; the ONLY
     # join is the cell-id equi hash join (quadratic term / cell count)
@@ -786,40 +764,6 @@ def _sliding_window_plan(g):
     return ev_mod.window_agg_sliding(ev, length_minutes=180, slide_minutes=60)
 
 
-def _edgestore_batch_probe(g):
-    import tempfile
-
-    from graphchidb_scala_spark.db import EDGE_KEY
-    from graphchidb_scala_spark.streaming.ingest import EdgeStore
-
-    store = EdgeStore(g.spark, tempfile.mkdtemp(prefix="audit_probe_"))
-    store.init_base(g.edges)
-    bkeys = g.edges.limit(20).select(*EDGE_KEY).distinct().localCheckpoint()
-    return store._existing_key_probe(bkeys, version=1 << 62)
-
-
-def _edgestore_scattered_batch_probe(g):
-    import tempfile
-    from unittest import mock
-
-    from graphchidb_scala_spark.db import EDGE_KEY
-    from graphchidb_scala_spark.streaming import ingest
-
-    store = ingest.EdgeStore(g.spark, tempfile.mkdtemp(prefix="audit_probe_sc_"))
-    store.init_base(g.edges)
-    # a batch scattered across the id space, forced past the chunk size so
-    # the audit exercises the same arm a >50k-src production batch takes
-    bkeys = (
-        g.edges.select(*EDGE_KEY)
-        .distinct()
-        .orderBy(F.md5(F.concat_ws(",", "src", "dst")))
-        .limit(40)
-        .localCheckpoint()
-    )
-    with mock.patch.object(ingest, "_PROBE_IN_CHUNK", 8):
-        return store._existing_key_probe(bkeys, version=1 << 62)
-
-
 def _ivf_indexed_probe(emb):
     import tempfile
 
@@ -913,17 +857,6 @@ def _first_superstep(run):
     finally:
         pregel._superstep = real
     return rounds[0]
-
-
-def _edgestore_view(g):
-    import tempfile
-
-    from graphchidb_scala_spark.streaming.ingest import EdgeStore
-
-    store = EdgeStore(g.spark, tempfile.mkdtemp(prefix="audit_store_"))
-    store.init_base(g.edges)
-    store.add_batch(g.edges.limit(100))
-    return store.edges()
 
 
 def main() -> None:
