@@ -25,6 +25,12 @@ order moved; per-entry numbers remain comparable with r13/r14.
 Setup (graph-view build + cache) is timed separately as "setup_cache" and
 excluded from the headline total — it is the ingest/compaction analogue, paid
 once per dataset, not per query.
+
+"compiles" lists, per entry and rep, the generated classes Janino compiled
+while it ran (Spark's CodegenMetrics, read once after each entry, outside the
+timed region). Rep 0 pays the entry's compiles; a later rep that still
+compiles has lost its codegen-cache reuse, which shows there as a
+deterministic count long before it is resolvable in the wall times.
 """
 
 from __future__ import annotations
@@ -159,6 +165,11 @@ def main() -> None:
     bench_t0 = time.time()
     errors: dict[str, str] = {}
     per_rep: list[dict[str, float]] = []
+    compiles: dict[str, list[int]] = {}
+    compile_count = (
+        spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount
+    )
     last_queries: dict = {}
     for rep in range(n_reps):
         # -------- per-rep fixtures (untimed): every rep starts from identical
@@ -315,6 +326,7 @@ def main() -> None:
             filter(None, os.environ.get("SPARK_GRAFT_BENCH_SKIP", "").split(","))
         )
         timings: dict[str, float] = {}
+        seen = compile_count()
         for name, fn in queries.items():
             if name in skip or name in _TRAILING_BLOCK:
                 continue
@@ -337,9 +349,12 @@ def main() -> None:
                 # a fast failure must not deflate the headline total — record
                 # no timing; the query surfaces in 'errors' with a null median
                 timings[name] = None
-                continue
-            timings[name] = round(time.time() - t, 3)
-            print(f"  rep{rep} {name}: {timings[name]:.1f}s", file=sys.stderr, flush=True)
+            else:
+                timings[name] = round(time.time() - t, 3)
+                print(f"  rep{rep} {name}: {timings[name]:.1f}s", file=sys.stderr, flush=True)
+            now = compile_count()
+            compiles.setdefault(name, []).append(now - seen)
+            seen = now
         per_rep.append(timings)
         for d in tmp_dirs:
             shutil.rmtree(d, ignore_errors=True)
@@ -372,6 +387,7 @@ def main() -> None:
     tail_per_rep: list[dict[str, float | None]] = [
         {} for _ in range(len(per_rep))
     ]
+    seen = compile_count()
     budget_hit = False
     for name in tail_names:
         fn = last_queries[name]
@@ -398,6 +414,9 @@ def main() -> None:
                     file=sys.stderr,
                     flush=True,
                 )
+            now = compile_count()
+            compiles.setdefault(name, []).append(now - seen)
+            seen = now
             if time.time() - bench_t0 > 2 * bench_budget and not budget_hit:
                 budget_hit = True
                 print(
@@ -421,6 +440,7 @@ def main() -> None:
         "unit": "sec",
         "queries": medians,
         "spread": spread,
+        "compiles": compiles,
         "reps": len(per_rep),
         "sf": sf,
     }

@@ -257,8 +257,9 @@ def connected_components_star(
     propagation: cc = min vertex id of the component. Returns DF(id, cc).
 
     Per round: two groupBy+join+distinct passes over the (shrinking) edge
-    set; convergence when the edge multiset is stable (checked with a cheap
-    count+sum aggregate on the already-checkpointed set)."""
+    set. The loop stops in the round whose edge set is a star forest, the
+    fixpoint, which one per-vertex aggregate over the already-checkpointed
+    set detects: no extra round runs just to see the set unchanged."""
     # build the symmetric closure from canonical (min, max) pairs: the
     # distinct then runs over half the rows undirected_edges would feed it,
     # and the swap union after it is shuffle-free
@@ -269,7 +270,6 @@ def connected_components_star(
         .distinct()
     )
     L = cut_lineage(canon.unionAll(canon.select(F.col("b").alias("a"), F.col("a").alias("b"))))
-    prev = None
     for _ in range(max_iterations):
         # large-star: attach strictly-larger neighbors of u to m(u) = min(N(u) ∪ {u})
         m = L.groupBy("a").agg(F.min("b").alias("_mn")).select(
@@ -300,18 +300,16 @@ def connected_components_star(
         L = cut_lineage(
             small.select("a", "b").unionAll(small.select(F.col("b"), F.col("a")))
         )
-        # collision-resistant fingerprint of the edge multiset: count plus a
-        # sum of 64-bit hashes — a changed set that preserves count AND the
-        # hash-sum is astronomically unlikely (a plain endpoint-sum is not:
-        # swapping (1,4),(2,3) for (1,3),(2,4) preserves it)
-        metric = L.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("s"),
-        ).collect()[0]
-        cur = (metric["n"], metric["s"])
-        if cur == prev:
+        # converged once L is a star forest centered on component minima
+        # (the next round would reproduce it): L has no duplicate rows, so
+        # that holds iff no vertex with a smaller neighbor has another one
+        bad = (
+            L.groupBy("a")
+            .agg(F.count(F.lit(1)).alias("_d"), F.min("b").alias("_mn"))
+            .filter((F.col("_d") > 1) & (F.col("_mn") < F.col("a")))
+        )
+        if bad.isEmpty():
             break
-        prev = cur
     # at convergence L holds symmetric star edges (v ↔ center); center = min
     stars = L.groupBy(F.col("a").alias("id")).agg(F.min("b").alias("c"))
     return (

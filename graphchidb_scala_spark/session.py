@@ -5,6 +5,22 @@ here the equivalent knobs are Spark SQL confs. ``configure`` holds the
 runtime-settable subset so the driver-supplied session behaves identically to
 one we build ourselves (timezone matters for oracle comparisons of
 timestamps; AQE matters for skew/coalesce at scale).
+
+Which session gets which conf:
+
+- ``_RUNTIME_CONFS``: every session, through ``configure``, including one a
+  caller passes in (``__spark_entry__.entry(spark)``). Among them ``spark.sql.codegen.useIdInClassName=false``:
+  generated classes lose their stage id, so stack traces show
+  ``GeneratedIteratorForCodegenStage`` without a number (``explain`` output
+  keeps its ``*(N)`` markers).
+- ``_STATIC_CONFS``: only sessions built by ``get_spark`` (``bench.py``,
+  ``perfbench/``, the oracle check) and the pytest session; a static conf
+  takes effect only when the JVM's SparkContext starts. A session passed
+  in keeps its own codegen cache size.
+
+Together they let an iterative operator compile each generated class once
+per session: a repeated call, or a loop of another length, reuses the
+classes already compiled instead of recompiling them (Janino, then the JIT).
 """
 
 from __future__ import annotations
@@ -34,6 +50,30 @@ _RUNTIME_CONFS = {
     # deserialize a "64 MB" build side into hundreds of MB per executor.
     # Joins that are measured-safe to broadcast use targeted hints
     # (F.broadcast / dedup._broadcast_if_small) instead.
+    # Generated class names without the whole-stage codegen stage id, so the
+    # same code is one CodeGenerator cache key wherever its stage sits in the
+    # plan (GeneratedIteratorForCodegenStage, not ...Stage13 vs ...Stage4).
+    # Measured on perfbench graph_analytics (4-core VM): with stage ids every
+    # pass Janino-compiled 208-219 classes, warm or not, and the JIT compiled
+    # them again: a pregel.pagerank call spent 4.2-5.9 s in JIT compilation
+    # of its 6.6-9.0 CPU s. With this and _STATIC_CONFS, the first pass after
+    # warm-up compiles 30 and later passes 0-2; pagerank then costs
+    # 3.4-5.1 CPU s, 1.3-2.9 s of it JIT.
+    "spark.sql.codegen.useIdInClassName": "false",
+}
+
+# Static confs, fixed when the JVM's SparkContext starts: applied by
+# get_spark and by the test session, never to a session passed in.
+_STATIC_CONFS = {
+    # CodeGenerator's compiled-class cache is an LRU of 100 entries by
+    # default, with one entry per class and class loader (the Spark driver
+    # and the tasks each load their own copy). One graph_analytics pass
+    # holds 192-194 entries, so at 100 a pass evicted its own classes before
+    # reusing them; 2000 holds a pass with room for other work. Metaspace
+    # after three passes: 166 MB against 171 MB at 100 entries (the evicting
+    # cache kept loading fresh copies); after two reps of bench.py at
+    # sf0.01, which keep 722 entries, 186 MB against 180 MB.
+    "spark.sql.codegen.cache.maxEntries": "2000",
 }
 
 
@@ -83,5 +123,6 @@ def get_spark(
         # (measured: 30s interval made star-CC 2x slower than 10min). 5min
         # keeps long sessions clean while staying out of individual queries.
         .config("spark.cleaner.periodicGC.interval", "5min")
+        .config(map=_STATIC_CONFS)
     )
     return configure(builder.getOrCreate())

@@ -141,7 +141,9 @@ class EdgeStore:
     def init_base(self, edges: DataFrame) -> None:
         """Write the base and declare the store's schema: ``edges``' columns
         with src cast to bigint, plus ``_v bigint`` and ``_del boolean``,
-        written to ``_schema.json`` at the store root."""
+        written to ``_schema.json`` at the store root. Appends (edge and
+        degree) of an earlier base are dropped: they would otherwise stay
+        visible over the new one."""
         edges = edges.withColumn("src", F.col("src").cast("bigint"))
         (
             edges.withColumn("_v", F.lit(0).cast("long"))
@@ -152,6 +154,8 @@ class EdgeStore:
             .partitionBy("_b")
             .parquet(self.base_dir)
         )
+        self._rm(self.appends_dir)
+        self._rm(self.deg_appends_dir)
         self._schema = StructType(
             [StructField(f.name, f.dataType) for f in edges.schema]
             + [StructField("_v", LongType()), StructField("_del", BooleanType())]

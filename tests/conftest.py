@@ -3,7 +3,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import SparkSession
 
-from graphchidb_scala_spark.session import configure
+from graphchidb_scala_spark.session import _STATIC_CONFS, configure
 
 
 @pytest.fixture(scope="session")
@@ -15,6 +15,7 @@ def spark() -> SparkSession:
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config(map=_STATIC_CONFS)
         .getOrCreate()
     )
     yield configure(s)

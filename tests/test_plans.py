@@ -358,6 +358,38 @@ def test_bfs_family_hop_jobs(spark):
     assert per_hop["multi_bfs_levels"] == per_hop["bfs_levels"], per_hop
 
 
+def test_walks_stop_once_every_walk_ended(spark):
+    """``random_walks`` ends its hop loop at the first hop no walk survives:
+    on a 4-vertex path, 20 hops run the jobs of 4 (3 live hops and the empty
+    one) and give the same rows. Hops past the last walk show as extra jobs."""
+    from graphchidb_scala_spark.operators import graph_queries as gq
+
+    g = GraphDB(spark.createDataFrame([(0, i, i + 1) for i in range(3)], "etype int, src bigint, dst bigint"))
+    runs = {
+        n: _jobs(spark, f"walk-stop-{n}", lambda n=n: gq.random_walks(g, [0, 1], walk_length=n).collect())
+        for n in (4, 20)
+    }
+    assert runs[20][0] == runs[4][0], runs
+    assert sorted(tuple(r) for r in runs[20][1]) == [
+        (0, 0, 0), (0, 1, 1), (0, 2, 2), (0, 3, 3), (1, 0, 1), (1, 1, 2), (1, 2, 3)
+    ]
+
+
+def test_star_cc_stops_at_the_fixpoint(spark):
+    """Star connected components stop in the round that reaches the star
+    forest: on an input that already is one (two stars centered on their
+    minima), the default call runs the jobs of a one-round call. A round
+    that only confirms the edge set is unchanged shows as extra jobs."""
+    from graphchidb_scala_spark.operators import pregel
+
+    rows = [(0, 0, v) for v in range(1, 6)] + [(0, 10, v) for v in range(11, 15)]
+    g = GraphDB(spark.createDataFrame(rows, "etype int, src bigint, dst bigint"))
+    one, _ = _jobs(spark, "cc-star-one", lambda: pregel.connected_components_star(g, max_iterations=1).collect())
+    full, got = _jobs(spark, "cc-star-full", lambda: pregel.connected_components(g).collect())
+    assert full == one, (full, one)
+    assert sorted(tuple(r) for r in got) == [(v, 0) for v in range(6)] + [(v, 10) for v in range(10, 15)]
+
+
 def test_store_point_read_jobs(spark, tmp_path):
     """An EdgeStore point read costs no schema-inference job (the store's
     schema is declared): ``query_out`` is 1 job over a merged base, and 4
@@ -392,3 +424,67 @@ def test_store_point_read_jobs(spark, tmp_path):
     model.update({(0, 7, 99_999): 1.0, (0, 7, 7): 5.0})
     del model[(0, 7, 2_007)]
     assert read("appends") == 4
+
+
+def _compiles(spark, fn):
+    """Janino compiles (generated classes not found in Spark's codegen
+    cache) while ``fn()`` runs."""
+    metric = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    before = metric.METRIC_COMPILATION_TIME().getCount()
+    fn()
+    return metric.METRIC_COMPILATION_TIME().getCount() - before
+
+
+@pytest.fixture(scope="module")
+def codegen_db(spark):
+    import random
+
+    rng = random.Random(7)
+    pairs = {(rng.randrange(200), rng.randrange(200)) for _ in range(800)}
+    edges = spark.createDataFrame(
+        [(0, s, d) for s, d in sorted(pairs) if s != d], "etype int, src bigint, dst bigint"
+    ).cache()
+    edges.count()
+    return GraphDB(edges)
+
+
+def test_repeated_pass_compiles_nothing(spark, codegen_db):
+    """After one pass of the loop operators, a second identical pass reuses
+    every generated class of the first: class names carry no codegen stage
+    id and the codegen cache holds a whole pass, so no call of the repeat
+    Janino-compiles (with stage-id names and a 100-entry cache each call
+    recompiled dozens of classes, and the JIT compiled them again)."""
+    from graphchidb_scala_spark.operators import graph_queries as gq, pregel
+
+    g = codegen_db
+    calls = {
+        "pagerank": lambda: pregel.pagerank(g, iterations=2).collect(),
+        "connected_components": lambda: pregel.connected_components(g).collect(),
+        "multi_bfs_levels": lambda: gq.multi_bfs_levels(g, [1, 2, 3], max_depth=3).collect(),
+        "random_walks": lambda: gq.random_walks(g, list(range(20)), walk_length=2).collect(),
+    }
+    for call in calls.values():
+        call()
+    assert {name: _compiles(spark, call) for name, call in calls.items()} == dict.fromkeys(calls, 0)
+
+
+def test_walk_length_reuses_codegen(spark, codegen_db):
+    """Random walks carry the step as a column, not a per-hop literal, so 6
+    hops after 2 compile nothing new."""
+    from graphchidb_scala_spark.operators import graph_queries as gq
+
+    def walks(n):
+        return gq.random_walks(codegen_db, list(range(20)), walk_length=n).collect()
+
+    walks(2)
+    assert _compiles(spark, lambda: walks(6)) == 0
+
+
+def test_pagerank_rounds_reuse_codegen(spark, codegen_db):
+    """PageRank over 7 rounds after 2 compiles only the few classes of the
+    round shapes a 2-round call never reaches: 6 measured, 3 per class
+    loader (driver and tasks). Stage-id class names recompile every round."""
+    from graphchidb_scala_spark.operators import pregel
+
+    pregel.pagerank(codegen_db, iterations=2).collect()
+    assert _compiles(spark, lambda: pregel.pagerank(codegen_db, iterations=7).collect()) <= 6

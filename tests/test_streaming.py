@@ -772,6 +772,19 @@ def test_compaction_purges_tombstones(store, spark):
     assert not EdgeStore._exists(store.appends_dir)
 
 
+def test_init_base_drops_earlier_appends(spark, tmp_path):
+    """Re-initialising a store replaces its whole edge set: appends written
+    over the earlier base, edge and degree alike, do not survive."""
+    ddl = "etype int, src bigint, dst bigint"
+    st = EdgeStore(spark, str(tmp_path / "reinit"), num_buckets=2, maintain_degrees=True)
+    st.init_base(spark.createDataFrame([(0, 1, 2)], ddl))
+    st.add_batch(spark.createDataFrame([(0, 3, 4)], ddl))
+    st.init_base(spark.createDataFrame([(0, 5, 6)], ddl))
+    assert [tuple(r) for r in st.edges().collect()] == [(0, 5, 6)]
+    got = {r["id"]: (r["in_deg"], r["out_deg"]) for r in st.degrees_view().collect()}
+    assert got == {5: (0, 1), 6: (1, 0)}
+
+
 def test_delete_maintains_degrees(spark, tmp_path):
     st = EdgeStore(spark, str(tmp_path / "deg_del"), num_buckets=2, maintain_degrees=True)
     st.init_base(
