@@ -31,6 +31,12 @@ while it ran (Spark's CodegenMetrics, read once after each entry, outside the
 timed region). Rep 0 pays the entry's compiles; a later rep that still
 compiles has lost its codegen-cache reuse, which shows there as a
 deterministic count long before it is resolvable in the wall times.
+
+"jobs" lists, per entry and rep, the Spark jobs it ran: each entry runs
+under its own job group, set and read outside the timed region. Like the
+compile counts, a job count moves deterministically where a wall time
+needs paired runs to resolve. The count comes from Spark's status store,
+which keeps the last spark.ui.retainedJobs (1000) jobs.
 """
 
 from __future__ import annotations
@@ -170,6 +176,17 @@ def main() -> None:
         spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
         .METRIC_COMPILATION_TIME().getCount
     )
+    jobs: dict[str, list[int]] = {}
+    sc = spark.sparkContext
+
+    def start_jobs(name: str, rep: int) -> str:
+        group = f"bench-{name}-{rep}"
+        sc.setJobGroup(group, name)
+        return group
+
+    def record_jobs(name: str, group: str) -> None:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.setdefault(name, []).append(len(sc.statusTracker().getJobIdsForGroup(group)))
     last_queries: dict = {}
     for rep in range(n_reps):
         # -------- per-rep fixtures (untimed): every rep starts from identical
@@ -339,6 +356,7 @@ def main() -> None:
             # ContextCleaner drains its reference queue asynchronously after the
             # GC; give it the (untimed) gap instead of the next query's stages
             time.sleep(0.5)
+            group = start_jobs(name, rep)
             t = time.time()
             try:
                 fn()
@@ -352,6 +370,7 @@ def main() -> None:
             else:
                 timings[name] = round(time.time() - t, 3)
                 print(f"  rep{rep} {name}: {timings[name]:.1f}s", file=sys.stderr, flush=True)
+            record_jobs(name, group)
             now = compile_count()
             compiles.setdefault(name, []).append(now - seen)
             seen = now
@@ -396,6 +415,7 @@ def main() -> None:
                 break
             spark.sparkContext._jvm.System.gc()
             time.sleep(0.5)
+            group = start_jobs(name, rep)
             t = time.time()
             try:
                 fn()
@@ -414,6 +434,7 @@ def main() -> None:
                     file=sys.stderr,
                     flush=True,
                 )
+            record_jobs(name, group)
             now = compile_count()
             compiles.setdefault(name, []).append(now - seen)
             seen = now
@@ -441,6 +462,7 @@ def main() -> None:
         "queries": medians,
         "spread": spread,
         "compiles": compiles,
+        "jobs": jobs,
         "reps": len(per_rep),
         "sf": sf,
     }

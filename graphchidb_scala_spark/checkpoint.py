@@ -19,17 +19,31 @@ single-node runs (tests, bench, local[32]) pay no distributed-FS cost while
 a cluster deployment opts in with one line:
 
     spark.sparkContext.setCheckpointDir("hdfs:///tmp/graphchidb-ckpt")
+
+A loop that needs a figure of each cut (a level's size, a hit flag) passes
+``stats``: aggregate columns observed on the rows as the cut materializes
+them (``DataFrame.observe``), so the figure comes from the cut's own job,
+the way Pregelix computes a superstep's aggregates inside the superstep,
+instead of a second job over the cut rows: the stats cost no job beyond
+the cut's own, with either cut kind.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation, Row
 from pyspark.storagelevel import StorageLevel
+
+#: Bound on the wait for a cut's observed stats after its job has ended.
+_STATS_WAIT_S = 60
 
 
 def cut_lineage(
-    df: DataFrame, eager: bool = True, spill_only: bool = False
-) -> DataFrame:
+    df: DataFrame,
+    eager: bool = True,
+    spill_only: bool = False,
+    stats: list[Column] | None = None,
+):
     """Materialize ``df`` and truncate its lineage/logical plan.
 
     Uses a reliable ``checkpoint`` when the SparkContext has a checkpoint
@@ -44,10 +58,36 @@ def cut_lineage(
     deserializing the 130M-row crossing-candidate checkpoint under the
     repair verify's resident broadcasts; DISK_ONLY streams it instead
     (reliable ``checkpoint`` is already on-disk, so the flag is a no-op
-    there)."""
+    there).
+
+    With ``stats`` (aggregate columns; needs ``eager``) it returns
+    ``(cut, row)``: ``row`` holds the aggregates over the cut rows, observed
+    by the materializing job itself. The row reaches the driver through the
+    listener bus just after the job ends; one that has not arrived within
+    ``_STATS_WAIT_S`` raises instead of blocking forever."""
+    if stats is not None:
+        if not eager:
+            raise ValueError("cut_lineage(stats=...) needs an eager cut")
+        obs = Observation()
+        df = df.observe(obs, *stats)
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=eager)
-    if spill_only:
-        return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.DISK_ONLY)
-    return df.localCheckpoint(eager=eager)
+        cut = df.checkpoint(eager=eager)
+    elif spill_only:
+        cut = df.localCheckpoint(eager=eager, storageLevel=StorageLevel.DISK_ONLY)
+    else:
+        cut = df.localCheckpoint(eager=eager)
+    if stats is None:
+        return cut
+    # The row arrives through the listener bus, shortly after the job ends;
+    # Observation.get would wait for it without a bound.
+    jvm = sc._jvm
+    try:
+        jvm.scala.concurrent.Await.result(
+            obs._jo.future(), jvm.scala.concurrent.duration.Duration.create(_STATS_WAIT_S, "s")
+        )
+    except Py4JJavaError as exc:
+        raise RuntimeError(
+            f"the cut's observed stats did not arrive within {_STATS_WAIT_S} s"
+        ) from exc
+    return cut, Row(**obs.get)

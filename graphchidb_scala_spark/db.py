@@ -35,6 +35,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from graphchidb_scala_spark.session import local_table
+
 #: 4-bit edge types; 0xf reserved as tombstone in the reference
 #: (VertexIdTranslate.java:152) — never user-visible here.
 MAX_EDGE_TYPE = 14
@@ -191,9 +193,7 @@ class GraphDB:
             k = keys.select("etype", "src", "dst")
         else:
             rows = [(int(t), int(s), int(d)) for t, s, d in keys]
-            k = F.broadcast(
-                self.spark.createDataFrame(rows, "etype int, src bigint, dst bigint")
-            )
+            k = F.broadcast(local_table(self.spark, "etype int, src bigint, dst bigint", *zip(*rows)))
         return e.join(k, ["etype", "src", "dst"], "semi")
 
     def update_edge(self, etype: int, src: int, dst: int, column: str, value) -> "GraphDB":

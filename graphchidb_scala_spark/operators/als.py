@@ -9,6 +9,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from graphchidb_scala_spark.session import local_table
+
+
 def train_als(
     ratings: DataFrame,
     rank: int = 10,
@@ -70,7 +73,7 @@ def rmse(model, ratings: DataFrame, user_col: str = "src", item_col: str = "dst"
 def recommend_for_user(model, user: int, k: int = 20) -> DataFrame:
     """Top-k items for one user — reference ``recommendForUser`` pattern
     (MovieDatabase.scala:155-162: score all, sort desc, take 20)."""
-    users = model.userFactors.sparkSession.createDataFrame([(int(user),)], "src int")
+    users = local_table(model.userFactors.sparkSession, "src int", [int(user)])
     recs = model.recommendForUserSubset(users, k)
     return recs.select(F.explode("recommendations").alias("r")).select(
         F.col("r.dst").cast("bigint").alias("id"), F.col("r.rating").alias("score")

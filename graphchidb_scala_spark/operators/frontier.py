@@ -39,9 +39,16 @@ from pyspark.sql import Column, DataFrame, functions as F
 from graphchidb_scala_spark.checkpoint import cut_lineage
 
 from graphchidb_scala_spark.db import GraphDB
+from graphchidb_scala_spark.session import local_table
 
 #: Same spirit as the reference's sparse→dense switch (FrontierQueries.scala:59).
 BROADCAST_THRESHOLD = 100_000
+
+
+def _hinted(df: DataFrame, size: int | None) -> DataFrame:
+    """``df`` broadcast-hinted when its known ``size`` is below
+    :data:`BROADCAST_THRESHOLD`."""
+    return F.broadcast(df) if size is not None and size < BROADCAST_THRESHOLD else df
 
 
 def hop_levels(
@@ -52,33 +59,41 @@ def hop_levels(
     keys: Sequence[str] = ("id",),
     hit: Column | DataFrame | None = None,
 ) -> tuple[list[DataFrame], bool]:
-    """The hop loop of the BFS family. ``level0`` is a cut, distinct
-    DF(*keys) of ``size`` rows; ``keys`` ends in ``id`` and any key before
-    it (a BFS's ``seed``) rides along. Each hop broadcast-hints the frontier
-    below :data:`BROADCAST_THRESHOLD`, joins it to ``edges`` on
-    ``src = id``, keeps the distinct ``(keys…, id = dst)`` rows not yet
-    visited, cuts them once and runs one stats job for the level's size and
-    ``hit``: a predicate on the level's rows, or a DF(id) the level meets.
+    """The hop loop of the BFS family. ``level0`` is a cut or local,
+    distinct DF(*keys, level) of ``size`` rows at ``level`` 0; ``keys`` ends
+    in ``id`` and any key before it (a BFS's ``seed``) rides along. Each hop
+    joins the frontier to ``edges`` on ``src = id`` and keeps the distinct
+    ``(keys…, id = dst, level + 1)`` rows not yet visited. The frontier and
+    the visited set are broadcast-hinted below :data:`BROADCAST_THRESHOLD`
+    from their counted sizes, so the join strategies, and with them the
+    generated code, stay the same at every depth; the level is a column,
+    not a per-hop literal, for the same reason. One cut per hop
+    materializes the level and observes its size and ``hit``: a predicate
+    on the level's rows, or a DF(id) the level meets, joined inside the
+    cut.
 
     Returns ``[level0, level1, …]`` up to the last non-empty level and
     whether that level hit; the loop stops on an empty level, a hit or
     ``max_hops``."""
-    keys, levels = list(keys), [level0]
+    keys, levels, seen = list(keys), [level0], size
+    probe_hit = isinstance(hit, DataFrame)
+    flag = F.col("_hit") if probe_hit else hit
     for _ in range(max_hops):
-        fr = F.broadcast(levels[-1]) if size < BROADCAST_THRESHOLD else levels[-1]
-        nxt = cut_lineage(
-            edges.join(fr.withColumnRenamed("id", "src"), "src")
-            .select(*keys[:-1], F.col("dst").alias("id"))
+        nxt = (
+            edges.join(_hinted(levels[-1], size).withColumnRenamed("id", "src"), "src")
+            .select(*keys[:-1], F.col("dst").alias("id"), (F.col("level") + 1).alias("level"))
             .distinct()
-            .join(reduce(DataFrame.unionAll, levels), keys, "left_anti")
+            .join(_hinted(reduce(DataFrame.unionAll, levels), seen), keys, "left_anti")
         )
-        probe, flag = nxt, hit
-        if isinstance(hit, DataFrame):
-            probe, flag = nxt.join(hit.withColumn("_hit", F.lit(True)), "id", "left"), F.col("_hit")
-        size, *met = probe.agg(F.count(F.lit(1)), *([] if flag is None else [F.max(flag)])).first()
+        if probe_hit:
+            nxt = nxt.join(hit.withColumn("_hit", F.lit(True)), "id", "left")
+        nxt, (size, *met) = cut_lineage(
+            nxt, stats=[F.count(F.lit(1)), *([] if flag is None else [F.max(flag)])]
+        )
         if size == 0:
             break
-        levels.append(nxt)
+        seen += size
+        levels.append(nxt.drop("_hit") if probe_hit else nxt)
         if any(met):
             return levels, True
     return levels, False
@@ -111,10 +126,8 @@ class Frontier:
     def of(cls, db: GraphDB, vertices: Sequence[int]) -> "Frontier":
         """Singleton/literal frontier — reference ``queryVertex``
         (FrontierQueries.scala:41-43)."""
-        spark = db.spark
         uniq = sorted({int(v) for v in vertices})
-        ids = spark.createDataFrame([(v,) for v in uniq], "id bigint")
-        return cls(db, ids, size=len(uniq), assume_distinct=True)
+        return cls(db, local_table(db.spark, "id bigint", uniq), size=len(uniq), assume_distinct=True)
 
     # ------------------------------------------------------------- materialize
 
@@ -122,13 +135,11 @@ class Frontier:
         """Pin the frontier and learn its size (drives the broadcast decision,
         and — like the reference's per-hop frontier arrays — cuts lineage so
         iterative traversals don't re-execute prior hops)."""
-        ids = cut_lineage(self.ids)
-        return Frontier(self.db, ids, size=ids.count(), assume_distinct=True)
+        ids, (size,) = cut_lineage(self.ids, stats=[F.count(F.lit(1))])
+        return Frontier(self.db, ids, size=size, assume_distinct=True)
 
     def _hinted(self) -> DataFrame:
-        if self.size is not None and self.size < BROADCAST_THRESHOLD:
-            return F.broadcast(self.ids)
-        return self.ids
+        return _hinted(self.ids, self.size)
 
     # -------------------------------------------------------------- traversal
 
@@ -182,8 +193,9 @@ class Frontier:
         of :func:`hop_levels`. A target already in this frontier is never
         newly reached, so it gives None."""
         fr = self.materialize()
+        level0 = fr.ids.withColumn("level", F.lit(0).cast("bigint"))
         levels, hit = hop_levels(
-            self.db._typed(etype), fr.ids, fr.size, max_hops, hit=F.col("id") == int(target)
+            self.db._typed(etype), level0, fr.size, max_hops, hit=F.col("id") == int(target)
         )
         return len(levels) - 1 if hit else None
 

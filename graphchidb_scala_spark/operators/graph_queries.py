@@ -18,7 +18,6 @@ from collections.abc import Sequence
 from functools import reduce
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from graphchidb_scala_spark.checkpoint import cut_lineage
@@ -26,6 +25,7 @@ from graphchidb_scala_spark.checkpoint import cut_lineage
 from graphchidb_scala_spark.db import GraphDB
 from graphchidb_scala_spark.operators import pregel
 from graphchidb_scala_spark.operators.frontier import Frontier, hop_levels
+from graphchidb_scala_spark.session import local_table
 
 
 def friends_of_friends(db: GraphDB, vertex: int, etype: int | None = None) -> DataFrame:
@@ -107,7 +107,7 @@ def shortest_path_length(
     source, target = int(source), int(target)
 
     def _dist(d) -> DataFrame:
-        return spark.createDataFrame([(d,)], "dist bigint")
+        return local_table(spark, "dist bigint", [d])
 
     if max_depth < 1:
         return _dist(0 if source == target else None)
@@ -116,15 +116,15 @@ def shortest_path_length(
     e = db._typed(etype)
     # the reference's dst-in-neighbor hash set; here a checkpointed DF so a
     # celebrity target (100M in-neighbors at 100 TB) still fits — the per-hop
-    # probe is a join, broadcast by AQE only when the set is actually small
-    tin = (
-        cut_lineage(e.filter(F.col("dst") == target)
-        .select(F.col("src").alias("id"))
-        .distinct())
+    # probe is a join, broadcast by AQE only when the set is actually small.
+    # Whether the source is among them is observed by the cut's own job.
+    tin, (adjacent,) = cut_lineage(
+        e.filter(F.col("dst") == target).select(F.col("src").alias("id")).distinct(),
+        stats=[F.max(F.col("id") == source)],
     )
-    if tin.filter(F.col("id") == source).limit(1).count() > 0:
+    if adjacent:
         return _dist(1)
-    seed = cut_lineage(spark.createDataFrame([(source,)], "id bigint"))
+    seed = local_table(spark, "id bigint, level bigint", [source], [0])
     # a level meeting the in-neighbor set proves dist = its depth + 1: every
     # ≤max_depth path ends with an edge from that set, so the first meet is
     # the minimum distance
@@ -146,12 +146,12 @@ def bfs_levels(
     that vertex is reached (the ``FinishQueryException`` early-exit,
     emulated per-hop per SURVEY §7.4); the partial tree still holds every
     vertex at levels ≤ level(stop_at). Returns DF(id, level)."""
-    seed = cut_lineage(db.spark.createDataFrame([(int(source),)], "id bigint"))
+    seed = local_table(db.spark, "id bigint, level bigint", [int(source)], [0])
     if stop_at is not None and int(stop_at) == int(source):
-        return _numbered([seed])
+        return seed
     hit = None if stop_at is None else F.col("id") == int(stop_at)
     levels, _ = hop_levels(db._typed(etype), seed, 1, max_depth, hit=hit)
-    return _numbered(levels)
+    return reduce(DataFrame.unionAll, levels)
 
 
 def multi_bfs_levels(
@@ -164,27 +164,9 @@ def multi_bfs_levels(
     motivated MultiBFS falls out of relational batching. Returns
     DF(seed, id, level)."""
     s = np.asarray(seeds, dtype=np.int64)
-    seed_df = cut_lineage(_long_table(db.spark, seed=s, id=s))
+    seed_df = local_table(db.spark, "seed bigint, id bigint, level bigint", s, s, np.zeros_like(s))
     levels, _ = hop_levels(db._typed(etype), seed_df, len(s), max_depth, keys=("seed", "id"))
-    return _numbered(levels)
-
-
-def _long_table(spark, **cols) -> DataFrame:
-    """A bigint table from driver-side int arrays, one column per keyword,
-    sent over Arrow as a pandas frame. A list of Python rows would be
-    re-pickled in Python workers by the first job that scans it: cutting a
-    seed table of 1,200-10,000 rows took 0.21-0.29 s that way against
-    0.08-0.16 s over Arrow (4-core VM)."""
-    pdf = pd.DataFrame({k: np.asarray(v, dtype=np.int64) for k, v in cols.items()})
-    return spark.createDataFrame(pdf, ", ".join(f"{k} bigint" for k in cols))
-
-
-def _numbered(levels: list[DataFrame]) -> DataFrame:
-    """BFS levels as one table with a ``level`` column: a lazy union of the
-    already-cut per-hop levels."""
-    return reduce(DataFrame.unionAll, [
-        lv.withColumn("level", F.lit(d).cast("bigint")) for d, lv in enumerate(levels)
-    ])
+    return reduce(DataFrame.unionAll, levels)
 
 
 def sssp_parents(
@@ -232,7 +214,7 @@ def shortest_path_route(
     levels = cut_lineage(bfs_levels(db, source, max_depth, etype, stop_at=target))
     rows = levels.filter(F.col("id") == int(target)).select("level").limit(1).collect()
     if not rows:  # target not reached within the bound
-        return spark.createDataFrame([], "step bigint, id bigint")
+        return local_table(spark, "step bigint, id bigint")
     lvl = int(rows[0]["level"])
     path: list[tuple[int, int]] = [(lvl, int(target))]
     e = db._typed(etype).select("src", "dst")
@@ -254,12 +236,12 @@ def shortest_path_route(
             .collect()[0]
         )
         if parent_row["p"] is None:  # cannot happen on a complete ancestor level
-            return spark.createDataFrame([], "step bigint, id bigint")
+            return local_table(spark, "step bigint, id bigint")
         node = int(parent_row["p"])
         path.append((step - 1, node))
     if path[-1] != (0, int(source)):
-        return spark.createDataFrame([], "step bigint, id bigint")
-    return spark.createDataFrame(sorted(path), "step bigint, id bigint")
+        return local_table(spark, "step bigint, id bigint")
+    return local_table(spark, "step bigint, id bigint", *zip(*sorted(path)))
 
 
 def ego_net(db: GraphDB, vertex: int, etype: int | None = None) -> DataFrame:
@@ -533,7 +515,7 @@ def weighted_sssp(
     through the driver."""
     dist = pregel._run(
         _weighted_edges(db, etype, weight_col),
-        pregel._state(db.spark.createDataFrame([(int(source), 0.0)], "id bigint, d double")),
+        pregel._state(local_table(db.spark, "id bigint, d double", [int(source)], [0.0])),
         int(iterations),
         msg=[(F.col("d") + F.col("_w")).alias("d")],
         update=[F.min("d").alias("d")],
@@ -838,7 +820,9 @@ def random_walks(
     starts = np.asarray(seeds, dtype=np.int64)
     ids = np.repeat(starts, n_walks)
     walk_ids = ids * n_walks + np.tile(np.arange(n_walks, dtype=np.int64), len(starts))
-    cur = cut_lineage(_long_table(spark, walk_id=walk_ids, step=np.zeros_like(ids), id=ids))
+    cur = cut_lineage(
+        local_table(spark, "walk_id bigint, step bigint, id bigint", walk_ids, np.zeros_like(ids), ids)
+    )
     visited = [cur]
     e = db._typed(etype).select("src", "dst")
     # one grouped-adjacency build for all hops; cut so each hop reads the
@@ -872,8 +856,8 @@ def random_walks(
                 )
             )["dst"].alias("id"),
         )
-        cur = cut_lineage(nxt)
-        if cur.isEmpty():
+        cur, (live,) = cut_lineage(nxt, stats=[F.count(F.lit(1))])
+        if live == 0:
             break
         visited.append(cur)
     out = visited[0]
@@ -886,11 +870,13 @@ def node2vec_step(
     e: DataFrame,
     und: DataFrame,
     cur: DataFrame,
-    step: int,
     p: float,
     q: float,
 ) -> DataFrame:
-    """One node2vec hop: frontier (walk_id, id, prev) → next frontier.
+    """One node2vec hop: frontier (walk_id, step, id, prev) → next frontier,
+    each walk one step on. The step rides along as a column, not a per-hop
+    literal, so every hop and every walk length runs the same generated
+    code.
 
     Candidates = frontier ⋈ edges on the current vertex; the second-order
     bias needs "is dst a neighbor of prev", probed with a LEFT equi-join
@@ -902,8 +888,11 @@ def node2vec_step(
     Selection = one groupBy(walk_id) argmin of the weighted race key.
     Exposed module-level so the audit exercises the exact production hop."""
     cand = e.join(
-        cur.select(F.col("id").alias("src"), "walk_id", "prev"), "src"
-    ).select("walk_id", F.col("src").alias("cur_id"), "prev", "dst")
+        cur.select(
+            F.col("id").alias("src"), "walk_id", (F.col("step") + 1).alias("step"), "prev"
+        ),
+        "src",
+    ).select("walk_id", "step", F.col("src").alias("cur_id"), "prev", "dst")
     # prev IS NOT NULL guards step 1: least/greatest skip NULLs, so a
     # NULL prev would degenerate the key to (dst, dst) and match
     # self-loop rows, giving first-hop candidates with self-loops the
@@ -916,6 +905,7 @@ def node2vec_step(
         "left",
     ).select(
         "walk_id",
+        "step",
         "cur_id",
         "prev",
         "dst",
@@ -926,18 +916,19 @@ def node2vec_step(
     )
     h = F.conv(
         F.substring(
-            F.md5(F.concat_ws(":", F.col("walk_id"), F.lit(step), F.col("dst"))), 1, 15
+            F.md5(F.concat_ws(":", F.col("walk_id"), F.col("step"), F.col("dst"))), 1, 15
         ),
         16,
         10,
     ).cast("double")
     key = h / (F.lit(float(2**60)) * F.col("w"))
     return (
-        probe.select("walk_id", F.col("cur_id"), "dst", key.alias("k"))
-        .groupBy("walk_id")
+        probe.select("walk_id", "step", F.col("cur_id"), "dst", key.alias("k"))
+        .groupBy("walk_id", "step")
         .agg(F.min(F.struct("k", "dst")).alias("_p"), F.min("cur_id").alias("prev0"))
         .select(
             "walk_id",
+            "step",
             F.col("_p.dst").alias("id"),
             F.col("prev0").alias("prev"),
         )
@@ -969,20 +960,21 @@ def node2vec_walks(
     DF(walk_id, step, id)."""
     spark = db.spark
     e = db._typed(etype).select("src", "dst")
-    rows = [(int(s) * n_walks + j, int(s)) for s in seeds for j in range(n_walks)]
-    cur = cut_lineage(
-        spark.createDataFrame(rows, "walk_id bigint, id bigint").withColumn(
-            "prev", F.lit(None).cast("bigint")
-        )
-    )
-    visited = [cur.select("walk_id", F.lit(0).cast("bigint").alias("step"), "id")]
+    starts = np.asarray(seeds, dtype=np.int64)
+    ids = np.repeat(starts, n_walks)
+    walk_ids = ids * n_walks + np.tile(np.arange(n_walks, dtype=np.int64), len(starts))
+    cur = cut_lineage(local_table(
+        spark, "walk_id bigint, step bigint, id bigint, prev bigint",
+        walk_ids, np.zeros_like(ids), ids, [None] * len(ids),
+    ))
+    visited = [cur.select("walk_id", "step", "id")]
     # canonical undirected edge set for the is-neighbor-of-prev probe
     und = cut_lineage(
         e.select(F.least("src", "dst").alias("ux"), F.greatest("src", "dst").alias("uy")).distinct()
     )
-    for step in range(1, int(walk_length) + 1):
-        cur = cut_lineage(node2vec_step(e, und, cur, step, p, q))
-        visited.append(cur.select("walk_id", F.lit(step).cast("bigint").alias("step"), "id"))
+    for _ in range(int(walk_length)):
+        cur = cut_lineage(node2vec_step(e, und, cur, p, q))
+        visited.append(cur.select("walk_id", "step", "id"))
     out = visited[0]
     for v in visited[1:]:
         out = out.unionAll(v)
@@ -1423,7 +1415,7 @@ def _brandes_forward(
     Returns (distinct edge set, levels list of DF(seed, id, sigma))."""
     e = cut_lineage(db._typed(etype).select("src", "dst").distinct())
     spark = e.sparkSession
-    seed_df = spark.createDataFrame([(int(s),) for s in seeds], "seed bigint")
+    seed_df = local_table(spark, "seed bigint", [int(s) for s in seeds])
     lvl0 = seed_df.select(
         "seed", F.col("seed").alias("id"), F.lit(1).cast("bigint").alias("sigma")
     )
@@ -1579,10 +1571,10 @@ def pseudo_diameter(
 
     far_a, ecc_a = _farthest(bfs_levels(udb, start, max_depth))
     far_b, diameter_lb = _farthest(bfs_levels(udb, far_a, max_depth))
-    spark = db.spark
-    return spark.createDataFrame(
-        [(int(start), far_a, ecc_a, far_b, diameter_lb)],
+    return local_table(
+        db.spark,
         "start bigint, far_a bigint, ecc_a bigint, far_b bigint, diameter_lb bigint",
+        [int(start)], [far_a], [ecc_a], [far_b], [diameter_lb],
     )
 
 
@@ -1809,7 +1801,7 @@ def minimum_spanning_forest(
         .distinct()
         .select("id", F.col("id").alias("c"))
     )
-    chosen = spark.createDataFrame([], "x bigint, y bigint, w double")
+    chosen = local_table(spark, "x bigint, y bigint, w double")
     # live edges carry their endpoints' CURRENT component labels (cx, cy):
     # initial components are the vertices themselves, and each round's
     # end-of-round relabel doubles as the next round's label join — two
@@ -1855,7 +1847,7 @@ def minimum_spanning_forest(
                     picked_local.append((int(xs[i]), int(ys[i]), float(ws[i])))
             if picked_local:
                 chosen = chosen.unionAll(
-                    spark.createDataFrame(picked_local, "x bigint, y bigint, w double")
+                    local_table(spark, "x bigint, y bigint, w double", *zip(*picked_local))
                 )
             return chosen
         # each component's minimum outgoing edge, deterministic tie-break;
@@ -1908,7 +1900,7 @@ def minimum_spanning_forest(
                 (c, min(g)) for root, g in groups.items() for c in g
             ]
             merged = F.broadcast(
-                spark.createDataFrame(mapping, "id bigint, cc bigint")
+                local_table(spark, "id bigint, cc bigint", *zip(*mapping))
             )
         else:
             comp_edges = picks.select(
@@ -1971,8 +1963,8 @@ def weighted_sssp_parents(
     best = F.min(F.struct("d", "parent"))
     dist = pregel._run(
         _weighted_edges(db, etype, weight_col),
-        pregel._state(db.spark.createDataFrame(
-            [(int(source), 0.0, None)], "id bigint, d double, parent bigint"
+        pregel._state(local_table(
+            db.spark, "id bigint, d double, parent bigint", [int(source)], [0.0], [None]
         )),
         int(iterations),
         msg=[(F.col("d") + F.col("_w")).alias("d"), F.col("src").alias("parent")],
@@ -2006,7 +1998,7 @@ def weighted_route(
     for _ in range(int(iterations) + 1):
         hit = parents.filter(F.col("id") == cur).limit(1).collect()
         if not hit:
-            return spark.createDataFrame([], "step bigint, id bigint, dist double")
+            return local_table(spark, "step bigint, id bigint, dist double")
         rows.append((cur, float(hit[0]["dist"])))
         p = hit[0]["parent"]
         if p is None:
@@ -2017,9 +2009,6 @@ def weighted_route(
         # the parent chain did not terminate within the hop bound (e.g. a
         # zero-weight tie cycle): a partial route not anchored at the
         # source would be indistinguishable from a complete one — refuse it
-        return spark.createDataFrame([], "step bigint, id bigint, dist double")
+        return local_table(spark, "step bigint, id bigint, dist double")
     rows.reverse()
-    return spark.createDataFrame(
-        [(i, v, d) for i, (v, d) in enumerate(rows)],
-        "step bigint, id bigint, dist double",
-    )
+    return local_table(spark, "step bigint, id bigint, dist double", range(len(rows)), *zip(*rows))

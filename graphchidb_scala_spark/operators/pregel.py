@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from graphchidb_scala_spark.checkpoint import cut_lineage
 from graphchidb_scala_spark.db import GraphDB
+from graphchidb_scala_spark.session import local_table
 
 
 # ---------------------------------------------------------------- superstep core
@@ -164,7 +165,7 @@ def personalized_pagerank_multi(
     if it carries mass, so state is Σ|reachable≤k|, not |seeds|·|V|; the
     values equal :func:`personalized_pagerank` over the reachable set."""
     seeds = _state(
-        db.spark.createDataFrame([(int(s),) for s in sources], "seed bigint")
+        local_table(db.spark, "seed bigint", [int(s) for s in sources])
         .select("seed", F.col("seed").alias("id"))
     )
     return _run(
@@ -449,7 +450,7 @@ def bfs_via_vertex_program(
         "id",
         F.when(F.col("id") == int(source), F.lit(0).cast("bigint")).alias("val"),
     )
-    src_only = db.spark.createDataFrame([(int(source),)], "id bigint")
+    src_only = local_table(db.spark, "id bigint", [int(source)])
     out = run_vertex_program(
         db,
         init,

@@ -27,7 +27,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 # Runtime-settable confs applied to any session we receive. Session timezone
 # must be UTC so that timestamp formatting matches the DuckDB oracle (which
@@ -60,6 +61,10 @@ _RUNTIME_CONFS = {
     # warm-up compiles 30 and later passes 0-2; pagerank then costs
     # 3.4-5.1 CPU s, 1.3-2.9 s of it JIT.
     "spark.sql.codegen.useIdInClassName": "false",
+    # Pandas input goes over Arrow, so a driver-built table (local_table)
+    # is planned as a local relation. get_spark sets it too; a session
+    # passed in without it would turn the frame back into Python rows.
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
 
 # Static confs, fixed when the JVM's SparkContext starts: applied by
@@ -85,6 +90,33 @@ def configure(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # conf locked by the host harness; proceed with its value
     return spark
+
+
+_PANDAS_DTYPES = {"bigint": "Int64", "int": "Int32", "double": "Float64"}
+
+
+def local_table(spark: SparkSession, schema: str, *cols) -> DataFrame:
+    """A table built from driver-side values: ``schema`` is a DDL string of
+    ``bigint``, ``int`` and ``double`` fields and ``cols`` one sequence per
+    field, in order, where None is NULL; no ``cols`` gives the empty table.
+
+    The values go over Arrow as a pandas frame, which Spark plans as a local
+    relation: scanning or collecting it runs no Spark job and no Python
+    worker, so it needs no ``cut_lineage`` either. A list of Python rows is
+    scanned by Python-worker tasks instead (4-core VM, process-tree CPU,
+    median of 25 calls: collecting a 1-row table 0.38 s against 0.01 s,
+    cutting one 0.39 s against 0.03 s). An empty frame would be scanned as an RDD,
+    but under an always-false filter it plans as an empty local relation."""
+    fields = [f.split() for f in schema.split(",")]
+    if not cols:
+        cols = tuple([] for _ in fields)
+    if len(cols) != len(fields):
+        raise ValueError(f"{len(cols)} columns for schema {schema!r}")
+    pdf = pd.DataFrame({
+        name: pd.array(c, dtype=_PANDAS_DTYPES[t]) for (name, t), c in zip(fields, cols)
+    })
+    df = spark.createDataFrame(pdf, schema)
+    return df if len(pdf) else df.where(F.lit(False))
 
 
 def get_spark(

@@ -356,6 +356,45 @@ def test_bfs_family_hop_jobs(spark):
     per_hop = {name: jobs(name, 4) - jobs(name, 3) for name in runs}
     assert per_hop["traverse_out_until"] == per_hop["bfs_levels"], per_hop
     assert per_hop["multi_bfs_levels"] == per_hop["bfs_levels"], per_hop
+    # the level's size and hit flag are observed by the hop's own cut and the
+    # visited set is broadcast at every depth: a stats job over the cut rows,
+    # or a sort-merge anti-join once the visited set grows, shows as more
+    assert per_hop["bfs_levels"] == 4, per_hop
+
+
+def test_shortest_path_length_jobs(spark):
+    """``shortest_path_length`` runs no job for its driver-built tables (the
+    seed and the 1-row result are Arrow local relations) and reads the
+    in-neighbour probe and each hop's stats from the cuts that materialize
+    them. Pinned on a 31-vertex path: a dist-3 call, a dist-1 call (answered
+    by the in-neighbour cut alone) and an unreachable target (every hop of
+    the bound runs). The result then collects with no job at all."""
+    from graphchidb_scala_spark.operators import graph_queries as gq
+
+    g = GraphDB(spark.createDataFrame([(0, i, i + 1) for i in range(30)], "etype int, src bigint, dst bigint"))
+    cases = {"dist3": (0, 3, 3), "dist1": (0, 1, 1), "unreachable": (5, 0, None)}
+    got = {}
+    for name, (s, t, want) in cases.items():
+        n, df = _jobs(spark, f"sp-{name}", lambda s=s, t=t: gq.shortest_path_length(g, s, t))
+        m, rows = _jobs(spark, f"sp-{name}-collect", df.collect)
+        assert [r["dist"] for r in rows] == [want], (name, rows)
+        got[name] = (n, m)
+    assert got == {"dist3": (14, 0), "dist1": (2, 0), "unreachable": (17, 0)}, got
+
+
+def test_route_result_collects_without_a_job(spark):
+    """A path query's result rows are built on the driver; as a local
+    relation, collecting them runs no Spark job (a list of Python rows ran
+    one, in Python workers)."""
+    from graphchidb_scala_spark.operators import graph_queries as gq
+
+    g = GraphDB(spark.createDataFrame([(0, i, i + 1) for i in range(30)], "etype int, src bigint, dst bigint"))
+    for name, route, want in [
+        ("found", gq.shortest_path_route(g, 2, 5), [(0, 2), (1, 3), (2, 4), (3, 5)]),
+        ("empty", gq.shortest_path_route(g, 5, 2), []),
+    ]:
+        n, rows = _jobs(spark, f"route-collect-{name}", route.collect)
+        assert (n, sorted(tuple(r) for r in rows)) == (0, want), name
 
 
 def test_walks_stop_once_every_walk_ended(spark):
@@ -488,3 +527,27 @@ def test_pagerank_rounds_reuse_codegen(spark, codegen_db):
 
     pregel.pagerank(codegen_db, iterations=2).collect()
     assert _compiles(spark, lambda: pregel.pagerank(codegen_db, iterations=7).collect()) <= 6
+
+
+def test_bfs_depth_reuses_codegen(spark, codegen_db):
+    """BFS levels carry the level as a column, not a per-level literal, so
+    ``multi_bfs_levels`` to depth 5 after depth 2 compiles nothing new."""
+    from graphchidb_scala_spark.operators import graph_queries as gq
+
+    def bfs(depth):
+        return gq.multi_bfs_levels(codegen_db, [1, 2, 3], max_depth=depth).collect()
+
+    bfs(2)
+    assert _compiles(spark, lambda: bfs(5)) == 0
+
+
+def test_node2vec_length_reuses_codegen(spark, codegen_db):
+    """node2vec walks carry the step as a column, as ``random_walks`` does,
+    so 6 steps after 2 compile nothing new."""
+    from graphchidb_scala_spark.operators import graph_queries as gq
+
+    def walks(n):
+        return gq.node2vec_walks(codegen_db, list(range(10)), walk_length=n, p=2.0, q=0.5).collect()
+
+    walks(2)
+    assert _compiles(spark, lambda: walks(6)) == 0

@@ -837,9 +837,9 @@ def _node2vec_hop(g):
         F.least("src", "dst").alias("ux"), F.greatest("src", "dst").alias("uy")
     ).distinct()
     cur = spark.createDataFrame(
-        [(1, 2, 1), (2, 3, 2)], "walk_id bigint, id bigint, prev bigint"
+        [(1, 1, 2, 1), (2, 1, 3, 2)], "walk_id bigint, step bigint, id bigint, prev bigint"
     )
-    return gq.node2vec_step(e, und, cur, step=2, p=2.0, q=0.5)
+    return gq.node2vec_step(e, und, cur, p=2.0, q=0.5)
 
 
 def _first_superstep(run):
