@@ -20,12 +20,14 @@ a cluster deployment opts in with one line:
 
     spark.sparkContext.setCheckpointDir("hdfs:///tmp/graphchidb-ckpt")
 
-A loop that needs a figure of each cut (a level's size, a hit flag) passes
-``stats``: aggregate columns observed on the rows as the cut materializes
-them (``DataFrame.observe``), so the figure comes from the cut's own job,
-the way Pregelix computes a superstep's aggregates inside the superstep,
-instead of a second job over the cut rows: the stats cost no job beyond
-the cut's own, with either cut kind.
+Every cut is eager: it materializes in one job before ``cut_lineage``
+returns. A loop that needs a figure of each cut (a level's size, a hit
+flag, a halt test) passes ``stats``: aggregate columns observed on the rows
+as the cut materializes them (``DataFrame.observe``), so the figure comes
+from the cut's own job, the way Pregelix computes a superstep's aggregates
+inside the superstep, instead of a second job over the cut rows: the stats
+cost no job beyond the cut's own, with either cut kind. It is the one way
+the library's loops learn a figure of their own state.
 """
 
 from __future__ import annotations
@@ -40,11 +42,12 @@ _STATS_WAIT_S = 60
 
 def cut_lineage(
     df: DataFrame,
-    eager: bool = True,
+    *,
     spill_only: bool = False,
     stats: list[Column] | None = None,
 ):
-    """Materialize ``df`` and truncate its lineage/logical plan.
+    """Materialize ``df`` (one job, before this returns) and truncate its
+    lineage/logical plan.
 
     Uses a reliable ``checkpoint`` when the SparkContext has a checkpoint
     directory configured (cluster deployments), else ``localCheckpoint``
@@ -60,23 +63,21 @@ def cut_lineage(
     (reliable ``checkpoint`` is already on-disk, so the flag is a no-op
     there).
 
-    With ``stats`` (aggregate columns; needs ``eager``) it returns
+    With ``stats`` (aggregate columns) it returns
     ``(cut, row)``: ``row`` holds the aggregates over the cut rows, observed
     by the materializing job itself. The row reaches the driver through the
     listener bus just after the job ends; one that has not arrived within
     ``_STATS_WAIT_S`` raises instead of blocking forever."""
     if stats is not None:
-        if not eager:
-            raise ValueError("cut_lineage(stats=...) needs an eager cut")
         obs = Observation()
         df = df.observe(obs, *stats)
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:
-        cut = df.checkpoint(eager=eager)
+        cut = df.checkpoint()
     elif spill_only:
-        cut = df.localCheckpoint(eager=eager, storageLevel=StorageLevel.DISK_ONLY)
+        cut = df.localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
     else:
-        cut = df.localCheckpoint(eager=eager)
+        cut = df.localCheckpoint()
     if stats is None:
         return cut
     # The row arrives through the listener bus, shortly after the job ends;

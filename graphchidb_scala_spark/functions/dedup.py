@@ -1583,8 +1583,9 @@ def minhash_cluster_members(
             # ~5 GB at the 10× replica) and is re-read under the repair
             # verify's resident broadcast hash relations — MEMORY_AND_DISK
             # blocks OOM'd the 10× c32 run (r15); stream it from disk
-            cross = cut_lineage(cross, spill_only=True)
-            n_cand = cross.count()
+            cross, (n_cand,) = cut_lineage(
+                cross, spill_only=True, stats=[F.count(F.lit(1))]
+            )
             if n_cand > 32 * n_docs:
                 bar = _est2_cut(float(threshold))
                 probe = (
@@ -1612,8 +1613,10 @@ def minhash_cluster_members(
                 )
                 if probe["n"] and (probe["k"] or 0) < 0.5 * probe["n"]:
                     sig2_b = _build_sig2()
-        new_edges = cut_lineage(_verify(cross, extra=("_la", "_lb")))
-        if new_edges.count() > 0:
+        new_edges, (n_new,) = cut_lineage(
+            _verify(cross, extra=("_la", "_lb")), stats=[F.count(F.lit(1))]
+        )
+        if n_new > 0:
             lbl_pairs = new_edges.select(
                 F.col("_la").alias("id_a"), F.col("_lb").alias("id_b")
             ).distinct()
@@ -1849,8 +1852,10 @@ def containment_cluster_members(
         .agg(F.max("_ca").alias("_ca"), F.max("_cb").alias("_cb"))
         .repartition(parallelism, "id_a", "id_b", "_ca")
     )
-    new_edges = cut_lineage(_verify(cross, extra_cols=("_ca", "_cb")))
-    if new_edges.count() > 0:
+    new_edges, (n_new,) = cut_lineage(
+        _verify(cross, extra_cols=("_ca", "_cb")), stats=[F.count(F.lit(1))]
+    )
+    if n_new > 0:
         lbl_pairs = new_edges.select(
             F.col("_ca").alias("id_a"), F.col("_cb").alias("id_b")
         ).distinct()
@@ -2338,13 +2343,15 @@ def cross_corpus_dup_members(
             # shuffle.partitions (the r8 pin-elision class)
             .repartition(nparts)
         )
-        newly = cut_lineage(_verified_ids(cand))
-        if newly.count() > 0:
+        newly, (n_new,) = cut_lineage(_verified_ids(cand), stats=[F.count(F.lit(1))])
+        if n_new > 0:
             rounds.append(newly)
             unres = unres.join(newly, "id_a", "left_anti")
         # a bucket stays live only while it still has untried ranks
-        unres = cut_lineage(unres.filter(F.col("_w") >= esc * lo))
-        if unres.isEmpty():
+        unres, (n_unres,) = cut_lineage(
+            unres.filter(F.col("_w") >= esc * lo), stats=[F.count(F.lit(1))]
+        )
+        if n_unres == 0:
             break
         lo *= esc
     if not rounds:

@@ -260,6 +260,57 @@ def ego_net(db: GraphDB, vertex: int, etype: int | None = None) -> DataFrame:
     )
 
 
+def _canonical_undirected(e: DataFrame) -> DataFrame:
+    """Distinct canonical (x < y) undirected simple edges from a directed
+    edge set — least/greatest collapse both directions before the distinct
+    (shared by triangle_count / LCC / k-truss)."""
+    return cut_lineage(
+        e.select(F.least("src", "dst").alias("x"), F.greatest("src", "dst").alias("y"))
+        .filter(F.col("x") != F.col("y"))
+        .distinct()
+    )
+
+
+def _closed_triangles(ce: DataFrame):
+    """The triangle kernel of :func:`triangle_count`, the LCC and
+    :func:`edge_support`, over canonical undirected edges DF(x, y): the
+    degree table DF(id, d) and each closed triangle once, as DF(c, a, b)
+    with ``c`` its lowest-(degree, id) vertex (the degree-ordered
+    orientation :func:`triangle_count` describes). The (degree, id)
+    ordering of the two wedge tips makes each wedge unique and gives the
+    closing edge's orientation."""
+    deg = (
+        ce.select(F.col("x").alias("id"))
+        .unionAll(ce.select(F.col("y").alias("id")))
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+    dx = deg.select(F.col("id").alias("x"), F.col("d").alias("dx"))
+    dy = deg.select(F.col("id").alias("y"), F.col("d").alias("dy"))
+    lower_first = (F.col("dx") < F.col("dy")) | (
+        (F.col("dx") == F.col("dy")) & (F.col("x") < F.col("y"))
+    )
+    oe = cut_lineage(
+        ce.join(dx, "x")
+        .join(dy, "y")
+        .select(
+            F.when(lower_first, F.col("x")).otherwise(F.col("y")).alias("a"),
+            F.when(lower_first, F.col("y")).otherwise(F.col("x")).alias("b"),
+            F.when(lower_first, F.col("dy")).otherwise(F.col("dx")).alias("db_"),
+        )
+    )
+    e1, e2 = oe.alias("e1"), oe.alias("e2")
+    wedges = e1.join(
+        e2,
+        (F.col("e2.a") == F.col("e1.a"))
+        & (
+            (F.col("e1.db_") < F.col("e2.db_"))
+            | ((F.col("e1.db_") == F.col("e2.db_")) & (F.col("e1.b") < F.col("e2.b")))
+        ),
+    ).select(F.col("e1.a").alias("c"), F.col("e1.b").alias("a"), F.col("e2.b").alias("b"))
+    return deg, wedges.join(oe.select("a", "b"), ["a", "b"], "semi")
+
+
 def triangle_count(db: GraphDB, etype: int | None = None) -> DataFrame:
     """Global triangle count on the undirected simple graph, degree-ordered.
 
@@ -272,48 +323,8 @@ def triangle_count(db: GraphDB, etype: int | None = None) -> DataFrame:
     so the count is exact. (Motif machinery parity:
     SubgraphFrequencies.scala classifies sampled 3-sets; triangles are its
     exact closed-class counterpart.) Returns 1-row DF(triangles)."""
-    # canonicalize the *directed* edges straight to (min, max): symmetrizing
-    # first (undirected_edges) would double the distinct's input for no
-    # information gain — least/greatest already collapse both directions
-    e = db._typed(etype)
-    ce = cut_lineage(
-        e.select(F.least("src", "dst").alias("x"), F.greatest("src", "dst").alias("y"))
-        .filter(F.col("x") != F.col("y"))
-        .distinct()
-    )
-    deg = (
-        ce.select(F.col("x").alias("id"))
-        .unionAll(ce.select(F.col("y").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    dx = deg.select(F.col("id").alias("x"), F.col("d").alias("dx"))
-    dy = deg.select(F.col("id").alias("y"), F.col("d").alias("dy"))
-    lower_first = (F.col("dx") < F.col("dy")) | (
-        (F.col("dx") == F.col("dy")) & (F.col("x") < F.col("y"))
-    )
-    oe = (
-        cut_lineage(ce.join(dx, "x")
-        .join(dy, "y")
-        .select(
-            F.when(lower_first, F.col("x")).otherwise(F.col("y")).alias("a"),
-            F.when(lower_first, F.col("y")).otherwise(F.col("x")).alias("b"),
-            F.when(lower_first, F.col("dy")).otherwise(F.col("dx")).alias("db_"),
-        ))
-    )
-    e1, e2 = oe.alias("e1"), oe.alias("e2")
-    # wedges at the lowest-rank vertex; (deg, id) ordering of the two tips
-    # makes each wedge unique and gives the closing edge's orientation
-    wedges = e1.join(
-        e2,
-        (F.col("e2.a") == F.col("e1.a"))
-        & (
-            (F.col("e1.db_") < F.col("e2.db_"))
-            | ((F.col("e1.db_") == F.col("e2.db_")) & (F.col("e1.b") < F.col("e2.b")))
-        ),
-    ).select(F.col("e1.b").alias("a"), F.col("e2.b").alias("b"))
-    tri = wedges.join(oe.select("a", "b"), ["a", "b"], "semi")
-    return tri.agg(F.count(F.lit(1)).cast("bigint").alias("triangles"))
+    _, closed = _closed_triangles(_canonical_undirected(db._typed(etype)))
+    return closed.agg(F.count(F.lit(1)).cast("bigint").alias("triangles"))
 
 
 def motif_census_3(
@@ -554,11 +565,12 @@ def maximal_independent_set(
     und = cut_lineage(
         db.undirected_edges(etype).filter(F.col("a") != F.col("b")).distinct()
     )
-    live_v = cut_lineage(und.select(F.col("a").alias("id")).distinct())
+    n_row = F.count(F.lit(1))
+    live_v, (n_live,) = cut_lineage(und.select(F.col("a").alias("id")).distinct(), stats=[n_row])
     live_e = und
     mis = None
     for _ in range(int(max_rounds)):
-        if live_v.isEmpty():
+        if n_live == 0:
             break
         # min neighbor priority per vertex; vertices with no live neighbor win
         nbr_min = live_e.groupBy("a").agg(F.min(pri("b")).alias("_nm"))
@@ -574,7 +586,7 @@ def maximal_independent_set(
                 F.col("b").alias("id")
             )
         ).distinct()
-        live_v = cut_lineage(live_v.join(retired, "id", "anti"))
+        live_v, (n_live,) = cut_lineage(live_v.join(retired, "id", "anti"), stats=[n_row])
         live_e = cut_lineage(
             live_e.join(live_v.select(F.col("id").alias("a")), "a", "semi").join(
                 live_v.select(F.col("id").alias("b")), "b", "semi"
@@ -618,17 +630,19 @@ def maximal_matching(
         )
         .distinct()
     )
-    live = cut_lineage(
+    n_row = F.count(F.lit(1))
+    live, (n_live,) = cut_lineage(
         canon.withColumn(
             "p",
             md5_hash60(
                 F.concat_ws(":", F.lit(int(seed)), F.col("a"), F.col("b"))
             ),
-        )
+        ),
+        stats=[n_row],
     )
     matched = None
     for _ in range(int(max_rounds)):
-        if live.isEmpty():
+        if n_live == 0:
             break
         key = F.struct(F.col("p"), F.col("a"), F.col("b"))
         inc = live.select(F.col("a").alias("v"), key.alias("k")).unionAll(
@@ -647,10 +661,11 @@ def maximal_matching(
         mv = win.select(F.col("a").alias("v")).unionAll(
             win.select(F.col("b").alias("v"))
         ).distinct()
-        live = cut_lineage(
+        live, (n_live,) = cut_lineage(
             live.join(mv.select(F.col("v").alias("a")), "a", "anti").join(
                 mv.select(F.col("v").alias("b")), "b", "anti"
-            )
+            ),
+            stats=[n_row],
         )
     if matched is None:
         return canon.limit(0)
@@ -673,42 +688,7 @@ def local_clustering_coefficient(
     each closed triangle to its three vertices before a map-side-combined
     count. No vacuous work on triangle-free graphs — the per-vertex counts
     left-join onto degrees."""
-    e = db._typed(etype)
-    ce = cut_lineage(
-        e.select(F.least("src", "dst").alias("x"), F.greatest("src", "dst").alias("y"))
-        .filter(F.col("x") != F.col("y"))
-        .distinct()
-    )
-    deg = (
-        ce.select(F.col("x").alias("id"))
-        .unionAll(ce.select(F.col("y").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    dx = deg.select(F.col("id").alias("x"), F.col("d").alias("dx"))
-    dy = deg.select(F.col("id").alias("y"), F.col("d").alias("dy"))
-    lower_first = (F.col("dx") < F.col("dy")) | (
-        (F.col("dx") == F.col("dy")) & (F.col("x") < F.col("y"))
-    )
-    oe = cut_lineage(
-        ce.join(dx, "x")
-        .join(dy, "y")
-        .select(
-            F.when(lower_first, F.col("x")).otherwise(F.col("y")).alias("a"),
-            F.when(lower_first, F.col("y")).otherwise(F.col("x")).alias("b"),
-            F.when(lower_first, F.col("dy")).otherwise(F.col("dx")).alias("db_"),
-        )
-    )
-    e1, e2 = oe.alias("e1"), oe.alias("e2")
-    wedges = e1.join(
-        e2,
-        (F.col("e2.a") == F.col("e1.a"))
-        & (
-            (F.col("e1.db_") < F.col("e2.db_"))
-            | ((F.col("e1.db_") == F.col("e2.db_")) & (F.col("e1.b") < F.col("e2.b")))
-        ),
-    ).select(F.col("e1.a").alias("c"), F.col("e1.b").alias("a"), F.col("e2.b").alias("b"))
-    closed = wedges.join(oe.select("a", "b"), ["a", "b"], "semi")
+    deg, closed = _closed_triangles(_canonical_undirected(db._typed(etype)))
     per_vertex = (
         closed.select(F.explode(F.array("c", "a", "b")).alias("id"))
         .groupBy("id")
@@ -767,17 +747,15 @@ def k_core(
     broadcast once survivors are small). Edge set only shrinks; lineage is
     cut per round. O(rounds) ≤ O(V) worst case but ~degeneracy in practice
     — the same contraction discipline as connected_components."""
-    und = cut_lineage(db.undirected_edges(etype).filter(F.col("a") != F.col("b")))
-    e = und
-    prev_edges = None
-    rounds = int(peels) if peels is not None else int(max_iter)
-    for _ in range(rounds):
-        if peels is None:
-            n = e.count()
-            if n == prev_edges:
-                break
-            prev_edges = n
-        e = cut_lineage(kcore_peel_round(e, k))
+    n_row = F.count(F.lit(1))
+    e, (n,) = cut_lineage(
+        db.undirected_edges(etype).filter(F.col("a") != F.col("b")), stats=[n_row]
+    )
+    for _ in range(int(peels) if peels is not None else int(max_iter)):
+        e, (n_next,) = cut_lineage(kcore_peel_round(e, k), stats=[n_row])
+        if peels is None and n_next == n:
+            break
+        n = n_next
     deg = e.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     return deg.select(F.col("a").alias("id"), F.col("deg").cast("bigint").alias("deg"))
 
@@ -1129,10 +1107,12 @@ def strongly_connected_components(
     if extra_edges is not None:
         e = e.unionAll(extra_edges.select("src", "dst"))
     live_e = cut_lineage(e.filter(F.col("src") != F.col("dst")).distinct())
-    live_v = cut_lineage(
+    n_row = F.count(F.lit(1))
+    live_v, (n_v,) = cut_lineage(
         live_e.select(F.col("src").alias("id"))
         .unionAll(live_e.select(F.col("dst")))
-        .distinct()
+        .distinct(),
+        stats=[n_row],
     )
     # vertices that only ever appear in self-loops still need a row
     self_only = (
@@ -1143,31 +1123,37 @@ def strongly_connected_components(
     )
     done = [self_only.select("id", F.col("id").alias("scc"))]
     for _ in range(int(max_rounds)):
-        if live_v.isEmpty():
+        if n_v == 0:
             break
         # ---- trim: no in-edge or no out-edge => singleton SCC
         for _ in range(int(max_inner)):
             has_out = live_e.select(F.col("src").alias("id")).distinct()
             has_in = live_e.select(F.col("dst").alias("id")).distinct()
-            keep = cut_lineage(live_v.join(has_out, "id", "semi").join(has_in, "id", "semi"))
-            trimmed = live_v.join(keep, "id", "anti")
-            if trimmed.isEmpty():
+            keep, (n_keep,) = cut_lineage(
+                live_v.join(has_out, "id", "semi").join(has_in, "id", "semi"), stats=[n_row]
+            )
+            if n_keep == n_v:
                 break
-            done.append(cut_lineage(trimmed.select("id", F.col("id").alias("scc"))))
-            live_v = keep
+            done.append(cut_lineage(
+                live_v.join(keep, "id", "anti").select("id", F.col("id").alias("scc"))
+            ))
+            live_v, n_v = keep, n_keep
             live_e = cut_lineage(
                 live_e.join(keep.withColumnRenamed("id", "src"), "src", "semi").join(
                     keep.withColumnRenamed("id", "dst"), "dst", "semi"
                 )
             )
-        if live_v.isEmpty():
+        if n_v == 0:
             break
-        # ---- color: forward min-label fixpoint
+        # ---- color: forward min-label fixpoint. Messages arrive as ``m``,
+        # so the state row alone holds the old ``c``, and ``chg`` flags the
+        # rows a smaller label reached this round
         color = pregel._run(
             live_e, cut_lineage(live_v.select("id", F.col("id").alias("c"))), int(max_inner),
-            msg=["c"], update=[F.min("c").alias("c")],
-            probe=lambda old, new: new.join(old.withColumnRenamed("c", "c0"), "id")
-            .filter(F.col("c") != F.col("c0")).isEmpty(),
+            msg=[F.col("c").alias("m")],
+            update=[F.least(F.min("c"), F.min("m")).alias("c"),
+                    (F.min("m") < F.min("c")).alias("chg")],
+            halt=F.count_if("chg") == 0,
         )
         # ---- backward: from each color root over reversed edges inside one
         # color; every marked vertex has color = scc, so the mark stays put
@@ -1176,32 +1162,25 @@ def strongly_connected_components(
             .join(color.select(F.col("id").alias("dst"), "c"), "dst")
             .filter(F.col("cs") == F.col("c"))
         )
+        # (``new`` flags the rows without a state row: the marks reached
+        # this round)
         mark = pregel._run(
             cut_lineage(same.select(F.col("dst").alias("src"), F.col("src").alias("dst"))),
             cut_lineage(color.filter(F.col("id") == F.col("c")).select("id", F.col("c").alias("scc"))),
             int(max_inner),
-            msg=["scc"], update=[F.min("scc").alias("scc")],
-            probe=lambda old, new: new.count() == old.count(),
+            msg=[F.col("scc").alias("m")],
+            update=[F.least(F.min("scc"), F.min("m")).alias("scc"),
+                    F.min("scc").isNull().alias("new")],
+            halt=F.count_if("new") == 0,
         )
-        done.append(mark)
-        live_v = cut_lineage(live_v.join(mark, "id", "anti"))
+        done.append(mark.select("id", "scc"))
+        live_v, (n_v,) = cut_lineage(live_v.join(mark, "id", "anti"), stats=[n_row])
         live_e = cut_lineage(
             live_e.join(live_v.withColumnRenamed("id", "src"), "src", "semi").join(
                 live_v.withColumnRenamed("id", "dst"), "dst", "semi"
             )
         )
     return reduce(DataFrame.unionAll, done).select("id", "scc")
-
-
-def _canonical_undirected(e: DataFrame) -> DataFrame:
-    """Distinct canonical (x < y) undirected simple edges from a directed
-    edge set — least/greatest collapse both directions before the distinct
-    (shared by triangle_count / LCC / k-truss)."""
-    return cut_lineage(
-        e.select(F.least("src", "dst").alias("x"), F.greatest("src", "dst").alias("y"))
-        .filter(F.col("x") != F.col("y"))
-        .distinct()
-    )
 
 
 def edge_support(ce: DataFrame) -> DataFrame:
@@ -1211,38 +1190,7 @@ def edge_support(ce: DataFrame) -> DataFrame:
     triangle_count relies on); each closed triangle is found exactly once
     and exploded to its three canonical edges before a map-side-combined
     count, so no edge-pair blowup at hubs."""
-    deg = (
-        ce.select(F.col("x").alias("id"))
-        .unionAll(ce.select(F.col("y").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    dx = deg.select(F.col("id").alias("x"), F.col("d").alias("dx"))
-    dy = deg.select(F.col("id").alias("y"), F.col("d").alias("dy"))
-    lower_first = (F.col("dx") < F.col("dy")) | (
-        (F.col("dx") == F.col("dy")) & (F.col("x") < F.col("y"))
-    )
-    oe = cut_lineage(
-        ce.join(dx, "x")
-        .join(dy, "y")
-        .select(
-            F.when(lower_first, F.col("x")).otherwise(F.col("y")).alias("a"),
-            F.when(lower_first, F.col("y")).otherwise(F.col("x")).alias("b"),
-            F.when(lower_first, F.col("dy")).otherwise(F.col("dx")).alias("db_"),
-        )
-    )
-    e1, e2 = oe.alias("e1"), oe.alias("e2")
-    wedges = e1.join(
-        e2,
-        (F.col("e2.a") == F.col("e1.a"))
-        & (
-            (F.col("e1.db_") < F.col("e2.db_"))
-            | ((F.col("e1.db_") == F.col("e2.db_")) & (F.col("e1.b") < F.col("e2.b")))
-        ),
-    ).select(
-        F.col("e1.a").alias("c"), F.col("e1.b").alias("a"), F.col("e2.b").alias("b")
-    )
-    closed = wedges.join(oe.select("a", "b"), ["a", "b"], "semi")
+    _, closed = _closed_triangles(ce)
     tri_edges = closed.select(
         F.explode(
             F.array(
@@ -1310,13 +1258,14 @@ def k_truss(
     # round 0: full support, one peel. kept carries sup-within-prev.
     sup_tbl = cut_lineage(edge_support(cur))
     kept = sup_tbl.filter(F.col("sup") >= F.lit(k - 2))
-    removed = cut_lineage(
-        cur.join(kept.select("x", "y"), ["x", "y"], "left_anti")
+    n_row = F.count(F.lit(1))
+    removed, (n_removed,) = cut_lineage(
+        cur.join(kept.select("x", "y"), ["x", "y"], "left_anti"), stats=[n_row]
     )
     prev = cur  # the set kept's sup was counted in
     r = 1
     while rounds is None or r < rounds:
-        if removed.isEmpty():
+        if n_removed == 0:
             break  # fixpoint: further peels are no-ops
         # destroyed triangles: within prev, containing >=1 removed edge —
         # common neighbors n of a removed (a, b) probed through prev's
@@ -1370,7 +1319,9 @@ def k_truss(
         )
         prev = kept.select("x", "y")  # the set nxt's sup is now within
         kept = nxt.filter(F.col("sup") >= F.lit(k - 2))
-        removed = cut_lineage(nxt.filter(F.col("sup") < F.lit(k - 2)).select("x", "y"))
+        removed, (n_removed,) = cut_lineage(
+            nxt.filter(F.col("sup") < F.lit(k - 2)).select("x", "y"), stats=[n_row]
+        )
         r += 1
     return kept.select("x", "y")
 
@@ -1783,7 +1734,8 @@ def minimum_spanning_forest(
     from graphchidb_scala_spark.operators.pregel import connected_components_star
 
     e = db._typed(etype)
-    ce = cut_lineage(
+    n_row = F.count(F.lit(1))
+    ce, (n_live,) = cut_lineage(
         e.select(
             F.least("src", "dst").alias("x"),
             F.greatest("src", "dst").alias("y"),
@@ -1791,7 +1743,8 @@ def minimum_spanning_forest(
         )
         .filter((F.col("x") != F.col("y")) & F.col("w").isNotNull())
         .groupBy("x", "y")
-        .agg(F.min("w").alias("w"))  # parallel edges: keep the cheapest
+        .agg(F.min("w").alias("w")),  # parallel edges: keep the cheapest
+        stats=[n_row],
     )
     spark = ce.sparkSession
     # component labels start as self
@@ -1811,7 +1764,6 @@ def minimum_spanning_forest(
     )
     for _ in range(max_rounds):
         lab = live
-        n_live = lab.count()
         if n_live == 0:
             break
         if local_finish_threshold and n_live <= int(local_finish_threshold):
@@ -1864,7 +1816,7 @@ def minimum_spanning_forest(
             .select("e.x", "e.y", "e.w", "e.cx", "e.cy")
             .distinct()  # both endpoints' components may pick the same edge
         )
-        picks = cut_lineage(picks)
+        picks, (n_picks,) = cut_lineage(picks, stats=[n_row])
         chosen = cut_lineage(chosen.unionAll(picks.select("x", "y", "w")))
         # contract: components linked by the chosen edges merge. The pick
         # graph has ≤ one edge per component (and halves every round), so
@@ -1875,7 +1827,6 @@ def minimum_spanning_forest(
         # normalized to the min component id, matching the distributed CC's
         # min-label convention (the label values don't affect the chosen
         # edge set — picks order on (w, x, y) — but determinism is free).
-        n_picks = picks.count()
         if local_finish_threshold and n_picks <= int(local_finish_threshold):
             ppdf = picks.select("cx", "cy").toPandas()
             parent: dict = {}
@@ -1914,11 +1865,12 @@ def minimum_spanning_forest(
                 "left",
             ).select("id", F.coalesce(F.col("c_new"), F.col("c")).alias("c"))
         )
-        live = cut_lineage(
+        live, (n_live,) = cut_lineage(
             live.select("x", "y", "w")
             .join(comp.select(F.col("id").alias("x"), F.col("c").alias("cx")), "x")
             .join(comp.select(F.col("id").alias("y"), F.col("c").alias("cy")), "y")
-            .filter(F.col("cx") != F.col("cy"))
+            .filter(F.col("cx") != F.col("cy")),
+            stats=[n_row],
         )
     return chosen
 

@@ -10,10 +10,19 @@ with a base table and folds them in ONE ``groupBy(keys).agg``: one shuffle
 exchange per round, after the map-side partial aggregate.
 
 Checkpoint cadence is a rule of the core: cut every 5 rounds and after the
-last; cut every round when the loop probes convergence or when its base is
-the state itself (uncut, that union reads the previous round twice and the
-plan doubles per round). Cuts go through ``checkpoint.cut_lineage``, which
+last; cut every round when ``halt`` is set or when the base is the state
+itself (uncut, that union reads the previous round twice and the plan
+doubles per round). Cuts go through ``checkpoint.cut_lineage``, which
 persists to the fault-tolerant FS once ``setCheckpointDir`` is set.
+
+A loop that stops at a fixpoint passes ``halt``: one aggregate Column over
+the new state, observed on each round's cut by the cut's own job, that stops
+the loop when it reads true (NULL continues). The halt state thus comes from
+the superstep that computed it, as in the reference's scheduler "no new
+tasks" bit (GraphChiDatabase.scala:2247-2252) and in Pregelix, never from a
+second job over the cut rows. A state that must compare itself with the
+previous round carries the comparison as a column of its own (a changed
+flag, the previous value).
 """
 
 from __future__ import annotations
@@ -40,19 +49,19 @@ def _superstep(edges, state, base, msg, update, keys=("id",), send=None, keep=No
 
 
 def _run(edges, state, rounds, msg, update, base=None, keys=("id",), send=None,
-         keep=None, probe=None):
+         keep=None, halt=None):
     """Up to ``rounds`` supersteps; ``base=None`` unions the state itself and
-    ``probe(old, new)`` returning True stops the loop. Cadence as in the
-    module docstring."""
-    every = 1 if base is None or probe is not None else 5
+    ``halt`` (an aggregate Column) reading true on a round's cut stops the
+    loop. Cadence as in the module docstring."""
     for i in range(1, rounds + 1):
-        new = _superstep(edges, state, state if base is None else base, msg, update,
-                         keys, send, keep)
-        if i % every == 0 or i == rounds:
-            new = cut_lineage(new)
-        if probe is not None and probe(state, new):
-            return new
-        state = new
+        state = _superstep(edges, state, state if base is None else base, msg, update,
+                           keys, send, keep)
+        if halt is not None:
+            state, (stop,) = cut_lineage(state, stats=[halt])
+            if stop:
+                break
+        elif base is None or i % 5 == 0 or i == rounds:
+            state = cut_lineage(state)
     return state
 
 
@@ -64,7 +73,7 @@ def _state(df: DataFrame) -> DataFrame:
     return cut_lineage(df.repartition("id"))
 
 
-def _on_vertices(db, edges, start, rounds, msg, update, zero_base=True, probe=None):
+def _on_vertices(db, edges, start, rounds, msg, update, zero_base=True, halt=None):
     """:func:`_run` from ``start(vertex ids)``, base a zero message ``c`` per
     vertex (or the state). The zero rows keep vertices without in-edges in
     the state; they fold in the map-side partial aggregate and add exactly
@@ -72,7 +81,7 @@ def _on_vertices(db, edges, start, rounds, msg, update, zero_base=True, probe=No
     one final semi-join drops them from the output."""
     vstatic = _state(db.vertices.select("id"))
     base = vstatic.select("id", F.lit(0.0).alias("c")) if zero_base else None
-    out = _run(edges, start(vstatic), rounds, msg, update, base=base, probe=probe)
+    out = _run(edges, start(vstatic), rounds, msg, update, base=base, halt=halt)
     return out.join(vstatic, "id", "semi")
 
 
@@ -104,7 +113,9 @@ def pagerank(
     """PageRank, non-normalized accumulator formulation of the reference
     (Pagerank.scala:34-61): rank = 0.15 + 0.85 * Σ_in rank(u)/outdeg(u),
     rank0 = 1.0 over all vertices. Fixed ``iterations`` (set ``tol`` for
-    convergence-stop instead). Returns DF(id, rank) over the vertex table.
+    convergence-stop instead: the state then unions itself as the base, each
+    row keeps its previous rank, and the loop stops once the largest change
+    is below ``tol``). Returns DF(id, rank) over the vertex table.
 
     ``initial`` DF(id, rank) warm-starts from previous ranks (SURVEY §2.12:
     recompute after online appends without starting over); new vertices
@@ -117,18 +128,23 @@ def pagerank(
             .select("id", F.coalesce("rank", F.lit(1.0)).alias("rank"))
         )
 
-    def converged(old: DataFrame, new: DataFrame) -> bool:
-        both = new.join(old.withColumnRenamed("rank", "old"), "id")
-        delta = both.agg(F.max(F.abs(both["rank"] - both["old"]))).first()[0]
-        return delta is not None and delta < tol
-
-    return _on_vertices(
+    inflow = F.sum("c") if tol is None else F.coalesce(F.sum("c"), F.lit(0.0))
+    update = [(F.lit(1.0 - damping) + F.lit(damping) * inflow).alias("rank")]
+    halt = None
+    if tol is not None:
+        # the state rows are the base: they send no ``c``, and their rank
+        # becomes the new row's ``prev``
+        update.append(F.max("rank").alias("prev"))
+        halt = F.max(F.abs(F.col("rank") - F.col("prev"))) < tol
+    out = _on_vertices(
         db, _out_weighted(db._typed(etype).select("src", "dst"), F.count(F.lit(1))),
         start, iterations,
         msg=[(F.col("rank") / F.col("norm")).alias("c")],
-        update=[(F.lit(1.0 - damping) + F.lit(damping) * F.sum("c")).alias("rank")],
-        probe=None if tol is None else converged,
+        update=update,
+        zero_base=tol is None,
+        halt=halt,
     )
+    return out.select("id", "rank")
 
 
 def personalized_pagerank(
@@ -258,9 +274,12 @@ def connected_components_star(
     propagation: cc = min vertex id of the component. Returns DF(id, cc).
 
     Per round: two groupBy+join+distinct passes over the (shrinking) edge
-    set. The loop stops in the round whose edge set is a star forest, the
-    fixpoint, which one per-vertex aggregate over the already-checkpointed
-    set detects: no extra round runs just to see the set unchanged."""
+    set. After each round the next round's large-star aggregate (min
+    neighbour, degree per vertex) is cut with one observed flag, "some
+    vertex with a smaller neighbour has another one": when it reads false
+    the edge set is a star forest, the fixpoint, and the aggregate already
+    is the result's star table. So the loop stops in the round that reaches
+    the fixpoint, with no extra round and no job beyond the cut's own."""
     # build the symmetric closure from canonical (min, max) pairs: the
     # distinct then runs over half the rows undirected_edges would feed it,
     # and the swap union after it is shuffle-free
@@ -271,11 +290,10 @@ def connected_components_star(
         .distinct()
     )
     L = cut_lineage(canon.unionAll(canon.select(F.col("b").alias("a"), F.col("a").alias("b"))))
+    nb = L.groupBy("a").agg(F.min("b").alias("_mn"))
     for _ in range(max_iterations):
         # large-star: attach strictly-larger neighbors of u to m(u) = min(N(u) ∪ {u})
-        m = L.groupBy("a").agg(F.min("b").alias("_mn")).select(
-            "a", F.least(F.col("_mn"), F.col("a")).alias("m")
-        )
+        m = nb.select("a", F.least(F.col("_mn"), F.col("a")).alias("m"))
         # no distinct here: duplicate (b, m) pairs are absorbed by the
         # min-aggregation in m2 and the final distinct on small — skipping
         # the dedupe drops a full shuffle of the round's largest set
@@ -301,18 +319,18 @@ def connected_components_star(
         L = cut_lineage(
             small.select("a", "b").unionAll(small.select(F.col("b"), F.col("a")))
         )
-        # converged once L is a star forest centered on component minima
-        # (the next round would reproduce it): L has no duplicate rows, so
-        # that holds iff no vertex with a smaller neighbor has another one
-        bad = (
-            L.groupBy("a")
-            .agg(F.count(F.lit(1)).alias("_d"), F.min("b").alias("_mn"))
-            .filter((F.col("_d") > 1) & (F.col("_mn") < F.col("a")))
+        # the next round's large-star aggregate, cut with the fixpoint test:
+        # L has no duplicate rows, so it is a star forest centered on
+        # component minima (the next round would reproduce it) iff no
+        # vertex with a smaller neighbor has another one
+        nb, (bad,) = cut_lineage(
+            L.groupBy("a").agg(F.min("b").alias("_mn"), F.count(F.lit(1)).alias("_d")),
+            stats=[F.max((F.col("_d") > 1) & (F.col("_mn") < F.col("a")))],
         )
-        if bad.isEmpty():
+        if not bad:
             break
     # at convergence L holds symmetric star edges (v ↔ center); center = min
-    stars = L.groupBy(F.col("a").alias("id")).agg(F.min("b").alias("c"))
+    stars = nb.select(F.col("a").alias("id"), F.col("_mn").alias("c"))
     return (
         db.vertices.select("id")
         .join(stars, "id", "left")
@@ -386,8 +404,9 @@ def run_vertex_program(
     - ``initial_active``: DF(id) of initially-scheduled vertices (default all)
 
     An active-flag state column gates the senders like the reference's
-    bitset (GraphChiDatabase.scala:2131-2252); recipients absent from
-    ``initial`` are dropped. Returns DF(id, val)."""
+    bitset (GraphChiDatabase.scala:2131-2252), and the loop halts on the
+    round whose cut has no active row; recipients absent from ``initial``
+    are dropped. Returns DF(id, val)."""
     active = (initial if initial_active is None else initial_active).select("id").distinct()
     state = initial.select("id", "val").join(active.withColumn("act", F.lit(True)), "id", "left")
     old, m, tag = _state_row_aggs("m", agg_fn)
@@ -400,7 +419,7 @@ def run_vertex_program(
         update=[new.alias("val"), (~new.eqNullSafe(old)).alias("act"), tag],
         send=F.col("act"),
         keep=F.col("_t") == 1,
-        probe=lambda _, s: s.filter("act").limit(1).count() == 0,
+        halt=F.count_if("act") == 0,
     )
     return state.select("id", "val")
 

@@ -119,6 +119,12 @@ def local_table(spark: SparkSession, schema: str, *cols) -> DataFrame:
     return df if len(pdf) else df.where(F.lit(False))
 
 
+def _driver_mem(phys_bytes: int) -> str:
+    """Default driver heap: 16g, or half the machine's physical memory when
+    that is less (a 16g heap on a 15 GB machine gets the JVM killed)."""
+    return f"{min(16 << 10, phys_bytes // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "graphchidb-scala-spark",
     cpus: int | None = None,
@@ -138,7 +144,8 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or _driver_mem(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         # Local-mode tuning: with size-based AQE coalescing, an 8 MB advisory

@@ -8,8 +8,6 @@ import os
 import shutil
 import tempfile
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from graphchidb_scala_spark.checkpoint import cut_lineage
@@ -90,8 +88,6 @@ def test_cut_lineage_observes_stats_in_its_own_job(spark):
     assert tuple(row) == (10, True)
     assert observed == plain
     assert _lineage_cut(df) and df.count() == 10
-    with pytest.raises(ValueError):
-        cut_lineage(spark.range(3), eager=False, stats=[F.count(F.lit(1))])
 
 
 def test_cut_lineage_observes_stats_with_checkpoint_dir(spark):

@@ -429,6 +429,50 @@ def test_star_cc_stops_at_the_fixpoint(spark):
     assert sorted(tuple(r) for r in got) == [(v, 0) for v in range(6)] + [(v, 10) for v in range(10, 15)]
 
 
+def test_fixpoint_loops_stop_on_their_own_cut(spark):
+    """Every fixpoint loop learns whether to go on from the row its round's
+    cut observes, so one more round costs the jobs of the round alone.
+    Pinned per round (the jobs of a call with one more round, minus those of
+    the call before it) on small graphs: a 31-vertex path, a directed ring
+    (one more ring vertex is one more colour round and one more backward
+    round of SCC), a path for k-core (two more edges, one more peel). The
+    k-truss (k = 3: a triangle with a pendant edge) fixpoint runs the one
+    delta round that ``rounds=2`` runs, in the same jobs. A follow-up
+    ``count``/``isEmpty``/``first`` over a cut, or a join of two rounds'
+    states, shows as extra jobs."""
+    from graphchidb_scala_spark.operators import graph_queries as gq, pregel
+
+    def graph(pairs):
+        return GraphDB(spark.createDataFrame([(0, a, b) for a, b in pairs], "etype int, src bigint, dst bigint"))
+
+    path = graph([(i, i + 1) for i in range(30)])
+    bfs = path.vertices.select("id", F.when(F.col("id") == 0, F.lit(0)).cast("bigint").alias("val"))
+    tri = graph([(0, 1), (1, 2), (0, 2), (2, 3)])
+    runs = {
+        "run_vertex_program": (lambda r: pregel.run_vertex_program(
+            path, bfs, msg_fn=lambda sv: sv + F.lit(1), agg_fn=F.min,
+            combine_fn=lambda old, m: F.least(old, m), max_iterations=r,
+        ), 3, 4),
+        "pagerank_tol": (lambda r: pregel.pagerank(path, iterations=r, tol=1e-12), 3, 4),
+        "scc_ring": (lambda n: gq.strongly_connected_components(
+            graph([(i, (i + 1) % n) for i in range(n)])
+        ), 4, 5),
+        "k_core_peels": (lambda n: gq.k_core(graph([(i, i + 1) for i in range(n)]), 2), 4, 6),
+        "maximal_independent_set": (lambda r: gq.maximal_independent_set(path, max_rounds=r), 1, 2),
+        "maximal_matching": (lambda r: gq.maximal_matching(path, max_rounds=r), 1, 2),
+        "k_truss_fixpoint": (lambda r: gq.k_truss(tri, 3, rounds=r), 2, None),
+    }
+
+    def jobs(name, arg):
+        return _jobs(spark, f"fixpoint-{name}-{arg}", lambda: runs[name][0](arg).collect())[0]
+
+    got = {name: jobs(name, b) - jobs(name, a) for name, (_, a, b) in runs.items()}
+    assert got == {
+        "run_vertex_program": 5, "pagerank_tol": 5, "scc_ring": 10, "k_core_peels": 5,
+        "maximal_independent_set": 12, "maximal_matching": 9, "k_truss_fixpoint": 0,
+    }, got
+
+
 def test_store_point_read_jobs(spark, tmp_path):
     """An EdgeStore point read costs no schema-inference job (the store's
     schema is declared): ``query_out`` is 1 job over a merged base, and 4

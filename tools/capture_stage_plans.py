@@ -59,7 +59,10 @@ def main() -> None:
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
 
     orig_cut = D.cut_lineage
-    D.cut_lineage = lambda df, eager=True, spill_only=False: df  # keep plans visible
+    # keep plans visible: no cut, and a loop's stats from a job of their own
+    D.cut_lineage = lambda df, spill_only=False, stats=None: (
+        df if stats is None else (df, df.agg(*stats).first())
+    )
     try:
         sh = docs.select(
             F.col("doc_id").cast("bigint").alias("id"),

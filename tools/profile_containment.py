@@ -29,10 +29,10 @@ def main() -> None:
 
     orig_cut = dedup.cut_lineage
 
-    def timed_cut(df, eager: bool = True):
+    def timed_cut(df, **kw):
         caller = traceback.extract_stack(limit=3)[-2]
         t0 = time.time()
-        out = orig_cut(df, eager)
+        out = orig_cut(df, **kw)
         print(f"  cut@{caller.name}:{caller.lineno}: {time.time()-t0:.1f}s", flush=True)
         return out
 

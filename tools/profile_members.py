@@ -75,11 +75,11 @@ def main() -> None:
     orig_cut = dedup.cut_lineage
     timings: list[tuple[str, float, int]] = []
 
-    def timed_cut(df, eager: bool = True, **kw):
+    def timed_cut(df, **kw):
         caller = traceback.extract_stack(limit=3)[-2]
         where = f"{caller.name}:{caller.lineno}"
         t0 = time.time()
-        out = orig_cut(df, eager, **kw)
+        out = orig_cut(df, **kw)
         timings.append((where, time.time() - t0, -1))
         print(f"  cut@{where}: {timings[-1][1]:.1f}s", flush=True)
         return out
