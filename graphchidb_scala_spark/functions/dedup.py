@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from graphchidb_scala_spark.checkpoint import cut_lineage
+from graphchidb_scala_spark.session import local_table
 
 # ------------------------------------------------------------------ exact dedup
 
@@ -121,21 +122,29 @@ def _broadcast_if_small(
 _VERIFY_BCAST_CAP = 256 << 20
 
 
-def _verify_side(
-    arrays_df: DataFrame, n_col: str = "n", cap_bytes: int = _VERIFY_BCAST_CAP
+def _sized_cut(df: DataFrame, *stats: Column):
+    """Cut an exact-verify array table DF(id, sh_arr, n, ...) and observe
+    its size on the cut's own job: returns ``(cut, row)`` with ``row.r``
+    rows and ``row.s`` = Σ n array elements, plus any extra ``stats``. The
+    cut erases Catalyst's size stats, so this row is what the verify's
+    broadcast decision (:func:`_array_side`) and the estimate tiers' engage
+    floor read, instead of a count or size job over the cut rows."""
+    return cut_lineage(
+        df, stats=[F.count(F.lit(1)).alias("r"), F.sum("n").alias("s"), *stats]
+    )
+
+
+def _array_side(
+    base: DataFrame, size, id_col: str = "id"
 ) -> tuple[DataFrame, bool]:
-    """(maybe-broadcast frame, did-it-broadcast) for an exact-verify
-    shingle-array side — same estimated-size logic as
-    :func:`_broadcast_if_small`, higher cap (see ``_VERIFY_BCAST_CAP``),
-    and the decision is RETURNED so callers can gate the second-stage
-    estimate tier on the regime (prune only pays when the arrays will be
-    shuffled per candidate)."""
-    row = arrays_df.agg(
-        F.count(F.lit(1)).alias("r"), F.sum(n_col).alias("s")
-    ).collect()[0]
-    est = (row["s"] or 0) * 8 + row["r"] * 48
-    small = est < cap_bytes
-    return (F.broadcast(arrays_df) if small else arrays_df), small
+    """The exact-verify side DF(id, sh_arr, n) of a :func:`_sized_cut`
+    table, broadcast-hinted iff its observed size (8 B per element, 48 B
+    per row) fits ``_VERIFY_BCAST_CAP``, and whether it did: the
+    second-stage estimate tier engages only when the arrays are shuffled
+    per candidate."""
+    side = base.select(F.col(id_col).alias("id"), "sh_arr", "n")
+    small = (size["s"] or 0) * 8 + size["r"] * 48 < _VERIFY_BCAST_CAP
+    return (F.broadcast(side) if small else side), small
 
 
 def _broadcast_if_small_ids(ids_df: DataFrame, cap_rows: int = 4_000_000) -> DataFrame:
@@ -277,9 +286,9 @@ def _minhash_sig2_table(expl: DataFrame, seed_offset: int) -> DataFrame:
     192-column HashAggregate exceeds ``spark.sql.codegen.maxFields`` (100)
     and the whole stage silently drops out of codegen — measured 8.1–18.8 s
     vs 3.3–3.9 s chunked on the sf0.1 capstone corpus
-    (tools/profile_sig2_build.py; the string-vs-long input accounts for the
-    spread within each form). Output values are bit-identical — the chunks
-    partition the seed range."""
+    (tools/profile_sig2_build.py at git revision df77bdc; the string-vs-long
+    input accounts for the spread within each form). Output values are
+    bit-identical — the chunks partition the seed range."""
     # top 32 bits via shiftright (always in int range — ANSI mode rejects
     # a plain bigint→int cast on overflow)
     half = _EST2_HASHES // 2
@@ -347,6 +356,89 @@ def _prefilter_tau(threshold: float) -> float:
     return max(float(threshold) - 5e-5, 0.0)
 
 
+def _est1_side(sigs: DataFrame, num_hashes: int, n_docs: int) -> DataFrame:
+    """The first estimate tier's side DF(id, _tag): position-tagged
+    ``num_hashes``-wide signatures (:func:`_pos_tagged_sig`), broadcast
+    when ``n_docs`` fixed-width rows fit 64 MB."""
+    tagged = sigs.select("id", _pos_tagged_sig(F.col("sig"), width=num_hashes).alias("_tag"))
+    return F.broadcast(tagged) if n_docs * (num_hashes * 8 + 48) < (64 << 20) else tagged
+
+
+def _est2_fits(threshold: float, n_docs: int) -> bool:
+    """Whether the second estimate tier can prune at all: its bar is tighter
+    than the first tier's τ/2 and its table of ``n_docs`` rows broadcasts."""
+    t = float(threshold)
+    return _est2_cut(t) > t / 2.0 + 1e-9 and n_docs * (_EST2_HASHES * 4 + 48) < (64 << 20)
+
+
+def _verify_pairs(
+    cand: DataFrame,
+    va: DataFrame,
+    vb: DataFrame,
+    threshold: float,
+    score: str = "jaccard",
+    *,
+    est1: tuple[DataFrame, DataFrame] | None = None,
+    sig2: DataFrame | None = None,
+    ratio_tau: float = 0.0,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """The exact verify of every near-dup operator: the candidate pairs of
+    ``cand`` DF(id_a, id_b, *keep) whose exact shingle-set ``score`` is at
+    least ``threshold``, as DF(id_a, id_b, *keep, <score>), the score
+    rounded to 4 dp (cross-engine fp safety: the division is of exact
+    integer counts). ``va``/``vb`` are the two array sides DF(id, sh_arr, n)
+    (:func:`_array_side`; one table twice for a self-join). ``score`` is
+    ``jaccard`` |A∩B|/|A∪B|, ``containment`` |A∩B|/|A| (directed, id_a
+    inside id_b) or ``overlap`` |A∩B|/min(|A|, |B|).
+
+    Prune tiers ahead of the intersect, each a frame or bound the caller
+    already has (None / 0 = off), in this order:
+
+    - ``est1``: the two sides' :func:`_est1_side` tables; keeps pairs whose
+      64-hash positional agreement is at least τ/2 (added miss ~3e-5 per
+      true pair at τ = 0.5, an order under the banding's own floor; see
+      :func:`minhash_lsh_exact_pairs`);
+    - ``sig2``: the broadcast second-stage table (:func:`_sig2_prune`);
+    - ``ratio_tau`` > 0 (Jaccard only): the lossless size-ratio bound
+      J ≥ τ ⟹ min(n)/max(n) ≥ τ, pre-slacked by :func:`_prefilter_tau` —
+      two O(1) reads ahead of the O(n) intersect.
+
+    Every tier is pair-deterministic, so the kernel commutes with distinct
+    and with any split of the candidate set into rounds."""
+    t = float(threshold)
+    if est1 is not None:
+        sa, sb = est1
+        cand = (
+            cand.join(sa.select(F.col("id").alias("id_a"), F.col("_tag").alias("_siga")), "id_a")
+            .join(sb.select(F.col("id").alias("id_b"), F.col("_tag").alias("_sigb")), "id_b")
+            .filter(F.size(F.array_intersect("_siga", "_sigb")) >= t / 2.0 * F.size("_siga"))
+            .drop("_siga", "_sigb")
+        )
+    if sig2 is not None:
+        cand = _sig2_prune(cand, sig2, t)
+    pairs = cand.join(
+        va.select(F.col("id").alias("id_a"), F.col("sh_arr").alias("_sa"), F.col("n").alias("na")),
+        "id_a",
+    ).join(
+        vb.select(F.col("id").alias("id_b"), F.col("sh_arr").alias("_sb"), F.col("n").alias("nb")),
+        "id_b",
+    )
+    if ratio_tau > 0:
+        pairs = pairs.filter(
+            (F.col("nb") >= ratio_tau * F.col("na")) & (F.col("na") >= ratio_tau * F.col("nb"))
+        )
+    pairs = pairs.withColumn("_c", F.size(F.array_intersect("_sa", "_sb")))
+    denom = {
+        "jaccard": F.col("na") + F.col("nb") - F.col("_c"),
+        "containment": F.col("na"),
+        "overlap": F.least("na", "nb"),
+    }[score]
+    return pairs.select(
+        "id_a", "id_b", *keep, F.round(F.col("_c") / denom, 4).alias(score)
+    ).filter(F.col(score) >= threshold)
+
+
 # ------------------------------------------------------- exact n-gram Jaccard
 
 def ngram_jaccard_pairs(
@@ -391,13 +483,11 @@ def ngram_jaccard_pairs(
     # prefix table, and both verification sides (recomputing it 4x was 3x the
     # whole query's cost)
     sfn = shingle_fn if shingle_fn is not None else char_shingles
-    base = (
-        cut_lineage(df.select(
-            F.col(id_col), *extra, sfn(F.col(text_col), k).alias("_sh_str")
-        )
+    base, size = _sized_cut(
+        df.select(F.col(id_col), *extra, sfn(F.col(text_col), k).alias("_sh_str"))
         .withColumn("sh_arr", F.transform("_sh_str", lambda s: F.xxhash64(s)))
         .withColumn("n", F.size("sh_arr"))
-        .drop("_sh_str"))
+        .drop("_sh_str")
     )
     expl = base.select(F.col(id_col), *extra, "n", F.explode("sh_arr").alias("sh"))
     # only shingles shared by ≥2 docs can generate a candidate; df-unique
@@ -437,18 +527,8 @@ def ngram_jaccard_pairs(
         # negligible shuffle at any scale and pins verify parallelism.
         .repartition(df.sparkSession.sparkContext.defaultParallelism, "id_a")
     )
-    base_v, _ = _verify_side(base)  # verify-side cap: see _VERIFY_BCAST_CAP
-    va = base_v.select(F.col(id_col).alias("id_a"), F.col("sh_arr").alias("_sa"), F.col("n").alias("na"))
-    vb = base_v.select(F.col(id_col).alias("id_b"), F.col("sh_arr").alias("_sb"), F.col("n").alias("nb"))
-    inter = cand.join(va, "id_a").join(vb, "id_b").withColumn(
-        "c", F.size(F.array_intersect("_sa", "_sb"))
-    )
-    jac = inter.select(
-        "id_a",
-        "id_b",
-        F.round(F.col("c") / (F.col("na") + F.col("nb") - F.col("c")), 4).alias("jaccard"),
-    ).filter(F.col("jaccard") >= threshold)
-    return jac.select(
+    side, _ = _array_side(base, size, id_col)
+    return _verify_pairs(cand, side, side, threshold).select(
         F.col("id_a").cast("bigint"), F.col("id_b").cast("bigint"), "jaccard"
     )
 
@@ -494,14 +574,12 @@ def ngram_containment_pairs(
 
     extra = [F.col(block_col)] if block_col else []
     sfn = shingle_fn if shingle_fn is not None else char_shingles
-    base = (
-        cut_lineage(df.select(
-            F.col(id_col), *extra, sfn(F.col(text_col), k).alias("_sh_str")
-        )
+    base, size = _sized_cut(
+        df.select(F.col(id_col), *extra, sfn(F.col(text_col), k).alias("_sh_str"))
         .withColumn("sh_arr", F.transform("_sh_str", md5_hash60))
         .withColumn("n", F.size("sh_arr"))
         .filter(F.col("n") > 0)
-        .drop("_sh_str"))
+        .drop("_sh_str")
     )
     expl = base.select(F.col(id_col), *extra, "n", F.explode("sh_arr").alias("sh"))
     dfreq = expl.groupBy("sh").agg(F.count(F.lit(1)).alias("_df")).filter(
@@ -535,22 +613,8 @@ def ngram_containment_pairs(
         .distinct()
         .repartition(df.sparkSession.sparkContext.defaultParallelism, "id_a")
     )
-    base_v, _ = _verify_side(base)  # verify-side cap: see _VERIFY_BCAST_CAP
-    va = base_v.select(F.col(id_col).alias("id_a"), F.col("sh_arr").alias("_sa"), F.col("n").alias("na"))
-    vb = base_v.select(F.col(id_col).alias("id_b"), F.col("sh_arr").alias("_sb"))
-    out = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.size(F.array_intersect("_sa", "_sb")) / F.col("na"), 4
-            ).alias("containment"),
-        )
-        .filter(F.col("containment") >= threshold)
-    )
-    return out.select(
+    side, _ = _array_side(base, size, id_col)
+    return _verify_pairs(cand, side, side, threshold, "containment").select(
         F.col("id_a").cast("bigint"), F.col("id_b").cast("bigint"), "containment"
     )
 
@@ -607,7 +671,18 @@ def lsh_candidate_pairs(
             f"LSH geometry mismatch: bands*rows_per_band = {bands}*{rows_per_band}"
             f" = {bands * rows_per_band}, but signatures have length {first[0]['n']}"
         )
-    banded = signatures.select(
+    banded = _band_rows(signatures, bands, rows_per_band)
+    return (
+        _band_join(banded, banded, signatures.sparkSession.sparkContext.defaultParallelism)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .distinct()
+    )
+
+
+def _band_rows(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
+    """DF(id, band, bh): each signature's ``bands`` band hashes, bh =
+    xxhash64 of the band's ``rows_per_band`` signature values."""
+    return sigs.select(
         "id",
         F.explode(
             F.array(
@@ -623,24 +698,23 @@ def lsh_candidate_pairs(
             )
         ).alias("bb"),
     ).select("id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
-    # pin the join parallelism: the banded table is bytes-SMALL (3 narrow
-    # columns), so AQE coalesces its exchange to 1-2 partitions — but the
-    # self-join's OUTPUT is the candidate expansion (up to Σ|bucket|²/2
-    # rows), which then materializes on those 1-2 cores (measured: the sf1
-    # adversarial corpus pinned this stage at 2 tasks for minutes). An
-    # explicitly-numbered repartition is exempt from AQE coalescing, and
-    # partitioning both sides identically makes the join itself zero-extra
-    # shuffle.
-    nparts = signatures.sparkSession.sparkContext.defaultParallelism
-    banded = banded.repartition(nparts, "band", "bh")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh")))
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+
+
+def _band_join(a: DataFrame, b: DataFrame, nparts: int) -> DataFrame:
+    """Raw (id_a, id_b) pairs of two banded tables sharing a (band, bh)
+    bucket. Pins the join parallelism: a banded table is bytes-SMALL (3
+    narrow columns), so AQE coalesces its exchange to 1-2 partitions — but
+    the join's OUTPUT is the candidate expansion (up to Σ|bucket|² rows),
+    which then materializes on those 1-2 cores (measured: the sf1
+    adversarial corpus pinned this stage at 2 tasks for minutes). An
+    explicitly-numbered repartition is exempt from AQE coalescing, and
+    partitioning both sides identically makes the join itself zero-extra
+    shuffle."""
+    a = a.repartition(nparts, "band", "bh").alias("a")
+    b = b.repartition(nparts, "band", "bh").alias("b")
+    return a.join(
+        b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh"))
+    ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
 
 
 def minhash_estimated_jaccard(
@@ -731,110 +805,43 @@ def minhash_lsh_exact_pairs(
     5000-doc templated sf0.1 corpus: 5.8M candidates → 530k exact
     verifies → 256 true pairs; 687 s → 22.6 s end-to-end together with
     the pre-verify repartition spread below)."""
-    rows_per_band = max(num_hashes // bands, 1)
-    sh_base = (
-        cut_lineage(df.select(F.col(id_col).alias("id"), char_shingles(F.col(text_col), k).alias("_s"))
-        .withColumn("sh_arr", F.transform("_s", lambda s: F.xxhash64(s)))
-        .withColumn("n", F.size("sh_arr"))
-        .filter(F.col("n") > 0)
-        .drop("_s"))
-    )
-    expl = sh_base.select("id", F.explode("sh_arr").alias("sh"))
-    aggs = [F.min(F.xxhash64("sh", F.lit(i))).alias(f"_h{i}") for i in range(num_hashes)]
-    sigs = (
-        expl.groupBy("id")
-        .agg(*aggs)
-        .select("id", F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("sig"))
-    )
+    base, size, sigs, _ = _xxhash_banded(df, id_col, text_col, num_hashes, bands, k)
     # spread FIRST: the candidate list out of the banding distinct is
     # bytes-small (two ids/row), so AQE coalesces it to a couple of
-    # partitions — but everything downstream of it (the estimate tier's
-    # zip_with over num_hashes elements, then the exact array_intersect)
-    # is CPU-heavy per row; without the explicit spread those stages run
-    # on 1-2 cores however many the session has (measured: the sf1
-    # adversarial sweep pinned at 2 tasks). ROUND-ROBIN, not hash: the
-    # candidate distinct already partitions by (id_a, id_b), so a hash
-    # repartition on the same keys with defaultParallelism ==
-    # shuffle.partitions (the production config) is ELIDED by
-    # EnsureRequirements — the pin silently vanishes and the remaining
-    # ENSURE_REQUIREMENTS exchange is AQE-coalescible again. RR can never
-    # be satisfied by the child's hash partitioning, so it survives, and
-    # it spreads a hot id's fan-out perfectly evenly besides.
-    cands = lsh_candidate_pairs(sigs, bands, rows_per_band).repartition(
+    # partitions — but everything downstream of it (the estimate tiers,
+    # then the exact array_intersect) is CPU-heavy per row; without the
+    # explicit spread those stages run on 1-2 cores however many the
+    # session has (measured: the sf1 adversarial sweep pinned at 2 tasks).
+    # ROUND-ROBIN, not hash: the candidate distinct already partitions by
+    # (id_a, id_b), so a hash repartition on the same keys with
+    # defaultParallelism == shuffle.partitions (the production config) is
+    # ELIDED by EnsureRequirements — the pin silently vanishes and the
+    # remaining ENSURE_REQUIREMENTS exchange is AQE-coalescible again. RR
+    # can never be satisfied by the child's hash partitioning, so it
+    # survives, and it spreads a hot id's fan-out perfectly evenly besides.
+    cands = lsh_candidate_pairs(sigs, bands, max(num_hashes // bands, 1)).repartition(
         df.sparkSession.sparkContext.defaultParallelism
     )
-    # estimate-tier prune (see docstring): drop candidates whose cheap
-    # signature-agreement estimate can't plausibly reach the threshold
-    # before shipping the full shingle arrays into the exact kernel.
-    # Engaged only past the corpus-size floor — on a small corpus the
-    # exact verify of every candidate costs less than the tier itself,
-    # and the skip arm is the exact candidate set.
-    n_docs = sh_base.count()
-    sh_base_v, _sh_bcast = _verify_side(sh_base)
+    side, side_bcast = _array_side(base, size)
+    # estimate tiers (see docstring), engaged only past the corpus-size
+    # floor of shingled docs — on a small corpus the exact verify of every
+    # candidate costs less than the tier itself, and the skip arm is the
+    # exact candidate set. The second stage (see _EST2_HASHES) engages
+    # ONLY in the arrays-don't-broadcast regime, where each pruned
+    # candidate saves a fat-array exchange row (regime gate — measured
+    # net-negative otherwise); its seeds continue the same xxhash64 family
+    # past stage 1's, over the pre-hashed shingle longs.
+    est1 = sig2 = None
+    n_docs = size["r"]
     if n_docs > _ESTIMATE_TIER_MIN_DOCS:
-        sigs_m = cut_lineage(sigs)
-        # fixed-width rows (num_hashes longs + header): the doc count alone
-        # sizes the broadcast decision, same rationale as _broadcast_if_small
-        sigs_v = (
-            F.broadcast(sigs_m)
-            if n_docs * (num_hashes * 8 + 48) < (64 << 20)
-            else sigs_m
-        )
-        # positional agreement as a codegen array_intersect over
-        # position-tagged signatures (see _pos_tagged_sig: mask collisions
-        # only inflate the count ⇒ prune keeps a superset ⇒ the exact
-        # verify below yields bit-identical results)
-        est_agree = F.size(F.array_intersect("_siga", "_sigb"))
-        tagged = _pos_tagged_sig(F.col("sig"), width=num_hashes)
-        cands = (
-            cands.join(
-                sigs_v.select(F.col("id").alias("id_a"), tagged.alias("_siga")),
-                "id_a",
-            )
-            .join(
-                sigs_v.select(F.col("id").alias("id_b"), tagged.alias("_sigb")),
-                "id_b",
-            )
-            .filter(est_agree >= float(threshold) / 2.0 * F.size("_siga"))
-            .select("id_a", "id_b")
-        )
-        # second-stage estimate (see _EST2_HASHES): a 4σ cut over 192 extra
-        # int32 hash rows, engaged ONLY in the arrays-don't-broadcast
-        # regime where each pruned candidate saves a fat-array exchange
-        # row (regime gate — measured net-negative otherwise), when the
-        # tighter bar exists (τ−4σ > τ/2) and the sig2 table broadcasts;
-        # stage-2 seeds continue the same xxhash64 family past stage 1's
-        # (here over the pre-hashed shingle longs, matching how this
-        # path's stage-1 signatures are derived)
-        if (
-            not _sh_bcast
-            and _est2_cut(float(threshold)) > float(threshold) / 2.0 + 1e-9
-            and n_docs * (_EST2_HASHES * 4 + 48) < (64 << 20)
-        ):
-            sig2 = _minhash_sig2_table(expl, seed_offset=num_hashes)
-            cands = _sig2_prune(cands, F.broadcast(sig2), float(threshold))
-    va = sh_base_v.select(F.col("id").alias("id_a"), F.col("sh_arr").alias("_sa"), F.col("n").alias("na"))
-    vb = sh_base_v.select(F.col("id").alias("id_b"), F.col("sh_arr").alias("_sb"), F.col("n").alias("nb"))
-    joined = cands.join(va, "id_a").join(vb, "id_b")
-    ratio_tau = _prefilter_tau(float(threshold))
-    if ratio_tau > 0:
-        # lossless size-ratio prefilter (J ≥ τ ⟹ min(n)/max(n) ≥ τ, slacked
-        # by the rounding half-ulp): two O(1) reads ahead of the intersect
-        joined = joined.filter(
-            (F.col("nb") >= ratio_tau * F.col("na"))
-            & (F.col("na") >= ratio_tau * F.col("nb"))
-        )
-    inter = joined.withColumn(
-        "c", F.size(F.array_intersect("_sa", "_sb"))
-    )
-    return (
-        inter.select(
-            F.col("id_a").cast("bigint"),
-            F.col("id_b").cast("bigint"),
-            F.round(F.col("c") / (F.col("na") + F.col("nb") - F.col("c")), 4).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+        est1 = (_est1_side(sigs, num_hashes, n_docs),) * 2
+        if not side_bcast and _est2_fits(threshold, n_docs):
+            sig2 = F.broadcast(_minhash_sig2_table(
+                base.select("id", F.explode("sh_arr").alias("sh")), seed_offset=num_hashes
+            ))
+    return _verify_pairs(
+        cands, side, side, threshold, est1=est1, sig2=sig2, ratio_tau=_prefilter_tau(threshold)
+    ).select(F.col("id_a").cast("bigint"), F.col("id_b").cast("bigint"), "jaccard")
 
 
 # --------------------------------------------------- near-dup cluster & drop
@@ -1291,7 +1298,6 @@ def minhash_cluster_members(
     AQE bytes-small trap), O(log n) star-contraction rounds, plus
     (verify=True) one repair join whose OUTPUT is bounded by the crossing
     candidate mass. No stage materializes group² rows."""
-    rows_per_band = max(num_hashes // bands, 1)
     if verify:
         # same xxhash64 family + banding as minhash_lsh_exact_pairs: the
         # fixpoint equivalence is w.r.t. the SAME candidate universe as the
@@ -1300,31 +1306,22 @@ def minhash_cluster_members(
         # (there the buckets ARE the result, so the oracle must recompute
         # them; here every edge is exactly re-verified anyway)
         # cut the signature table ITSELF (r10): it has two downstream
-        # consumers with their own cuts — the bucket explode here and the
-        # estimate tier's sigs_m below — and each cut_lineage materializes
-        # its full input plan, so an uncut sig_arr ran the whole
-        # shingle→64-min pipeline twice (~50 s of the keep_best sf1
-        # profile's setup phase)
+        # consumers — the bucket explode here and the estimate tier — and
+        # each cut_lineage materializes its full input plan, so an uncut
+        # sig_arr ran the whole shingle→64-min pipeline twice (~50 s of the
+        # keep_best sf1 profile's setup phase)
         sig_arr = cut_lineage(
             minhash_signatures(
                 df, id_col=id_col, text_col=text_col, num_hashes=num_hashes, k=k
             )
         )
-        bucket_cols = [
-            F.concat_ws(
-                ",",
-                F.lit(str(b)),
-                F.xxhash64(
-                    *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-                ).cast("string"),
-            )
-            for b in range(bands)
-        ]
         # one materialization: the bucket table feeds the star reps, the
-        # star edges, AND every repair round's self-join — uncut, the
-        # signature build re-runs per consumer
+        # star edges, AND the repair's self-join — uncut, the signature
+        # build re-runs per consumer
         bkts = cut_lineage(
-            sig_arr.select("id", F.explode(F.array(*bucket_cols)).alias("bkt"))
+            _band_rows(sig_arr, bands, max(num_hashes // bands, 1)).select(
+                "id", F.concat_ws(",", F.col("band").cast("string"), F.col("bh").cast("string")).alias("bkt")
+            )
         )
     else:
         bkts = portable_band_buckets(
@@ -1333,308 +1330,202 @@ def minhash_cluster_members(
         )
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     edges = band_bucket_star_edges(bkts, parallelism)
-    if verify:
-        sh = cut_lineage(
-            df.select(
-                F.col(id_col).cast("bigint").alias("id"),
-                F.transform(
-                    char_shingles(F.col(text_col), k), md5_hash60
-                ).alias("_arr"),
-            ).withColumn("n", F.size("_arr"))
+    if not verify:
+        return _label_docs(df, id_col, near_duplicate_clusters(edges))
+    # the estimate tiers engage on the count of SHINGLED docs (>=1
+    # k-shingle, i.e. len(text) >= k), observed on the array table's cut —
+    # the identical engage condition as the pairs path's (its base keeps
+    # n > 0 only), so both paths flip the prune on the same corpora;
+    # counting raw df rows could disagree on corpora straddling the floor
+    # with sub-k-length docs, breaking the documented pairs->CC
+    # equivalence by the prune's ~3e-5 tier.
+    sh, size = _sized_cut(
+        df.select(
+            F.col(id_col).cast("bigint").alias("id"),
+            F.transform(char_shingles(F.col(text_col), k), md5_hash60).alias("sh_arr"),
+        ).withColumn("n", F.size("sh_arr")),
+        F.count(F.when(F.col("n") > 0, 1)).alias("docs"),
+    )
+    side, side_bcast = _array_side(sh, size)
+    n_docs = size["docs"]
+    est1 = sig2 = None
+    if n_docs > _ESTIMATE_TIER_MIN_DOCS:
+        est1 = (_est1_side(sig_arr, num_hashes, n_docs),) * 2
+    # second-stage estimate (see _EST2_HASHES), built over the md5-60
+    # PRE-HASHED shingle longs already materialized in `sh` (r14: no
+    # re-shingling, no string hashing; an equally valid min-wise family,
+    # so the 4σ analysis is unchanged). In the arrays-don't-broadcast
+    # regime it engages unconditionally (every pruned row saves a
+    # fat-array exchange row); in the BROADCAST regime it engages
+    # adaptively inside the crossing repair below, where a sampled agree64
+    # probe predicts whether the tier prunes enough to beat its own cost.
+    est2_possible = est1 is not None and _est2_fits(threshold, n_docs)
+
+    def build_sig2():
+        return F.broadcast(_minhash_sig2_table(
+            sh.select("id", F.explode("sh_arr").alias("sh")), seed_offset=num_hashes
+        ))
+
+    if est2_possible and not side_bcast:
+        sig2 = build_sig2()
+    ratio_tau = _prefilter_tau(float(threshold))
+    bkts_m = cut_lineage(bkts.select(F.col("id").cast("bigint").alias("id"), "bkt"))
+    labels = _star_labels(
+        bkts_m,
+        _verify_pairs(edges, side, side, threshold, est1=est1, sig2=sig2, ratio_tau=ratio_tau),
+        n_docs,
+    )
+    # ONE repair round reaches the fixpoint. Crossing-ness is monotone
+    # decreasing under merges (labels only ever merge, so a pair with
+    # equal labels keeps them equal), hence the crossing candidate set
+    # computed NOW — right after the star contraction — is a superset
+    # of every later round's: verifying all of it at once and merging
+    # the survivors leaves no unverified crossing candidate, which is
+    # exactly the fixpoint condition the equivalence proof needs. Only
+    # candidates crossing two star clusters are enumerated (label
+    # inequality sits inside the join predicate — intra-cluster bucket
+    # pairs, i.e. the Θ(Σ group²) true-dup mass, are dropped during
+    # the join and never materialized).
+    #
+    # ride the shingle count on the labeled bucket table so the
+    # size-ratio bound can run inside the crossing join itself (r14):
+    # same count-free broadcast class as the labels join
+    sh_n = sh.select("id", "n")
+    lb = cut_lineage(
+        bkts_m.join(_ids_bcast(labels, n_docs), "id")
+        .join(F.broadcast(sh_n) if n_docs < 4_000_000 else sh_n, "id")
+        .select("id", "bkt", "n", F.col("cluster").alias("_lbl"))
+    )
+    # salted block self-join (seam above: hot buckets spread over salts²
+    # tasks — the numbered pin opted the join out of AQE skew split, r10
+    # keep_best profile). Adaptive salt: G=1 (plain bucket self-join, no
+    # replication) unless the probe sees a hot bucket whose Θ(bucket²)
+    # product would straggle one task (judge r11 item: the unconditional
+    # 8× replication cost ~2 s at sf0.1 where nothing is hot)
+    G = crossing_salt_factor(lb, parallelism)
+    cross = salted_label_crossing_candidates(
+        lb, parallelism, salts=G, ratio_tau=ratio_tau
+    )
+    # DISTINCT FIRST, then prune (r14, prune∘distinct == distinct∘prune —
+    # the kernel's tiers are pair-deterministic): the raw crossing mass is
+    # narrow (4 longs/row), so the distinct's exchange is cheap, while
+    # every per-candidate tier costs ~40 µs·core/row — running the tiers
+    # on the multi-band duplicate factor (3.2× at sf0.1: 23.4M raw vs
+    # 7.35M unique survivors) was the dominant repair cost (measured on
+    # the capstone corpus: prune-first 25.6 s + distinct vs distinct
+    # 5.3 s + prune 9.6 s).
+    # dedup + pin, r15: groupBy(pair).max replaces distinct (max() ==
+    # distinct here — _la/_lb are functions of their ids, the labels
+    # table maps each id to exactly one cluster), keeping the map-side
+    # partial aggregation that shrinks the raw multi-band mass BEFORE its
+    # exchange (dropping it and exchanging raw rows OOM'd the 10× replica
+    # at c32: 430.6M raw rows land in one final-agg stage). The numbered
+    # pin then re-spreads the UNIQUE mass only: hashing on (id_a, id_b,
+    # _la) — a different expression set than the agg's output
+    # partitioning, so the planner cannot elide it (the r8 pin-elision
+    # trap), with the same spread quality (_la is id_a-determined) and
+    # none of the round-robin form's sort-before-repartition.
+    cross = (
+        cross.groupBy("id_a", "id_b")
+        .agg(F.max("_la").alias("_la"), F.max("_lb").alias("_lb"))
+        .repartition(parallelism, "id_a", "id_b", "_la")
+    )
+    # BROADCAST-regime adaptive est2 engage (r14 session D). With the
+    # shingle arrays broadcast-resident the exact verify is map-side, but
+    # on shared-vocabulary corpora the crossing mass collapses toward
+    # all-pairs (8.36M distinct candidates over 4,992 capstone docs at
+    # sf0.1) and the ~320-element exact intersect per candidate dwarfs a
+    # 192-int agreement check: measured repair verify 15.3 s (prune+exact)
+    # vs 8.6 s (prune+est2+exact) + 3.5 s cheap sig2 build
+    # (tools/profile_verify_kernel_d.py and profile_sig2_build.py at git
+    # revision df77bdc). On bar-hugging corpora est2 keeps ~everything and
+    # would be pure cost, so engage only when (a) the candidate mass says
+    # the banding collapsed (≫ docs) and (b) a 1/64 hash-sampled agree64
+    # probe predicts the tier keeps < half — the probe only reads the
+    # already-broadcast stage-1 signatures, so it costs one tiny job. The
+    # engage decision affects COST only: est2 keeps a documented
+    # ~3e-5-miss superset and the exact verify is unchanged.
+    if est2_possible and sig2 is None:
+        # spill_only: this table is candidate-mass-sized (130M rows /
+        # ~5 GB at the 10× replica) and is re-read under the repair
+        # verify's resident broadcast hash relations — MEMORY_AND_DISK
+        # blocks OOM'd the 10× c32 run (r15); stream it from disk
+        cross, (n_cand,) = cut_lineage(
+            cross, spill_only=True, stats=[F.count(F.lit(1))]
         )
-        sh_v, _sh_bcast = _verify_side(sh)
-        sh_v = sh_v.drop("n")
-        # the same estimate-tier prune as minhash_lsh_exact_pairs (same
-        # engage floor, same τ/2 bar, same ~3e-5 added miss analysis): on
-        # shared-vocabulary corpora the crossing candidate mass is much
-        # larger than the plausible-pair mass, and the 64-long signature
-        # agreement costs ~a tenth of the shingle-array intersection.
-        # Count SHINGLED docs (>=1 k-shingle, i.e. len(text) >= k) — the
-        # identical engage condition as the pairs path's sh_base.count()
-        # (n > 0 filter above) — so both paths flip the prune on the same
-        # corpora; counting raw df rows could disagree on corpora
-        # straddling the floor with sub-k-length docs, breaking the
-        # documented pairs->CC equivalence by the prune's ~3e-5 tier.
-        n_docs = sh.filter(F.col("n") > 0).count()
-        sig_prune = None
-        sigs_broadcast = False
-        if n_docs > _ESTIMATE_TIER_MIN_DOCS:
-            # sig_arr is already checkpointed above — a narrow select off
-            # the checkpoint needs no second cut
-            sigs_m = sig_arr.select("id", "sig")
-            sigs_broadcast = n_docs * (num_hashes * 8 + 48) < (64 << 20)
-            sigs_v = F.broadcast(sigs_m) if sigs_broadcast else sigs_m
-            # codegen positional agreement (see _pos_tagged_sig): the
-            # former interpreted zip_with fold was ~35 s of the capstone's
-            # 23.4M-candidate repair at sf0.1; the tagged intersect keeps
-            # a superset under mask collisions, so the exact verify below
-            # yields bit-identical clusters
-            est_agree = F.size(F.array_intersect("_siga", "_sigb"))
-            tagged = _pos_tagged_sig(F.col("sig"), width=num_hashes)
-
-            def sig_prune(cand: DataFrame) -> DataFrame:
-                return (
-                    cand.join(
-                        sigs_v.select(F.col("id").alias("id_a"), tagged.alias("_siga")),
-                        "id_a",
-                    )
-                    .join(
-                        sigs_v.select(F.col("id").alias("id_b"), tagged.alias("_sigb")),
-                        "id_b",
-                    )
-                    .filter(est_agree >= float(threshold) / 2.0 * F.size("_siga"))
-                    .drop("_siga", "_sigb")
+        if n_cand > 32 * n_docs:
+            sigs = est1[0]
+            probe = (
+                cross.filter(F.pmod(F.xxhash64("id_a", "id_b"), F.lit(64)) == 0)
+                .join(sigs.select(F.col("id").alias("id_a"), F.col("_tag").alias("_pa")), "id_a")
+                .join(sigs.select(F.col("id").alias("id_b"), F.col("_tag").alias("_pb")), "id_b")
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.sum(
+                        (
+                            F.size(F.array_intersect("_pa", "_pb"))
+                            >= F.lit(_est2_cut(float(threshold))) * F.size("_pa")
+                        ).cast("int")
+                    ).alias("k"),
                 )
+                .first()
+            )
+            if probe["n"] and (probe["k"] or 0) < 0.5 * probe["n"]:
+                sig2 = build_sig2()
+    new_edges, (n_new,) = cut_lineage(
+        _verify_pairs(
+            cross, side, side, threshold, est1=est1, sig2=sig2, ratio_tau=ratio_tau,
+            keep=("_la", "_lb"),
+        ),
+        stats=[F.count(F.lit(1))],
+    )
+    return _label_docs(df, id_col, labels, new_edges if n_new > 0 else None)
 
-        # second-stage estimate (see _EST2_HASHES): same engage floor as
-        # stage 1 and the same 4σ bar as the pairs path. Built over the
-        # md5-60 PRE-HASHED shingle longs already materialized in `sh`
-        # (r14: explode of checkpointed long arrays + long-input xxhash64 —
-        # no re-shingling, no string hashing; the same
-        # pre-hashed-input idiom as minhash_lsh_exact_pairs' stage 2, and
-        # an equally valid min-wise family, so the 4σ analysis is
-        # unchanged; the exact verify downstream keeps results
-        # bit-identical under any family). In the arrays-don't-broadcast
-        # regime the tier engages unconditionally (every pruned row saves
-        # a fat-array exchange row); in the BROADCAST regime it engages
-        # adaptively inside the crossing repair below, where a sampled
-        # agree64 probe predicts whether the tier prunes enough to beat
-        # its own cost (see the repair section).
-        _est2_possible = (
-            sig_prune is not None
-            and _est2_cut(float(threshold)) > float(threshold) / 2.0 + 1e-9
-            and n_docs * (_EST2_HASHES * 4 + 48) < (64 << 20)
+
+def _ids_bcast(ids_df: DataFrame, n_docs: int) -> DataFrame:
+    """Broadcast an id table bounded by ``n_docs`` rows (star labels, doc
+    labels) without a count job of its own when ``n_docs`` clears the cap
+    of :func:`_broadcast_if_small_ids`; past it, that counted gate (r15,
+    judge r14 'Next round #3': same scale-adaptive behavior, two fewer
+    driver-blocking jobs per members call)."""
+    return F.broadcast(ids_df) if n_docs < 4_000_000 else _broadcast_if_small_ids(ids_df)
+
+
+def _star_labels(ids: DataFrame, verified: DataFrame, n_docs: int) -> DataFrame:
+    """The members operators' star round: DF(id, cluster) for every id of
+    ``ids`` (a bucket table), cluster = min id of its component over the
+    verified star edges ``verified`` DF(id_a, id_b, ...), absent = self."""
+    star = near_duplicate_clusters(verified)
+    return cut_lineage(
+        ids.select("id")
+        .distinct()
+        .join(_ids_bcast(star, n_docs), "id", "left")
+        .select("id", F.coalesce("cluster", F.col("id")).alias("cluster"))
+    )
+
+
+def _label_docs(
+    df: DataFrame, id_col: str, labels: DataFrame, merged: DataFrame | None = None
+) -> DataFrame:
+    """DF(id, cluster) for every document of ``df``: its cluster in
+    ``labels`` DF(id, cluster), absent = self. ``merged``, the verified
+    crossing pairs DF(_la, _lb) of the members repair, first merges the
+    star clusters they link by a CC over the LABEL graph (≤ one node per
+    still-split cluster, tiny) rather than re-running CC over a doc-level
+    edge set: cluster = min label = min doc id transitively."""
+    if merged is not None:
+        lmap = near_duplicate_clusters(
+            merged.select(F.col("_la").alias("id_a"), F.col("_lb").alias("id_b")).distinct()
         )
-
-        def _build_sig2():
-            return F.broadcast(
-                _minhash_sig2_table(
-                    sh.select("id", F.explode("_arr").alias("sh")),
-                    seed_offset=num_hashes,
-                )
-            )
-
-        sig2_b = None
-        if _est2_possible and not _sh_bcast:
-            sig2_b = _build_sig2()
-
-        ratio_tau = _prefilter_tau(float(threshold))
-
-        def _verify(
-            cand: DataFrame, extra: tuple[str, ...] = (), pruned: bool = False
-        ) -> DataFrame:
-            # pruned=True means the caller already ran sig_prune in-stage
-            # (the salted crossing path) — re-applying is idempotent but
-            # costs two redundant broadcast joins over the survivors
-            # (advisor r10)
-            if sig_prune is not None and not pruned:
-                cand = sig_prune(cand)
-            if sig2_b is not None:
-                cand = _sig2_prune(cand, sig2_b, float(threshold))
-            out = (
-                cand.join(
-                    sh_v.select(F.col("id").alias("id_a"), F.col("_arr").alias("_sa")),
-                    "id_a",
-                )
-                .join(
-                    sh_v.select(F.col("id").alias("id_b"), F.col("_arr").alias("_sb")),
-                    "id_b",
-                )
-            )
-            if ratio_tau > 0:
-                # lossless size-ratio prefilter (J ≥ τ ⟹ min(n)/max(n) ≥ τ;
-                # slacked by the rounding half-ulp, see _prefilter_tau):
-                # two O(1) length reads ahead of the O(n) intersect
-                out = out.filter(
-                    (F.size("_sb") >= ratio_tau * F.size("_sa"))
-                    & (F.size("_sa") >= ratio_tau * F.size("_sb"))
-                )
-            return (
-                out.withColumn("_i", F.size(F.array_intersect("_sa", "_sb")))
-                .filter(
-                    F.round(
-                        F.col("_i")
-                        / (F.size("_sa") + F.size("_sb") - F.col("_i")),
-                        4,
-                    )
-                    >= threshold
-                )
-                .select("id_a", "id_b", *extra)
-            )
-
-        # consolidated id-broadcast gate (r15, judge r14 'Next round #3'
-        # class): every id table below (star labels, doc labels) is bounded
-        # by the shingled-doc count already in hand — when n_docs clears
-        # the cap, broadcast without a per-frame count job; past the cap,
-        # fall back to the counted gate (same scale-adaptive behavior,
-        # two fewer driver-blocking jobs per call)
-        def _ids_bcast(ids_df: DataFrame) -> DataFrame:
-            if n_docs < 4_000_000:
-                return F.broadcast(ids_df)
-            return _broadcast_if_small_ids(ids_df)
-
-        bkts_m = cut_lineage(bkts.select(F.col("id").cast("bigint").alias("id"), "bkt"))
-        star_lbl = near_duplicate_clusters(cut_lineage(_verify(edges)))
-        # doc-level label table for every bucketed doc (absent = self)
         labels = cut_lineage(
-            bkts_m.select("id")
-            .distinct()
-            .join(_ids_bcast(star_lbl), "id", "left")
-            .select("id", F.coalesce("cluster", F.col("id")).alias("cluster"))
+            labels.join(
+                F.broadcast(
+                    lmap.select(F.col("id").alias("cluster"), F.col("cluster").alias("_nl"))
+                ),
+                "cluster",
+                "left",
+            ).select("id", F.coalesce("_nl", F.col("cluster")).alias("cluster"))
         )
-        # ONE repair round reaches the fixpoint. Crossing-ness is monotone
-        # decreasing under merges (labels only ever merge, so a pair with
-        # equal labels keeps them equal), hence the crossing candidate set
-        # computed NOW — right after the star contraction — is a superset
-        # of every later round's: verifying all of it at once and merging
-        # the survivors leaves no unverified crossing candidate, which is
-        # exactly the fixpoint condition the equivalence proof needs. Only
-        # candidates crossing two star clusters are enumerated (label
-        # inequality sits inside the join predicate — intra-cluster bucket
-        # pairs, i.e. the Θ(Σ group²) true-dup mass, are dropped during
-        # the join and never materialized), and the merge contracts the
-        # LABEL graph (≤ one node per still-split cluster, tiny) rather
-        # than re-running CC over a doc-level edge set.
-        #
-        # the numbered pre-join repartitions live on the SALTED keys below
-        # (the AQE bytes-small trap: the labeled bucket table is 3 narrow
-        # columns, but the self-join's output is the crossing-candidate
-        # expansion)
-        # ride the shingle count on the labeled bucket table so the
-        # size-ratio bound can run inside the crossing join itself (r14):
-        # same count-gated broadcast class as the labels join
-        sh_n = sh.select("id", "n")
-        lb = cut_lineage(
-            bkts_m.join(_ids_bcast(labels), "id")
-            .join(
-                F.broadcast(sh_n) if n_docs < 4_000_000 else sh_n, "id"
-            )
-            .select("id", "bkt", "n", F.col("cluster").alias("_lbl"))
-        )
-        # salted block self-join (seam above: hot buckets spread over
-        # salts² tasks — the numbered pin opted the join out of AQE skew
-        # split, r10 keep_best profile) + ESTIMATE-PRUNE-IN-STAGE: with
-        # the signature table broadcast-resident, the τ/2 agreement fold
-        # runs as two map-side hash joins inside the (spread) join stage,
-        # so the raw Θ(Σ bucket²) candidate mass (430.6M rows at the 10×
-        # replica) is never exchanged — the distinct sees estimate
-        # survivors only. Pair-deterministic prune ⇒ prune∘distinct ==
-        # distinct∘prune: the verified edge set (and the pairs→CC
-        # equivalence) is unchanged — property test green.
-        # adaptive salt: G=1 (plain bucket self-join, no replication)
-        # unless the probe sees a hot bucket whose Θ(bucket²) product
-        # would straggle one task (judge r11 item: the unconditional 8×
-        # replication cost ~2 s at sf0.1 where nothing is hot)
-        G = crossing_salt_factor(lb, parallelism)
-        cross = salted_label_crossing_candidates(
-            lb, parallelism, salts=G, ratio_tau=ratio_tau
-        )
-        # DISTINCT FIRST, then prune (r14 optimization, prune∘distinct ==
-        # distinct∘prune — the documented pair-deterministic property):
-        # the raw crossing mass is narrow (4 longs/row), so the distinct's
-        # exchange is cheap, while every per-candidate tier (sig joins +
-        # agreement intersect) costs ~40 µs·core/row — running the tiers
-        # on the multi-band duplicate factor (3.2× at sf0.1: 23.4M raw vs
-        # 7.35M unique survivors) was the dominant repair cost. Measured
-        # on the capstone corpus: prune-first 25.6 s + distinct vs
-        # distinct 5.3 s + prune 9.6 s. The r13 prune-in-stage design
-        # (avoid exchanging raw candidates) predates the codegen tagged
-        # prune; with the fold 3× cheaper and the distinct exchange
-        # byte-light, distinct-first wins at both sf0.1 and the 10×
-        # replica.
-        # dedup + pin, r15: groupBy(pair).max replaces distinct (max() ==
-        # distinct here — _la/_lb are functions of their ids, the labels
-        # table maps each id to exactly one cluster), keeping the
-        # map-side partial aggregation that shrinks the raw multi-band
-        # mass BEFORE its exchange (dropping it and exchanging raw rows
-        # OOM'd the 10× replica at c32: 430.6M raw rows land in one
-        # final-agg stage). The numbered pin then re-spreads the UNIQUE
-        # mass only: hashing on (id_a, id_b, _la) — a different
-        # expression set than the agg's output partitioning, so the
-        # planner cannot elide it (the r8 pin-elision trap), with the
-        # same spread quality (_la is id_a-determined) and none of the
-        # round-robin form's sort-before-repartition. Measured capstone
-        # candidates (23.4M raw / 8.36M unique): distinct+round-robin
-        # 5.7-12.4 s; this form ≈ the bare-distinct arm (3.9-5.6 s) plus
-        # a sortless 8.36M-row re-spread.
-        cross = (
-            cross.groupBy("id_a", "id_b")
-            .agg(F.max("_la").alias("_la"), F.max("_lb").alias("_lb"))
-            .repartition(parallelism, "id_a", "id_b", "_la")
-        )
-        # BROADCAST-regime adaptive est2 engage (r14 session D). With the
-        # shingle arrays broadcast-resident the exact verify is map-side,
-        # so the old blanket regime gate kept est2 off — but on
-        # shared-vocabulary corpora the crossing mass collapses toward
-        # all-pairs (8.36M distinct candidates over 4,992 capstone docs at
-        # sf0.1) and the ~320-element exact intersect per candidate
-        # dwarfs a 192-int agreement check: measured repair verify 15.3 s
-        # (prune+exact) vs 8.6 s (prune+est2+exact) + 3.5 s cheap sig2
-        # build (tools/profile_verify_kernel_d.py, profile_sig2_build.py).
-        # On bar-hugging corpora est2 keeps ~everything and would be pure
-        # cost, so engage only when (a) the candidate mass says the
-        # banding collapsed (≫ docs) and (b) a 1/64 hash-sampled agree64
-        # probe predicts the tier keeps < half — the probe only reads the
-        # already-broadcast stage-1 signatures, so it costs one tiny job.
-        # The engage decision affects COST only: est2 keeps a documented
-        # ~3e-5-miss superset and the exact verify is unchanged.
-        if _est2_possible and sig2_b is None:
-            # spill_only: this table is candidate-mass-sized (130M rows /
-            # ~5 GB at the 10× replica) and is re-read under the repair
-            # verify's resident broadcast hash relations — MEMORY_AND_DISK
-            # blocks OOM'd the 10× c32 run (r15); stream it from disk
-            cross, (n_cand,) = cut_lineage(
-                cross, spill_only=True, stats=[F.count(F.lit(1))]
-            )
-            if n_cand > 32 * n_docs:
-                bar = _est2_cut(float(threshold))
-                probe = (
-                    cross.filter(
-                        F.pmod(F.xxhash64("id_a", "id_b"), F.lit(64)) == 0
-                    )
-                    .join(
-                        sigs_v.select(F.col("id").alias("id_a"), tagged.alias("_pa")),
-                        "id_a",
-                    )
-                    .join(
-                        sigs_v.select(F.col("id").alias("id_b"), tagged.alias("_pb")),
-                        "id_b",
-                    )
-                    .agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum(
-                            (
-                                F.size(F.array_intersect("_pa", "_pb"))
-                                >= F.lit(bar) * F.size("_pa")
-                            ).cast("int")
-                        ).alias("k"),
-                    )
-                    .first()
-                )
-                if probe["n"] and (probe["k"] or 0) < 0.5 * probe["n"]:
-                    sig2_b = _build_sig2()
-        new_edges, (n_new,) = cut_lineage(
-            _verify(cross, extra=("_la", "_lb")), stats=[F.count(F.lit(1))]
-        )
-        if n_new > 0:
-            lbl_pairs = new_edges.select(
-                F.col("_la").alias("id_a"), F.col("_lb").alias("id_b")
-            ).distinct()
-            # label-graph CC: cluster = min label = min doc id transitively
-            lmap = near_duplicate_clusters(lbl_pairs)
-            labels = cut_lineage(
-                labels.join(
-                    F.broadcast(
-                        lmap.select(
-                            F.col("id").alias("cluster"), F.col("cluster").alias("_nl")
-                        )
-                    ),
-                    "cluster",
-                    "left",
-                ).select("id", F.coalesce("_nl", F.col("cluster")).alias("cluster"))
-            )
-    else:
-        labels = near_duplicate_clusters(edges)
     all_ids = df.select(F.col(id_col).cast("bigint").alias("id")).distinct()
     return all_ids.join(labels, "id", "left").select(
         "id", F.coalesce("cluster", F.col("id")).alias("cluster")
@@ -1720,7 +1611,7 @@ def containment_cluster_members(
 
     extra = [F.col(block_col)] if block_col else []
     sfn = shingle_fn if shingle_fn is not None else char_shingles
-    base = cut_lineage(
+    base, size = _sized_cut(
         df.select(F.col(id_col).cast("bigint").alias("id"), *extra,
                   sfn(F.col(text_col), k).alias("_sh_str"))
         .withColumn("sh_arr", F.transform("_sh_str", md5_hash60))
@@ -1741,55 +1632,12 @@ def containment_cluster_members(
     stars = shingle_bucket_star_edges(occ, bucket_key, parallelism)
     # verify-side cap (see _VERIFY_BCAST_CAP): the containment repair joins
     # these arrays under the crossing candidate list — same amplification
-    # class as the members repair. ONE stats agg serves BOTH the
-    # verify-side broadcast decision and the id-table gates below (r15,
-    # judge r14 'Next round #3': the former per-frame count-gate probes —
-    # star labels, doc labels — are each bounded by this doc count, so
-    # when it clears the cap they broadcast without their own count jobs;
-    # past the cap the counted gate returns, keeping scale adaptivity).
-    _stat = base.agg(
-        F.count(F.lit(1)).alias("r"), F.sum("n").alias("s")
-    ).collect()[0]
-    n_base = _stat["r"]
-    _sh_side = base.select("id", "sh_arr", "n")
-    sh_v = (
-        F.broadcast(_sh_side)
-        if (_stat["s"] or 0) * 8 + n_base * 48 < _VERIFY_BCAST_CAP
-        else _sh_side
-    )
-
-    def _ids_bcast(ids_df: DataFrame) -> DataFrame:
-        if n_base < 4_000_000:
-            return F.broadcast(ids_df)
-        return _broadcast_if_small_ids(ids_df)
-
-    def _verify(cand: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
-        return (
-            cand.join(
-                sh_v.select(F.col("id").alias("id_a"),
-                            F.col("sh_arr").alias("_sa"), F.col("n").alias("na")),
-                "id_a",
-            )
-            .join(
-                sh_v.select(F.col("id").alias("id_b"),
-                            F.col("sh_arr").alias("_sb"), F.col("n").alias("nb")),
-                "id_b",
-            )
-            .withColumn("_c", F.size(F.array_intersect("_sa", "_sb")))
-            .filter(
-                F.round(F.col("_c") / F.least("na", "nb"), 4) >= threshold
-            )
-            .select("id_a", "id_b", *extra_cols)
-        )
-
-    star_lbl = near_duplicate_clusters(cut_lineage(_verify(stars)))
+    # class as the members repair. The base cut's observed row sizes the
+    # verify side, and its doc count bounds the id tables below.
+    side, _ = _array_side(base, size)
+    n_base = size["r"]
     # doc-level labels for every doc that owns a df>=2 shingle (absent = self)
-    labels = cut_lineage(
-        occ.select("id")
-        .distinct()
-        .join(_ids_bcast(star_lbl), "id", "left")
-        .select("id", F.coalesce("cluster", F.col("id")).alias("cluster"))
-    )
+    labels = _star_labels(occ, _verify_pairs(stars, side, side, threshold, "overlap"), n_base)
     # ---- ONE repair pass over the pairs path's candidate universe,
     # restricted inline to crossing pairs. Prefix side: each doc's
     # n - ceil(pre_tau*n) + 1 rarest df>=2 shingles (AllPairs bound on the
@@ -1810,7 +1658,7 @@ def containment_cluster_members(
             "_rn",
             F.row_number().over(Window.partitionBy("id").orderBy("_df", "sh")),
         )
-        .join(_ids_bcast(labels), "id")
+        .join(_ids_bcast(labels, n_base), "id")
         .select("id", *extra, "n", "sh",
                 (F.col("_rn") <= prefix_len).alias("_inpref"),
                 F.col("cluster").alias("_lbl"))
@@ -1849,31 +1697,14 @@ def containment_cluster_members(
         # the numbered pin re-spreads the unique mass on a 3-key hash the
         # planner cannot elide, without the round-robin form's sort.
         .groupBy("id_a", "id_b")
-        .agg(F.max("_ca").alias("_ca"), F.max("_cb").alias("_cb"))
-        .repartition(parallelism, "id_a", "id_b", "_ca")
+        .agg(F.max("_ca").alias("_la"), F.max("_cb").alias("_lb"))
+        .repartition(parallelism, "id_a", "id_b", "_la")
     )
     new_edges, (n_new,) = cut_lineage(
-        _verify(cross, extra_cols=("_ca", "_cb")), stats=[F.count(F.lit(1))]
+        _verify_pairs(cross, side, side, threshold, "overlap", keep=("_la", "_lb")),
+        stats=[F.count(F.lit(1))],
     )
-    if n_new > 0:
-        lbl_pairs = new_edges.select(
-            F.col("_ca").alias("id_a"), F.col("_cb").alias("id_b")
-        ).distinct()
-        lmap = near_duplicate_clusters(lbl_pairs)
-        labels = cut_lineage(
-            labels.join(
-                F.broadcast(
-                    lmap.select(F.col("id").alias("cluster"),
-                                F.col("cluster").alias("_nl"))
-                ),
-                "cluster",
-                "left",
-            ).select("id", F.coalesce("_nl", F.col("cluster")).alias("cluster"))
-        )
-    all_ids = df.select(F.col(id_col).cast("bigint").alias("id")).distinct()
-    return all_ids.join(labels, "id", "left").select(
-        "id", F.coalesce("cluster", F.col("id")).alias("cluster")
-    )
+    return _label_docs(df, id_col, labels, new_edges if n_new > 0 else None)
 
 
 def drop_near_duplicates(
@@ -2232,26 +2063,9 @@ def cross_corpus_dup_members(
     from pyspark.sql.window import Window
 
     nparts = df_new.sparkSession.sparkContext.defaultParallelism
-    base_a, sigs_a, banded_a = _xxhash_banded(
-        df_new, id_col, text_col, num_hashes, bands, k
+    banded_a, banded_b, verify = _cross_corpus_front(
+        df_new, df_ref, id_col, text_col, num_hashes, bands, k, threshold, bucket_cap
     )
-    base_b, sigs_b, banded_b = _xxhash_banded(
-        df_ref, id_col, text_col, num_hashes, bands, k
-    )
-    if bucket_cap is not None:
-        w = Window.partitionBy("band", "bh").orderBy(
-            F.xxhash64("id", F.col("band")), "id"
-        )
-        banded_a = (
-            banded_a.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= int(bucket_cap))
-            .drop("_rn")
-        )
-        banded_b = (
-            banded_b.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= int(bucket_cap))
-            .drop("_rn")
-        )
     # ref side ranked within each bucket (the escalation order) + width
     wb = Window.partitionBy("band", "bh").orderBy("id")
     rb = cut_lineage(
@@ -2267,64 +2081,6 @@ def cross_corpus_dup_members(
             widths, ["band", "bh"]
         )
     )
-    # shared verify tiers (identical constants/engagement to the pairs path)
-    tau = _prefilter_tau(threshold)
-    n_sigs_ab = sigs_a.count() + sigs_b.count()
-    est_on = n_sigs_ab > _ESTIMATE_TIER_MIN_DOCS
-    small_sigs = n_sigs_ab * (num_hashes * 8 + 48) < (64 << 20)
-    sa = sigs_a.select(
-        F.col("id").alias("id_a"), _pos_tagged_sig(F.col("sig"), width=num_hashes).alias("_siga")
-    )
-    sb = sigs_b.select(
-        F.col("id").alias("id_b"), _pos_tagged_sig(F.col("sig"), width=num_hashes).alias("_sigb")
-    )
-    if small_sigs:
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
-    # verify-side cap (see _VERIFY_BCAST_CAP): every escalation round joins
-    # these checkpointed ("huge"-stats) array tables under its candidate
-    # window — without the counted hint each round sort-merges fat arrays
-    base_a_v, _ = _verify_side(base_a)
-    base_b_v, _ = _verify_side(base_b)
-    va = base_a_v.select(
-        F.col("id").alias("id_a"), F.col("sh_arr").alias("_sa"), F.col("n").alias("na")
-    )
-    vb = base_b_v.select(
-        F.col("id").alias("id_b"), F.col("sh_arr").alias("_sb"), F.col("n").alias("nb")
-    )
-
-    def _verified_ids(cand: DataFrame) -> DataFrame:
-        if tau > 0:
-            cand = (
-                cand.join(base_a.select(F.col("id").alias("id_a"), F.col("n").alias("_na")), "id_a")
-                .join(base_b.select(F.col("id").alias("id_b"), F.col("n").alias("_nb")), "id_b")
-                .filter(
-                    (F.col("_nb") >= tau * F.col("_na"))
-                    & (F.col("_nb") <= F.col("_na") / tau)
-                )
-                .select("id_a", "id_b")
-            )
-        if est_on:
-            # codegen positional agreement (see _pos_tagged_sig; superset
-            # under mask collisions ⇒ exact verify below is unchanged)
-            est_agree = F.size(F.array_intersect("_siga", "_sigb"))
-            cand = (
-                cand.join(sa, "id_a")
-                .join(sb, "id_b")
-                .filter(est_agree >= float(threshold) / 2.0 * F.size("_siga"))
-                .select("id_a", "id_b")
-            )
-        j = cand.join(va, "id_a").join(vb, "id_b").withColumn(
-            "c", F.size(F.array_intersect("_sa", "_sb"))
-        )
-        return (
-            j.filter(
-                F.round(F.col("c") / (F.col("na") + F.col("nb") - F.col("c")), 4)
-                >= threshold
-            )
-            .select("id_a")
-            .distinct()
-        )
-
     spark = df_new.sparkSession
     esc = max(2, int(escalation))
     rounds: list[DataFrame] = []  # per-round verified id frames (each cut)
@@ -2343,7 +2099,9 @@ def cross_corpus_dup_members(
             # shuffle.partitions (the r8 pin-elision class)
             .repartition(nparts)
         )
-        newly, (n_new,) = cut_lineage(_verified_ids(cand), stats=[F.count(F.lit(1))])
+        newly, (n_new,) = cut_lineage(
+            verify(cand).select("id_a").distinct(), stats=[F.count(F.lit(1))]
+        )
         if n_new > 0:
             rounds.append(newly)
             unres = unres.join(newly, "id_a", "left_anti")
@@ -2355,7 +2113,7 @@ def cross_corpus_dup_members(
             break
         lo *= esc
     if not rounds:
-        return spark.createDataFrame([], "id bigint")
+        return local_table(spark, "id bigint")
     out = rounds[0]
     for r in rounds[1:]:
         out = out.unionByName(r)
@@ -2371,14 +2129,16 @@ def _xxhash_banded(
     num_hashes: int,
     bands: int,
     k: int,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Shared banding front-end of the cross-corpus family: (base(id,
-    sh_arr, n), sigs(id, sig), banded(id, band, bh)) over the xxhash64
-    minhash family (cheap; portability not needed — every consumer
-    re-verifies exactly, so the oracle never recomputes these buckets).
-    base and sigs are lineage-cut (each feeds several consumers)."""
-    rows_per_band = max(num_hashes // bands, 1)
-    base = cut_lineage(
+):
+    """Shared banding front-end of the xxhash64 pair family
+    (:func:`minhash_lsh_exact_pairs` and the cross-corpus operators):
+    (base(id, sh_arr, n), base's observed size row (:func:`_sized_cut`),
+    sigs(id, sig), banded(id, band, bh)) over the xxhash64 minhash family
+    (cheap; portability not needed — every consumer re-verifies exactly,
+    so the oracle never recomputes these buckets). base and sigs are
+    lineage-cut (each feeds several consumers); the bands read the cut
+    signatures."""
+    base, size = _sized_cut(
         df.select(
             F.col(id_col).alias("id"), char_shingles(F.col(text_col), k).alias("_s")
         )
@@ -2387,38 +2147,58 @@ def _xxhash_banded(
         .filter(F.col("n") > 0)
         .drop("_s")
     )
-    expl = base.select("id", F.explode("sh_arr").alias("sh"))
     aggs = [
         F.min(F.xxhash64("sh", F.lit(i))).alias(f"_h{i}") for i in range(num_hashes)
     ]
-    sigs = (
-        expl.groupBy("id")
+    sigs = cut_lineage(
+        base.select("id", F.explode("sh_arr").alias("sh"))
+        .groupBy("id")
         .agg(*aggs)
-        .select(
-            "id",
-            F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("sig"),
-        )
+        .select("id", F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("sig"))
     )
-    banded = sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.col("sig")[b * rows_per_band + r]
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("bh"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
-    return base, cut_lineage(sigs), banded
+    return base, size, sigs, _band_rows(sigs, bands, max(num_hashes // bands, 1))
+
+
+def _cross_corpus_front(
+    df_a: DataFrame,
+    df_b: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    bands: int,
+    k: int,
+    threshold: float,
+    bucket_cap: int | None,
+):
+    """Shared front of the cross-corpus operators: (banded_a, banded_b,
+    verify). Each corpus is banded by :func:`_xxhash_banded`, each side
+    capped at ``bucket_cap`` docs per band bucket when set (lowest
+    xxhash64(id, band) wins — see :func:`cross_corpus_neardup_pairs`).
+    ``verify(cand)`` runs the exact kernel on candidate pairs (id_a from
+    ``df_a``, id_b from ``df_b``) with the tiers both operators share: the
+    lossless size-ratio bound, and the estimate tier past the floor of
+    combined A+B shingled documents, read from the two base cuts."""
+    from pyspark.sql.window import Window
+
+    base_a, size_a, sigs_a, banded_a = _xxhash_banded(df_a, id_col, text_col, num_hashes, bands, k)
+    base_b, size_b, sigs_b, banded_b = _xxhash_banded(df_b, id_col, text_col, num_hashes, bands, k)
+    if bucket_cap is not None:
+        w = Window.partitionBy("band", "bh").orderBy(F.xxhash64("id", F.col("band")), "id")
+        banded_a, banded_b = (
+            t.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= int(bucket_cap)).drop("_rn")
+            for t in (banded_a, banded_b)
+        )
+    n_docs = size_a["r"] + size_b["r"]
+    est1 = None
+    if n_docs > _ESTIMATE_TIER_MIN_DOCS:
+        est1 = (_est1_side(sigs_a, num_hashes, n_docs), _est1_side(sigs_b, num_hashes, n_docs))
+    va, _ = _array_side(base_a, size_a)
+    vb, _ = _array_side(base_b, size_b)
+
+    def verify(cand: DataFrame) -> DataFrame:
+        return _verify_pairs(cand, va, vb, threshold, est1=est1, ratio_tau=_prefilter_tau(threshold))
+
+    return banded_a, banded_b, verify
 
 
 def cross_corpus_neardup_pairs(
@@ -2450,9 +2230,9 @@ def cross_corpus_neardup_pairs(
     - **size-ratio prefilter** (always on, LOSSLESS): J(A,B) ≥ τ forces
       τ·|A| ≤ |B| ≤ |A|/τ on distinct-shingle counts, so candidates
       outside that band are dropped BEFORE the array_intersect verify —
-      the AllPairs prune of :func:`ngram_jaccard_pairs` applied at the
-      candidate stage. Costs two joins of (id, int) projections, saves
-      the per-pair array kernel.
+      the AllPairs prune of :func:`ngram_jaccard_pairs` applied in the
+      verify kernel (:func:`_verify_pairs`): two O(1) reads of the
+      counts that ride with the arrays, saving the per-pair intersect.
     - **estimate-tier prune** (engages only past ``_ESTIMATE_TIER_MIN_DOCS``
       combined A+B documents, like :func:`minhash_lsh_exact_pairs` — below
       the floor every candidate verifies exactly): candidates whose 64-hash
@@ -2478,126 +2258,20 @@ def cross_corpus_neardup_pairs(
       size you expect (≈100 for web crawls) — that keeps the band join
       bounded by bands·cap² per bucket while losing nothing on real
       corpora, where duplicate clusters are far narrower than buckets."""
-    base_a, sigs_a, banded_a = _xxhash_banded(df_a, id_col, text_col, num_hashes, bands, k)
-    base_b, sigs_b, banded_b = _xxhash_banded(df_b, id_col, text_col, num_hashes, bands, k)
-    if bucket_cap is not None:
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("band", "bh").orderBy(
-            F.xxhash64("id", F.col("band")), "id"
-        )
-        banded_a = (
-            banded_a.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= int(bucket_cap))
-            .drop("_rn")
-        )
-        banded_b = (
-            banded_b.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= int(bucket_cap))
-            .drop("_rn")
-        )
-    # pin the A×B band-join parallelism (same AQE trap as
-    # lsh_candidate_pairs: narrow banded inputs coalesce to 1-2 partitions,
-    # then the candidate expansion materializes on those cores); numbered
-    # repartitions are exempt from coalescing and co-partition the join
+    banded_a, banded_b, verify = _cross_corpus_front(
+        df_a, df_b, id_col, text_col, num_hashes, bands, k, threshold, bucket_cap
+    )
+    # the A×B band join (numbered pins, see _band_join), then spread the
+    # verify stage: the candidate list is BYTES-small, so AQE coalesces it
+    # to one partition — but each row costs an array_intersect over two
+    # shingle arrays, and on a shared-vocab corpus candidates approach
+    # all-pairs (measured: a single-core pin at sf0.1 without this; same
+    # fix as minhash_lsh_exact_pairs). ROUND-ROBIN: spreads a hot doc's
+    # fan-out perfectly evenly, and — unlike a hash repartition on (id_a,
+    # id_b), which the candidate distinct's own partitioning elides
+    # whenever parallelism == shuffle.partitions — it always survives
     nparts = df_a.sparkSession.sparkContext.defaultParallelism
-    banded_a = banded_a.repartition(nparts, "band", "bh")
-    banded_b = banded_b.repartition(nparts, "band", "bh")
-    cands = (
-        banded_a.alias("a")
-        .join(
-            banded_b.alias("b"),
-            (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
+    cands = _band_join(banded_a, banded_b, nparts).distinct().repartition(nparts)
+    return verify(cands).select(
+        F.col("id_a").cast("bigint"), F.col("id_b").cast("bigint"), "jaccard"
     )
-    # lossless size-ratio prune before the array kernel: round(J,4) >= t
-    # forces tau*|A| <= |B| <= |A|/tau on distinct-shingle counts for
-    # tau = t - 5e-5 (the rounding half-ulp slack — the final verify compares
-    # the ROUNDED jaccard, so the exact-threshold bound could drop a pair the
-    # verify would keep). The (id, n) projections are bytes-wide, so these
-    # joins cost far less than the array_intersect rows they eliminate on a
-    # shared-vocab corpus. Skipped entirely at tau <= 0, where every pair
-    # passes anyway and _na/tau would divide by zero.
-    tau = _prefilter_tau(threshold)
-    if tau > 0:
-        cands = (
-            cands.join(
-                base_a.select(F.col("id").alias("id_a"), F.col("n").alias("_na")),
-                "id_a",
-            )
-            .join(
-                base_b.select(F.col("id").alias("id_b"), F.col("n").alias("_nb")),
-                "id_b",
-            )
-            .filter(
-                (F.col("_nb") >= tau * F.col("_na"))
-                & (F.col("_nb") <= F.col("_na") / tau)
-            )
-        )
-    cands = (
-        cands.select("id_a", "id_b")
-        # spread the verify stage: the candidate list is BYTES-small, so AQE
-        # coalesces it to one partition — but each row costs an
-        # array_intersect over two shingle arrays, and on a shared-vocab
-        # corpus candidates approach all-pairs (measured: a single-core pin
-        # at sf0.1 without this; same fix as minhash_lsh_exact_pairs).
-        # ROUND-ROBIN: spreads a hot doc's fan-out perfectly evenly, and —
-        # unlike a hash repartition on (id_a, id_b), which the candidate
-        # distinct's own partitioning elides whenever parallelism ==
-        # shuffle.partitions (the tau <= 0 path) — it always survives
-        .repartition(df_a.sparkSession.sparkContext.defaultParallelism)
-    )
-    # estimate-tier prune — the minhash_lsh_exact_pairs tier applied
-    # cross-corpus: candidates whose signature-agreement estimate is below
-    # threshold/2 skip the array kernel. Adds miss ~3e-5 per true pair at
-    # threshold 0.5, an order of magnitude under the banding's own
-    # (1-J²)^bands floor, so no new recall tier; on a shared-vocab corpus
-    # the survivors shrink toward the plausible-pair mass. Engaged only
-    # past a corpus-size floor: below ~4k docs/side the worst-case
-    # candidate set (~8M pairs) verifies directly for less than the tier's
-    # two signature joins cost, and the skip arm IS the exact candidate
-    # set (no estimate involved at all).
-    n_sigs_ab = sigs_a.count() + sigs_b.count()
-    if n_sigs_ab > _ESTIMATE_TIER_MIN_DOCS:
-        small_sigs = n_sigs_ab * (num_hashes * 8 + 48) < (64 << 20)
-        sa = sigs_a.select(
-            F.col("id").alias("id_a"), _pos_tagged_sig(F.col("sig"), width=num_hashes).alias("_siga")
-        )
-        sb = sigs_b.select(
-            F.col("id").alias("id_b"), _pos_tagged_sig(F.col("sig"), width=num_hashes).alias("_sigb")
-        )
-        if small_sigs:
-            sa, sb = F.broadcast(sa), F.broadcast(sb)
-        # codegen positional agreement (see _pos_tagged_sig; superset under
-        # mask collisions ⇒ the exact verify below is unchanged)
-        est_agree = F.size(F.array_intersect("_siga", "_sigb"))
-        cands = (
-            cands.join(sa, "id_a")
-            .join(sb, "id_b")
-            .filter(est_agree >= float(threshold) / 2.0 * F.size("_siga"))
-            .select("id_a", "id_b")
-        )
-    # verify-side cap (see _VERIFY_BCAST_CAP): checkpointed array tables
-    # report "huge" stats, so without the counted hint the planner
-    # sort-merges — shipping every shingle array once PER CANDIDATE ROW
-    # through two exchanges instead of broadcasting the table once
-    base_a_v, _ = _verify_side(base_a)
-    base_b_v, _ = _verify_side(base_b)
-    va = base_a_v.select(
-        F.col("id").alias("id_a"), F.col("sh_arr").alias("_sa"), F.col("n").alias("na")
-    )
-    vb = base_b_v.select(
-        F.col("id").alias("id_b"), F.col("sh_arr").alias("_sb"), F.col("n").alias("nb")
-    )
-    inter = cands.join(va, "id_a").join(vb, "id_b").withColumn(
-        "c", F.size(F.array_intersect("_sa", "_sb"))
-    )
-    return inter.select(
-        F.col("id_a").cast("bigint"),
-        F.col("id_b").cast("bigint"),
-        F.round(F.col("c") / (F.col("na") + F.col("nb") - F.col("c")), 4).alias(
-            "jaccard"
-        ),
-    ).filter(F.col("jaccard") >= threshold)

@@ -83,6 +83,8 @@ def test_lsh_band_join_parallelism_pinned(spark):
     plan = plans.explain_str(pairs)
     # the numbered repartition shows as REPARTITION_BY_NUM on the exchange
     assert "REPARTITION_BY_NUM" in plan
+    # equality keys carry the band join and the verify joins
+    assert "CartesianProduct" not in plan
 
 
 def test_members_star_edges_shape(spark):
@@ -595,3 +597,202 @@ def test_node2vec_length_reuses_codegen(spark, codegen_db):
 
     walks(2)
     assert _compiles(spark, lambda: walks(6)) == 0
+
+
+# ----------------------------------------------------------------- dedup plans
+
+
+@pytest.fixture(scope="module")
+def plan_docs(spark):
+    """A 120-doc corpus with a ``source`` column, for plan-only checks."""
+    return spark.createDataFrame(
+        [(i, f"src{i % 3}", f"the quick brown fox {i % 17} jumps over the lazy dog {i % 5}") for i in range(120)],
+        "doc_id bigint, source string, text string",
+    )
+
+
+def _dedup_plan_cases():
+    from graphchidb_scala_spark.functions import dedup
+
+    def labeled(docs):
+        return docs.selectExpr("doc_id as id", "source as bkt", "doc_id % 7 as _lbl")
+
+    return {
+        # the exact tier counts map-side before its one exchange
+        "text_exact_dedup": (lambda d: dedup.exact_duplicate_groups(d), ["partial_count"]),
+        # equality keys carry the prefix self-join, never the inequalities alone
+        "ngram_prefix_join": (
+            lambda d: dedup.ngram_jaccard_pairs(d, block_col="source", threshold=0.5),
+            ["!CartesianProduct"],
+        ),
+        # a drop set past the cap carries no broadcast hint, so the corpus
+        # anti-join against a stats-large (24 MB) set shuffles
+        "near_dedup_large_dropset_not_broadcast": (
+            lambda d: d.join(
+                dedup._broadcast_if_small_ids(
+                    d.sparkSession.range(3_000_000).select(F.col("id").alias("doc_id")), cap_rows=1
+                ),
+                "doc_id",
+                "left_anti",
+            ),
+            ["!BroadcastExchange"],
+        ),
+        # the salted crossing keys compile to an equi join whose numbered
+        # repartitions survive; so does the unsalted (G = 1) arm
+        "members_salted_crossing_equi_pinned": (
+            lambda d: dedup.salted_label_crossing_candidates(labeled(d), 32),
+            ["Join", "!BroadcastNestedLoop", "!CartesianProduct", "REPARTITION_BY_NUM"],
+        ),
+        "members_crossing_degenerate_g1_pinned": (
+            lambda d: dedup.salted_label_crossing_candidates(labeled(d), 32, salts=1),
+            ["Join", "!BroadcastNestedLoop", "!CartesianProduct", "REPARTITION_BY_NUM"],
+        ),
+        # the containment members' star seam keeps its numbered pin
+        "containment_members_star_seam_pinned": (
+            lambda d: dedup.shingle_bucket_star_edges(
+                d.select(
+                    F.col("doc_id").alias("id"),
+                    (F.col("doc_id") % 97).cast("string").alias("sh"),
+                    F.lit(5).alias("n"),
+                    F.lit(2).alias("_df"),
+                ),
+                ["sh"],
+                32,
+            ),
+            ["REPARTITION_BY_NUM", "!CartesianProduct", "!BroadcastNestedLoop"],
+        ),
+        # the cross-corpus band join is an equi join of the two banded sides
+        "crosscorpus_band_join_equi": (
+            lambda d: dedup.cross_corpus_neardup_pairs(
+                d.filter(F.col("doc_id") % 2 == 0), d.filter(F.col("doc_id") % 2 == 1)
+            ),
+            ["!CartesianProduct", "!BroadcastNestedLoop"],
+        ),
+    }
+
+
+@pytest.mark.parametrize("case", list(_dedup_plan_cases()))
+def test_dedup_plan_shapes(spark, plan_docs, case):
+    """Plan properties of the dedup family at scale: "X" must appear in the
+    formatted plan, "!X" must not."""
+    build, expect = _dedup_plan_cases()[case]
+    plan = plans.explain_str(build(plan_docs))
+    missing = [e for e in expect if ((e[1:] in plan) if e.startswith("!") else (e not in plan))]
+    assert not missing, (case, missing)
+
+
+def _neardup_corpus(spark, n=600, seed=11):
+    """A seeded corpus with planted near-duplicates: every sixth doc copies
+    an earlier one with one word replaced, and every sixth (offset by one)
+    appends a few words to an earlier one, so it contains it."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = ["".join(rng.choice("abcdefghij") for _ in range(rng.randint(3, 7))) for _ in range(300)]
+    docs: list[list[str]] = []
+    for i in range(n):
+        if i % 6 == 5:
+            words = list(docs[rng.randrange(i)])
+            words[rng.randrange(len(words))] = rng.choice(vocab)
+        elif i % 6 == 4:
+            words = docs[rng.randrange(i)] + [rng.choice(vocab) for _ in range(3)]
+        else:
+            words = [rng.choice(vocab) for _ in range(rng.randint(15, 30))]
+        docs.append(words)
+    return spark.createDataFrame(
+        [(i, " ".join(w)) for i, w in enumerate(docs)], "doc_id bigint, text string"
+    )
+
+
+def _dedup_ops():
+    from graphchidb_scala_spark.functions import dedup
+
+    def split(d):
+        return d.filter(F.col("doc_id") >= 400), d.filter(F.col("doc_id") < 400)
+
+    return {
+        "ngram_jaccard_pairs": lambda d: dedup.ngram_jaccard_pairs(d),
+        "ngram_containment_pairs": lambda d: dedup.ngram_containment_pairs(d),
+        "minhash_lsh_exact_pairs": lambda d: dedup.minhash_lsh_exact_pairs(d),
+        "minhash_cluster_members": lambda d: dedup.minhash_cluster_members(d, verify=True),
+        "containment_cluster_members": lambda d: dedup.containment_cluster_members(d),
+        "cross_corpus_neardup_pairs": lambda d: dedup.cross_corpus_neardup_pairs(*split(d)),
+        "cross_corpus_dup_members": lambda d: dedup.cross_corpus_dup_members(*split(d)),
+    }
+
+
+#: The verify regimes the dedup operators can run in, as the module
+#: constants each one sets: both estimate tiers off (this corpus is below
+#: the engage floor); the 64-hash tier forced on; and both tiers, with the
+#: shingle arrays past the broadcast cap (the second tier's regime).
+_TIER_ARMS = {
+    "off": {},
+    "est1": {"_ESTIMATE_TIER_MIN_DOCS": 0},
+    "est2": {"_ESTIMATE_TIER_MIN_DOCS": 0, "_VERIFY_BCAST_CAP": 0},
+}
+
+
+def _run_arm(spark, docs, arm, names):
+    """{operator: (jobs of the call and its collect, sorted rows)} with the
+    ``arm`` constants set."""
+    from graphchidb_scala_spark.functions import dedup
+
+    ops = _dedup_ops()
+    out = {}
+    with pytest.MonkeyPatch.context() as mp:
+        for k, v in _TIER_ARMS[arm].items():
+            mp.setattr(dedup, k, v)
+        for name in names:
+            n, rows = _jobs(spark, f"dedup-{arm}-{name}", lambda: ops[name](docs).collect())
+            out[name] = (n, sorted(tuple(r) for r in rows))
+    return out
+
+
+@pytest.fixture(scope="module")
+def dedup_arms(spark):
+    docs = _neardup_corpus(spark).cache()
+    docs.count()
+    names = list(_dedup_ops())
+    yield docs, {arm: _run_arm(spark, docs, arm, names) for arm in ("off", "est1")}
+    docs.unpersist()
+
+
+def test_dedup_verify_sizes_come_from_the_cut(dedup_arms):
+    """Every dedup verify reads the size of its shingle-array side (and the
+    document count its estimate tier engages on) from the row its own cut
+    observes, so no operator runs a count or size job of its own. Pinned
+    jobs per call (call plus collect) on a 600-doc corpus with planted
+    near-duplicates, with the estimate tiers off and with the 64-hash tier
+    forced on. A follow-up ``count``/``agg`` over a cut table shows as two
+    more jobs."""
+    _, arms = dedup_arms
+    got = {name: (arms["off"][name][0], arms["est1"][name][0]) for name in _dedup_ops()}
+    assert got == {
+        "ngram_jaccard_pairs": (10, 10),
+        "ngram_containment_pairs": (13, 13),
+        "minhash_lsh_exact_pairs": (10, 11),
+        "minhash_cluster_members": (44, 47),
+        "containment_cluster_members": (42, 42),
+        "cross_corpus_neardup_pairs": (14, 16),
+        "cross_corpus_dup_members": (30, 34),
+    }, got
+
+
+def test_dedup_tier_arms_agree(spark, dedup_arms):
+    """The estimate tiers only drop candidates the exact verify rejects: each
+    tiered operator returns the same rows with both tiers off, with the
+    64-hash tier forced on, and with both tiers on (the shingle arrays past
+    the broadcast cap, the second tier's regime), and finds the planted
+    near-duplicates."""
+    docs, arms = dedup_arms
+    names = [
+        "minhash_lsh_exact_pairs", "minhash_cluster_members",
+        "cross_corpus_neardup_pairs", "cross_corpus_dup_members",
+    ]
+    est2 = _run_arm(spark, docs, "est2", names)
+    for name in names:
+        off = arms["off"][name][1]
+        assert arms["est1"][name][1] == off, name
+        assert est2[name][1] == off, name
+    assert len(arms["off"]["minhash_lsh_exact_pairs"][1]) >= 50
+    assert len(arms["off"]["cross_corpus_dup_members"][1]) >= 50

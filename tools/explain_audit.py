@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from graphchidb_scala_spark.operators import graph_queries as gq, pregel
 from graphchidb_scala_spark.session import get_spark
 from graphchidb_scala_spark.sources.tpch import load_tables, tpch_graph
-from graphchidb_scala_spark.functions import dedup, pipeline, similarity, text
+from graphchidb_scala_spark.functions import pipeline, similarity, text
 
 
 def plan_of(df) -> str:
@@ -68,22 +68,12 @@ CHECKS = {
         ),
         ["TakeOrderedAndProject"],
     ),
-    "text_exact_dedup": (
-        lambda g, docs, emb: dedup.exact_duplicate_groups(docs),
-        ["partial_count"],
-    ),
     # equality keys must carry the self-joins — a CartesianProduct here would
     # mean the inequality predicates ended up as the only join condition
     "triangle_count": (
         lambda g, docs, emb: __import__(
             "graphchidb_scala_spark.operators.graph_queries", fromlist=["gq"]
         ).triangle_count(g),
-        ["!CartesianProduct"],
-    ),
-    "ngram_prefix_join": (
-        lambda g, docs, emb: dedup.ngram_jaccard_pairs(
-            docs, block_col="source", threshold=0.5
-        ),
         ["!CartesianProduct"],
     ),
     # hash split is membership-by-arithmetic: one projection, no shuffle —
@@ -204,15 +194,6 @@ CHECKS = {
         ),
         ["!CartesianProduct"],
     ),
-    # the band-join input must carry the NUMBERED repartition (exempt from
-    # AQE coalescing) — without it the bytes-small banded table coalesces
-    # to 1-2 partitions and the candidate expansion runs near-serially
-    "minhash_exact_verified_pairs": (
-        lambda g, docs, emb: dedup.minhash_lsh_exact_pairs(
-            docs, num_hashes=64, bands=32, k=5, threshold=0.5
-        ),
-        ["!CartesianProduct", "REPARTITION_BY_NUM"],
-    ),
     # exact-substring span dedup: set-oriented end to end (no cartesian,
     # no nested-loop), gram stats map-side combined before their exchange
     "repeated_substring_spans": (
@@ -275,24 +256,6 @@ CHECKS = {
         lambda g, docs, emb: _node2vec_hop(g),
         ["Join", "!BroadcastNestedLoop", "!CartesianProduct"],
     ),
-    # a drop set past the broadcast cap must NOT carry a forced broadcast
-    # hint; with a stats-large (24 MB estimate) set and no hint, the corpus
-    # anti-join falls back to a shuffle join — the only shape that survives a
-    # billions-of-ids drop set. (A genuinely small set auto-broadcasting is
-    # fine and is covered by the positive branch of the pytest.)
-    "near_dedup_large_dropset_not_broadcast": (
-        lambda g, docs, emb: docs.join(
-            dedup._broadcast_if_small_ids(
-                docs.sparkSession.range(3_000_000).select(
-                    F.col("id").alias("doc_id")
-                ),
-                cap_rows=1,
-            ),
-            "doc_id",
-            "left_anti",
-        ),
-        ["!BroadcastExchange"],
-    ),
     # SemDeDup: cell assignment is a projection; the within-cell self-join
     # and the survivor anti-join are both equi joins — never nested-loop,
     # however the cell sizes skew (AQE handles the hot cell)
@@ -316,20 +279,6 @@ CHECKS = {
         ),
         ["Join", "!BroadcastNestedLoop", "!CartesianProduct", "REPARTITION_BY_NUM"],
     ),
-    # r10 salted crossing repair seam: the (bkt, sa, sb) keys must compile
-    # to an equi hash join (inequalities as residual filters, never a
-    # nested loop) and BOTH numbered salted repartitions must survive —
-    # the pin is what opted the join out of AQE skew split, the salt is
-    # what makes that safe
-    "members_salted_crossing_equi_pinned": (
-        lambda g, docs, emb: dedup.salted_label_crossing_candidates(
-            docs.selectExpr(
-                "doc_id as id", "source as bkt", "doc_id % 7 as _lbl"
-            ),
-            32,
-        ),
-        ["Join", "!BroadcastNestedLoop", "!CartesianProduct", "REPARTITION_BY_NUM"],
-    ),
     # PII report: a pure map pass — no exchange anywhere, and column pruning
     # reaches the scan (only doc_id + text read)
     "pii_report_pure_projection": (
@@ -350,19 +299,6 @@ CHECKS = {
     "nb_quality_broadcast_model_partial_agg": (
         lambda g, docs, emb: pipeline.nb_quality_scores(docs, buckets=64),
         ["BroadcastHashJoin", "partial_"],
-    ),
-    # adaptive-salt degenerate arm (r11): G=1 must still be a plain
-    # bucket EQUI join with the numbered pin surviving — no nested-loop
-    # fallback, no lost REPARTITION_BY_NUM
-    "members_crossing_degenerate_g1_pinned": (
-        lambda g, docs, emb: dedup.salted_label_crossing_candidates(
-            docs.selectExpr(
-                "doc_id as id", "source as bkt", "doc_id % 7 as _lbl"
-            ),
-            32,
-            salts=1,
-        ),
-        ["Join", "!BroadcastNestedLoop", "!CartesianProduct", "REPARTITION_BY_NUM"],
     ),
     # HLL sketch: register build is a map-side-combined (group,bucket) agg —
     # the shuffle carries partial maxima, and no join appears anywhere
@@ -573,37 +509,6 @@ CHECKS = {
         ),
         ["REPARTITION_BY_NUM"],
     ),
-    # members-mode star edges: one equi-join of the bucket table against its
-    # per-bucket min — never a bucket self-join (the group² clique expansion
-    # members mode exists to avoid) — with the numbered repartition pin
-    "members_star_edges_equi_pinned": (
-        lambda g, docs, emb: dedup.band_bucket_star_edges(
-            docs.select(
-                F.col("doc_id").alias("id"),
-                (F.col("doc_id") % 97).cast("string").alias("bkt"),
-            ),
-            32,
-        ),
-        ["REPARTITION_BY_NUM", "!CartesianProduct", "!BroadcastNestedLoop"],
-    ),
-    # containment members (r9): the star seam must keep its round-robin
-    # numbered pin (the operator's own final plan hides it behind
-    # cut_lineage materialization, so the seam is audited directly — the
-    # same approach as members_star_edges_equi_pinned) and the bucket
-    # join must never degrade to a cartesian.
-    "containment_members_star_seam_pinned": (
-        lambda g, docs, emb: dedup.shingle_bucket_star_edges(
-            docs.select(
-                F.col("doc_id").alias("id"),
-                (F.col("doc_id") % 97).cast("string").alias("sh"),
-                F.lit(5).alias("n"),
-                F.lit(2).alias("_df"),
-            ),
-            ["sh"],
-            32,
-        ),
-        ["REPARTITION_BY_NUM", "!CartesianProduct", "!BroadcastNestedLoop"],
-    ),
     # bpe encode (r9): token counts must partial-aggregate below the
     # exchange (map-side combine over the vocab-bounded explode)
     "bpe_encode_partial_agg": (
@@ -625,13 +530,6 @@ CHECKS = {
             min_events=1,
         ),
         ["!SortMergeJoin", "!BroadcastHashJoin", "partial_max"],
-    ),
-    "crosscorpus_band_join_equi": (
-        lambda g, docs, emb: dedup.cross_corpus_neardup_pairs(
-            docs.filter(F.col("doc_id") % 2 == 0),
-            docs.filter(F.col("doc_id") % 2 == 1),
-        ),
-        ["!CartesianProduct", "!BroadcastNestedLoop"],
     ),
     # resample+ffill: grid explode, ONE left equi-join, one ordered window —
     # no cartesian, no nested loop anywhere
